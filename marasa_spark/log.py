@@ -6,16 +6,22 @@ the API shape follows SURVEY's reconstruction of pjz/marasa: ``put``/
 ``get``/``history``/namespaces/segments/snapshots):
 
 * every write is an **append** of change records to a Parquet log
-  partitioned by namespace (``log/ns=<ns>/``) — Spark's append mode writes
-  new files only, never rewrites (the Delta/Iceberg slot-in point per
-  BASELINE.json's north star; neither is installed here, so the layout is
-  plain Parquet + a seqno convention that Delta could replace);
+  partitioned by namespace and segment (``log/ns=<ns>/segment=<s>/``) —
+  Spark's append mode writes new files only, never rewrites;
+* the log is a table in the open **Delta Lake transaction-log protocol**
+  (delta-io PROTOCOL.md, reader 1 / writer 2 — BASELINE.json's north star,
+  written directly since ``delta-spark`` is not installable here), and
+  that journal is the store's ONLY commit record (layout below). Readers
+  resolve the live file set from the journal and never list the data
+  directory, so a file no commit adds — an in-flight or crashed writer's
+  output, a foreign file — is invisible by construction;
 * current state is a fold over the log: last record per (ns, key) by seqno
   — expressed as a window function, never a driver-side replay;
 * any historical state is a prefix fold: ``filter(seqno <= s)`` + the same
   window (time travel);
 * **compaction** (= marasa's segment snapshot) materializes the fold into
-  ``snapshot/upto=<S>/`` so reads become snapshot ∪ log-tail — replay cost
+  ``snapshot/upto=<S>/``, itself a Delta table that becomes visible only
+  through its commit, so reads become snapshot ∪ log-tail — replay cost
   is bounded by the tail length, not log length;
 * **deletes are tombstones** (NULL-value records, the Kafka-compaction
   convention): ``latest``/``lookup``/``get``/``asof`` treat
@@ -26,44 +32,59 @@ the API shape follows SURVEY's reconstruction of pjz/marasa: ``put``/
 Record schema (marasa stores JSON payloads keyed by string keys):
 ``ns string, key string, seqno long, ts timestamp, value string``.
 
+Journal layout (each table directory)::
+
+    <table>/_delta_log/00000000000000000000.json   # numbered commits
+    <table>/_delta_log/0000000000000000000N.checkpoint.parquet
+    <table>/_delta_log/_last_checkpoint            # {"version": N, ...}
+    <table>/_delta_log/.0000000000000000000N.json.claim   # writer's claim
+    <table>/ns=a/segment=0/part-*.parquet          # data files
+
+A commit is a newline-delimited JSON action list: the first carries
+``protocol`` and ``metaData``; a log commit carries one ``add`` per new
+data file plus the seqno high-water as a spec ``txn`` action (appId
+``marasa.seqno``, version = high-water), and an ``append_once`` commit
+also records its producer batch id as a ``txn``. Commits are put-if-absent
+(``os.link``: EEXIST means another writer won that version); every
+``CHECKPOINT_INTERVAL`` log commits a parquet checkpoint (live adds and
+txns) bounds the replay to checkpoint + tail.
+
 Scale posture (100 TB):
 * namespace partitioning → partition pruning on every ns-scoped read;
 * ``latest``/``asof`` are one shuffle on (ns, key) — linear scale-out; at
   real scale the snapshot write would bucket by key so the tail-merge
   window co-locates without a shuffle;
-* seqno assignment reads ``max(seqno)`` (a Parquet footer-stats scan, not
-  a data scan) and numbers only the incoming batch — via the f3 two-phase
-  range-partition + broadcast-offset shape, so even a bulk-load-sized
-  batch never funnels through a single-partition window. Like the
-  reference, the store assumes a **single writer** (SURVEY §7.4#2);
+* seqno assignment reads the high-water from the journal and numbers only
+  the incoming batch — via the f3 two-phase range-partition +
+  broadcast-offset shape, so even a bulk-load-sized batch never funnels
+  through a single-partition window. Writers that race from the same
+  journal version get :class:`LogWriteConflict` (:meth:`append_retrying`
+  serializes them);
 * no driver-side ``collect()`` anywhere in the data path.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import time
+import uuid
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from marasa_spark.session import ensure_session_configs
 
+
 class LogWriteConflict(RuntimeError):
-    """Two writers raced ``append()`` from the same high-water seqno.
+    """Two writers raced ``append()`` from the same journal version.
 
-    The store is single-writer (SURVEY §7.4#2): each append CASes a claim
-    on its base seqno before writing, so the loser gets THIS error instead
-    of silently writing colliding seqnos. A Delta/Iceberg backend replaces
-    the claim file with its native commit-conflict protocol — same
-    contract, same exception surface."""
-
-
-class ProducerBatchInFlight(RuntimeError):
-    """``append_once`` found the batch_id claimed but its high-water not
-    yet recorded: the owning producer is still appending, or crashed
-    between claim and record. Retry later, or clear with
-    :meth:`MarasaLog.recover_claims` once the owner is known dead."""
+    Each append claims the next commit version before it writes any data,
+    so the loser gets THIS error instead of silently writing colliding
+    seqnos — the Delta concurrent-modification surface. A claim left by a
+    writer that died is cleared with :meth:`MarasaLog.recover_claims`."""
 
 
 LOG_SCHEMA = "ns string, key string, seqno long, ts timestamp, value string"
@@ -73,6 +94,213 @@ LOG_SCHEMA = "ns string, key string, seqno long, ts timestamp, value string"
 # on it turns time travel into a bounded read.
 DISK_SCHEMA = LOG_SCHEMA + ", segment long"
 
+HIGH_WATER_APP = "marasa.seqno"  # txn appId whose version is the high-water
+BATCH_APP_PREFIX = "marasa.batch."  # txn appId prefix of append_once ids
+CHECKPOINT_INTERVAL = 10
+_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
+
+
+# -- Delta journal primitives -------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Journal:
+    """A table's committed state at ``version``: live adds by relative
+    path, the latest version per txn appId, and the metaData action."""
+
+    version: int
+    adds: dict[str, dict]
+    txns: dict[str, int]
+    meta: dict | None
+
+
+def _dlog(table: str) -> str:
+    return f"{table}/_delta_log"
+
+
+def _commit_name(version: int) -> str:
+    return f"{version:020d}.json"
+
+
+def _versions(table: str) -> list[int]:
+    d = _dlog(table)
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        int(name[:-5])
+        for name in os.listdir(d)
+        if name.endswith(".json") and name[:-5].isdigit()
+    )
+
+
+def _apply(j: _Journal | None, version: int, actions: list[dict]) -> _Journal:
+    """The state after replaying one commit's actions on top of ``j``."""
+    adds = dict(j.adds) if j else {}
+    txns = dict(j.txns) if j else {}
+    meta = j.meta if j else None
+    for a in actions:
+        if "add" in a:
+            adds[a["add"]["path"]] = a["add"]
+        elif "remove" in a:
+            adds.pop(a["remove"]["path"], None)
+        elif "txn" in a:
+            txns[a["txn"]["appId"]] = a["txn"]["version"]
+        elif "metaData" in a:
+            meta = a["metaData"]
+    return _Journal(version, adds, txns, meta)
+
+
+def _read_commit(table: str, version: int) -> list[dict]:
+    with open(f"{_dlog(table)}/{_commit_name(version)}") as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
+def _commit(table: str, version: int, actions: list[dict]) -> None:
+    """Write commit ``version`` put-if-absent: a fully written hidden tmp
+    file is hard-linked onto the final name, so a reader never parses a
+    torn commit, and EEXIST means another writer won the version."""
+    d = _dlog(table)
+    os.makedirs(d, exist_ok=True)
+    name = _commit_name(version)
+    tmp = f"{d}/.{name}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        f.write("".join(json.dumps(a, sort_keys=True) + "\n" for a in actions))
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, f"{d}/{name}")
+    except FileExistsError:
+        raise LogWriteConflict(
+            f"{table}: version {version} was committed by another writer"
+        ) from None
+    finally:
+        os.unlink(tmp)
+
+
+def _checkpoint_schema():
+    import pyarrow as pa
+
+    s = pa.string()
+    return pa.schema(
+        [
+            (
+                "protocol",
+                pa.struct([("minReaderVersion", pa.int32()), ("minWriterVersion", pa.int32())]),
+            ),
+            (
+                "metaData",
+                pa.struct([("id", s), ("schemaString", s), ("partitionColumns", pa.list_(s))]),
+            ),
+            (
+                "add",
+                pa.struct(
+                    [
+                        ("path", s),
+                        ("partitionValues", pa.map_(s, s)),
+                        ("size", pa.int64()),
+                        ("modificationTime", pa.int64()),
+                        ("dataChange", pa.bool_()),
+                    ]
+                ),
+            ),
+            ("txn", pa.struct([("appId", s), ("version", pa.int64())])),
+        ]
+    )
+
+
+def _write_checkpoint(table: str, j: _Journal) -> None:
+    """The spec's checkpoint parquet at ``j.version`` (one row per action:
+    protocol, metaData, live adds, txns) + ``_last_checkpoint``.
+    Metadata-scale, written driver-side with pyarrow as a Delta writer
+    does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    meta = {k: j.meta[k] for k in ("id", "schemaString", "partitionColumns")}
+    rows = [{"protocol": _PROTOCOL}, {"metaData": meta}]
+    rows += [
+        {"add": {**a, "partitionValues": list(a["partitionValues"].items())}}
+        for a in j.adds.values()
+    ]
+    rows += [{"txn": {"appId": app, "version": v}} for app, v in j.txns.items()]
+    d = _dlog(table)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=_checkpoint_schema()),
+        f"{d}/{j.version:020d}.checkpoint.parquet",
+    )
+    tmp = f"{d}/._last_checkpoint.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        json.dump({"version": j.version, "size": len(rows)}, f)
+    os.rename(tmp, f"{d}/_last_checkpoint")
+
+
+def _read_checkpoint(table: str) -> _Journal | None:
+    lc = f"{_dlog(table)}/_last_checkpoint"
+    if not os.path.exists(lc):
+        return None
+    import pyarrow.parquet as pq
+
+    with open(lc) as f:
+        version = json.load(f)["version"]
+    rows = pq.read_table(f"{_dlog(table)}/{version:020d}.checkpoint.parquet").to_pylist()
+    actions = [{k: v for k, v in r.items() if v is not None} for r in rows]
+    for a in actions:
+        if "add" in a:
+            a["add"]["partitionValues"] = dict(a["add"]["partitionValues"])
+    return _apply(None, version, actions)
+
+
+def _meta_actions(schema_json: str, partition_cols: list[str]) -> list[dict]:
+    return [
+        {"protocol": dict(_PROTOCOL)},
+        {
+            "metaData": {
+                "id": str(uuid.uuid4()),
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": schema_json,
+                "partitionColumns": partition_cols,
+                "configuration": {},
+            }
+        },
+    ]
+
+
+def _add_action(table: str, path: str) -> dict:
+    rel = os.path.relpath(path, table)
+    st = os.stat(path)
+    return {
+        "add": {
+            "path": rel,
+            "partitionValues": dict(
+                seg.split("=", 1) for seg in rel.split("/")[:-1] if "=" in seg
+            ),
+            "size": st.st_size,
+            "modificationTime": int(st.st_mtime * 1000),
+            "dataChange": True,
+        }
+    }
+
+
+def _list_parts(table: str) -> set[str]:
+    """Data files on disk under ``table`` (hidden ``_``/``.`` entries —
+    the journal, job temp dirs — excluded, as Spark excludes them)."""
+    parts: set[str] = set()
+    for root, dirs, files in os.walk(table):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        parts.update(os.path.join(root, f) for f in files if not f.startswith(("_", ".")))
+    return parts
+
+
+def _retry(attempt, max_attempts: int, backoff_s: float) -> int:
+    for i in range(max_attempts):
+        try:
+            return attempt()
+        except LogWriteConflict:
+            if i == max_attempts - 1:
+                raise
+            time.sleep(backoff_s * (i + 1))
+    raise AssertionError("unreachable")  # pragma: no cover
+
 
 class MarasaLog:
     def __init__(self, spark: SparkSession, path: str, segment_size: int = 100_000):
@@ -81,6 +309,13 @@ class MarasaLog:
         self.log_dir = f"{self.path}/log"
         self.snap_dir = f"{self.path}/snapshot"
         self.segment_size = segment_size
+        # table -> last journal state read; commits are immutable, so a
+        # cached state only ever needs the commits after it replayed
+        self._journals: dict[str, _Journal] = {}
+        # table -> (version, DataFrame over its live files): a version's
+        # file set never changes, and resolving it costs a py4j round trip
+        # per path plus Spark's per-path existence checks
+        self._frames: dict[str, tuple[int, DataFrame]] = {}
 
     # -- write path ---------------------------------------------------------
 
@@ -90,7 +325,8 @@ class MarasaLog:
         value) — the value tiebreaker makes same-(key, ts) batches
         order-deterministic too (identical full rows are interchangeable).
         Returns the new high-water seqno (base + batch size — no re-scan).
-        Single-writer, like the reference.
+        Raises :class:`LogWriteConflict` when another writer holds the
+        next journal version (see :meth:`append_retrying`).
 
         Seqno assignment is the f3_global_index two-phase shape, NOT a
         global ``row_number() OVER (ORDER BY ...)``: a bare global window
@@ -102,46 +338,48 @@ class MarasaLog:
         Every phase is parallel; the only global object is the N-row
         offset table. Produces the identical contiguous numbering.
         """
-        base = self.max_seqno()
-        self._claim_base(base)
+        return self._append(records)
+
+    def _append(self, records: DataFrame, batch_id: str | None = None) -> int:
+        """Claim the next version → number → data job → one commit of the
+        batch's adds + high-water (+ ``batch_id``) txn actions. The batch
+        becomes visible exactly when that commit file lands; a crash
+        anywhere before leaves invisible files and a dead claim, both
+        cleared by :meth:`recover_claims`."""
+        version, j = self._claim()
+        base = j.txns.get(HIGH_WATER_APP, 0) if j else 0
+        done = j.txns.get(BATCH_APP_PREFIX + batch_id) if j and batch_id is not None else None
+        if done is not None:
+            os.unlink(self._claim_path(version))
+            return done
         batch = self._number_batch(records, base).withColumn(
             "segment",
             (F.floor(F.col("seqno") / self.segment_size) * self.segment_size).cast("long"),
         )
-        from pyspark.sql import Observation
-
         # single-pass batch count: observed during the write job itself (a
         # separate count() would re-evaluate the input lineage)
         obs = Observation()
         batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
-        self._write_log_batch(batch)
-        n = int(obs.get["n"])
-        self._commit_base(base, n)
-        return base + n
+        actions = self._write_log_batch(batch, version)
+        hw = base + int(obs.get["n"])
+        self._commit_log(version, actions, hw, batch_id)
+        return hw
 
     def append_retrying(
         self, records: DataFrame, max_attempts: int = 10, backoff_s: float = 0.2
     ) -> int:
         """Optimistic-concurrency append: :meth:`append`, but a
-        :class:`LogWriteConflict` (another writer claimed our base seqno)
+        :class:`LogWriteConflict` (another writer holds the next version)
         is retried after a linear backoff instead of surfacing — the
-        Delta/Iceberg commit-loop protocol on top of the same claim CAS.
-        Each retry re-reads the high-water, so once the winning writer's
-        commit marker lands, the loser rebases onto the new tail and its
-        claim succeeds; concurrent writers therefore SERIALIZE rather than
-        fail. Bounded: after ``max_attempts`` losses (a writer that claimed
-        and died holds the base forever until :meth:`recover_claims`) the
-        last conflict is re-raised with its recovery hint intact. The
-        records lineage is re-evaluated per attempt — pass a deterministic
-        input, as with any retried write job."""
-        for attempt in range(max_attempts):
-            try:
-                return self.append(records)
-            except LogWriteConflict:
-                if attempt == max_attempts - 1:
-                    raise
-                time.sleep(backoff_s * (attempt + 1))
-        raise AssertionError("unreachable")  # pragma: no cover
+        Delta/Iceberg commit loop. Each retry re-reads the journal, so
+        once the winner's commit lands the loser rebases onto the new
+        high-water; concurrent writers therefore SERIALIZE rather than
+        fail. Bounded: a writer that claimed and died holds its version
+        until :meth:`recover_claims`, so after ``max_attempts`` losses the
+        last conflict is re-raised. The records lineage is re-evaluated
+        per attempt — pass a deterministic input, as with any retried
+        write job."""
+        return _retry(lambda: self.append(records), max_attempts, backoff_s)
 
     def _number_batch(self, records: DataFrame, base: int) -> DataFrame:
         """Stamp ``seqno = base + rank in (ns, key, ts, value) order`` onto
@@ -177,189 +415,148 @@ class MarasaLog:
             "value",
         )
 
-    # -- writer-conflict seam ------------------------------------------------
+    # -- commit protocol -----------------------------------------------------
 
-    @property
-    def _txn_dir(self) -> str:
-        return f"{self.path}/_txn"
+    def _claim_path(self, version: int) -> str:
+        return f"{_dlog(self.log_dir)}/.{_commit_name(version)}.claim"
 
-    def _claim_base(self, base: int) -> None:
-        """CAS the high-water: atomically create ``_txn/base=<base>``
-        (O_CREAT|O_EXCL — the filesystem's compare-and-set). Exactly one
-        writer can advance the log from a given base; the loser raises
-        :class:`LogWriteConflict` BEFORE any data file is written. Claim
-        files are one per committed batch (~bytes) and double as a commit
-        journal; a crashed writer's claim is cleared with
-        :meth:`recover_claims`."""
-        os.makedirs(self._txn_dir, exist_ok=True)
-        path = f"{self._txn_dir}/base={base}"
+    def _claim(self) -> tuple[int, _Journal | None]:
+        """Reserve the log's next commit version before any data is
+        written: create the hidden ``.<version>.json.claim`` with
+        O_CREAT|O_EXCL (the filesystem's compare-and-set), then re-read
+        the journal head. Returns the claimed version and the journal it
+        extends.
+
+        While a writer holds a claim no other writer can pass this check
+        (the same version is taken; a later one needs this writer's
+        commit first; an earlier one fails the head re-read, which also
+        catches a claim re-created after its commit landed). So at most
+        ONE writer is between claim and commit, which is what makes the
+        before/after listing in :meth:`_write_log_batch` exactly the
+        batch's own files."""
+        j = self._journal(self.log_dir)
+        version = 0 if j is None else j.version + 1
+        os.makedirs(_dlog(self.log_dir), exist_ok=True)
+        path = self._claim_path(version)
         try:
             fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         except FileExistsError:
             raise LogWriteConflict(
-                f"another writer already claimed base seqno {base} "
-                f"({path} exists); re-read the high-water and retry, or run "
-                "recover_claims() if that writer is known dead"
+                f"another writer holds log version {version} ({path}); re-read "
+                "the high-water and retry, or run recover_claims() if that "
+                "writer is known dead"
             ) from None
         os.write(fd, f"pid={os.getpid()}\n".encode())
         os.close(fd)
+        if (_versions(self.log_dir) or [-1])[-1] >= version:
+            os.unlink(path)
+            raise LogWriteConflict(f"log version {version} is already committed")
+        return version, j
 
-    def _commit_base(self, base: int, n: int) -> None:
-        """Write the commit marker for a landed batch. Readers trust ONLY
-        the marker journal (see :meth:`_committed_high_water`): data files
-        whose batch has no marker are invisible, which is what makes a
-        concurrent ``latest()`` during an in-flight append read-atomic —
-        it can list the writer's half-landed files but the seqno filter
-        excludes every row of them. The marker is written AFTER the data
-        job commits, so a crash leaves invisible orphans (cleaned by
-        :meth:`recover_claims`), never a half-visible batch."""
-        with open(f"{self._txn_dir}/commit_base={base}_n={n}", "w") as f:
-            f.write(f"pid={os.getpid()}\n")
+    def _commit_log(
+        self, version: int, actions: list[dict], hw: int, batch_id: str | None = None
+    ) -> None:
+        """Commit a claimed version: the batch's actions plus the seqno
+        high-water (and the producer batch id) as txn actions, atomically
+        in one commit file; then release the claim and checkpoint every
+        ``CHECKPOINT_INTERVAL`` versions."""
+        now = int(time.time() * 1000)
+        apps = [HIGH_WATER_APP] + ([] if batch_id is None else [BATCH_APP_PREFIX + batch_id])
+        actions = actions + [
+            {"txn": {"appId": app, "version": hw, "lastUpdated": now}} for app in apps
+        ]
+        _commit(self.log_dir, version, actions)
+        os.unlink(self._claim_path(version))
+        if version and version % CHECKPOINT_INTERVAL == 0:
+            _write_checkpoint(self.log_dir, self._journal(self.log_dir))
 
-    def _committed_high_water(self) -> int | None:
-        """Max committed seqno per the marker journal; None for a legacy
-        store that has data but predates markers (reads fall back to
-        trusting the data files, the pre-journal behavior)."""
-        if not os.path.isdir(self._txn_dir):
+    def _journal(self, table: str) -> _Journal | None:
+        """The table's committed state: the cached state plus the commits
+        after it, else latest checkpoint + tail replay. None when the
+        table has no commit."""
+        versions = _versions(table)
+        if not versions:
             return None
-        highs = []
-        for name in os.listdir(self._txn_dir):
-            if name.startswith("commit_base="):
-                b, n = name.removeprefix("commit_base=").split("_n=")
-                highs.append(int(b) + int(n))
-        return max(highs, default=None)
-
-    def _committed(self, log: DataFrame | None) -> DataFrame | None:
-        """Apply the committed-read filter (snapshot isolation against an
-        in-flight or crashed writer). A parquet row-group whose seqno
-        stats sit above the high-water is skipped at scan time."""
-        if log is None:
-            return None
-        hw = self._committed_high_water()
-        if hw is None:
-            return log
-        return log.filter(F.col("seqno") <= hw)
+        j = self._journals.get(table)
+        if j is None or j.version > versions[-1]:
+            j = _read_checkpoint(table)
+        for v in versions:
+            if j is None or v > j.version:
+                j = _apply(j, v, _read_commit(table, v))
+        self._journals[table] = j
+        return j
 
     def recover_claims(self) -> int:
-        """Clear claims that no committed data backs: a writer that claimed
-        ``base == max_seqno()`` and died before its write landed leaves a
-        claim that blocks every retry from that base. Single-operator
-        recovery step (never run while a writer is in flight); returns the
-        number of claims removed. Claims below the high-water belong to
-        committed batches and are kept as the commit journal. Content-less
-        producer tags (an ``append_once`` owner that died between claim
-        and record — see :class:`ProducerBatchInFlight`) are cleared too,
-        so the batch_id becomes resubmittable."""
-        if not os.path.isdir(self._txn_dir):
-            return 0
-        high = self.max_seqno()
-        removed = 0
-        for name in os.listdir(self._txn_dir):
-            full = f"{self._txn_dir}/{name}"
-            if name.startswith("producer_batch="):
-                # stale temp from a crash between tmp-write and rename
-                if ".tmp." in name:
-                    os.unlink(full)
-                    removed += 1
-                    continue
-                with open(full) as f:
-                    if not f.read().startswith("hw="):
-                        os.unlink(full)
-                        removed += 1
+        """Operator recovery after a writer died (never run while a writer
+        is in flight): release dead claims, drop torn commit temp files,
+        and sweep every data file no commit tracks — the set difference
+        of the directory against the journal's live adds, so committed
+        data is never touched (a pinned reader cannot tear: no byte of
+        it moves). Snapshot directories without a commit (a compact that
+        died mid-write) are removed whole. Returns the number of claims
+        released."""
+        released = 0
+        d = _dlog(self.log_dir)
+        for name in os.listdir(d) if os.path.isdir(d) else []:
+            if name.endswith((".claim", ".tmp")):
+                os.unlink(f"{d}/{name}")
+                released += name.endswith(".claim")
+        j = self._journal(self.log_dir)
+        live = {f"{self.log_dir}/{rel}" for rel in (j.adds if j else ())}
+        for p in _list_parts(self.log_dir) - live:
+            os.unlink(p)
+        for name in os.listdir(self.snap_dir) if os.path.isdir(self.snap_dir) else []:
+            if not name.startswith("upto="):
                 continue
-            if not name.startswith("base="):
+            table = f"{self.snap_dir}/{name}"
+            j = self._journal(table)
+            if j is None:
+                shutil.rmtree(table)
                 continue
-            if int(name.split("=", 1)[1]) >= high:
-                os.unlink(full)
-                removed += 1
-        self._vacuum_uncommitted(high)
-        return removed
-
-    def _vacuum_uncommitted(self, hw: int) -> int:
-        """Physically remove data rows above the committed high-water — the
-        orphans a writer that crashed between its data job and its commit
-        marker leaves behind. They are already INVISIBLE (the committed
-        filter), but they must not stay on disk: the next append re-issues
-        the same seqnos from the committed base, and once its marker lands
-        the orphans would surface as duplicates.
-
-        Reader-safety guarantee (the read half of the ACID contract —
-        property-tested in tests/test_log_properties.py): every data file
-        is written by exactly ONE batch (:meth:`_write_log_batch` appends
-        new files only), so a file holding any orphan row holds ONLY
-        orphan rows — vacuum therefore just UNLINKS whole orphan files
-        and never rewrites a file containing committed data. A concurrent
-        reader pinned at S ≤ hw either never lists those files, or — if
-        one vanishes between its plan's file listing and execution —
-        fails cleanly with a missing-file error; it can never observe a
-        half-vacuumed hybrid, because no byte of committed data moves.
-        (The old implementation rewrote whole (ns, segment) partitions
-        through an rmtree→rename window, during which a racing committed
-        reader could silently lose that partition's rows.)
-
-        A mixed file (committed + orphan rows in one file) is impossible
-        under this writer; if one is ever found — foreign data laid out
-        by another tool — vacuum refuses and raises rather than guessing.
-        Bounded work: one metadata-scale aggregate (one row per file that
-        contains orphans). Returns the number of rows removed."""
-        n_removed = 0
-        for path, n in self._orphan_file_stats(hw):
-            try:
-                os.unlink(path)
-                n_removed += n
-            except FileNotFoundError:
-                pass  # another recovery already removed it
-        return n_removed
-
-    def _orphan_file_stats(self, hw: int) -> list[tuple[str, int]]:
-        """(local path, row count) per whole-orphan data file above the
-        committed high-water — the unit vacuum may unlink. Raises on a
-        mixed file (committed + orphan rows in one file: impossible under
-        this writer, so foreign data — refuse rather than rewrite
-        committed bytes). Shared by the base vacuum and backends that
-        must journal a remove action before unlinking (the Delta
-        backend's protocol requirement)."""
-        raw = self._read_dir(self.log_dir)
-        if raw is None:
-            return []
-        stats = (
-            raw.withColumn("_f", F.input_file_name())
-            .groupBy("_f")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("seqno") > hw).cast("long")).alias("n_orphan"),
-            )
-            .filter(F.col("n_orphan") > 0)
-            .collect()
-        )  # metadata-scale: one row per file containing orphans
-        mixed = [r for r in stats if r["n_orphan"] < r["n"]]
-        if mixed:
-            raise RuntimeError(
-                "vacuum found file(s) mixing committed and uncommitted rows "
-                f"(foreign layout?): {[r['_f'] for r in mixed][:3]} — refusing "
-                "to rewrite committed data; clean up manually"
-            )
-        from urllib.parse import unquote, urlparse
-
-        return [(unquote(urlparse(r["_f"]).path), int(r["n"])) for r in stats]
+            for p in _list_parts(table) - {f"{table}/{rel}" for rel in j.adds}:
+                os.unlink(p)
+        return released
 
     # -- storage seam --------------------------------------------------------
-    # Every physical read/write goes through these three methods and nothing
-    # else. A Delta/Iceberg backend (BASELINE.json's north star — neither is
-    # installed in this sandbox) is a subclass overriding exactly these:
-    # _write_log_batch -> df.write.format("delta").mode("append"),
-    # _write_snapshot  -> a MERGE/OVERWRITE transaction,
-    # _read_dir        -> spark.read.format("delta") (+ time travel replaces
-    # the seqno prefix filter). The fold/seqno/namespace logic above the seam
-    # is storage-agnostic by construction.
+    # Every physical data read/write goes through these three methods and
+    # nothing else; the fold/seqno/namespace logic above them never sees a
+    # file path.
 
-    def _write_log_batch(self, batch: DataFrame) -> None:
-        """Physical append of one seqno-stamped batch: new files only."""
+    def _write_log_batch(self, batch: DataFrame, version: int) -> list[dict]:
+        """Physical append of one seqno-stamped batch (new files only).
+        Returns the actions that make it visible — ``metaData`` on the
+        table's first version, then one ``add`` per file the job created,
+        found by a before/after listing that the caller's claim on
+        ``version`` keeps free of any other writer's files."""
+        before = _list_parts(self.log_dir)
         batch.write.mode("append").partitionBy("ns", "segment").parquet(self.log_dir)
+        new = sorted(_list_parts(self.log_dir) - before)
+        meta = _meta_actions(batch.schema.json(), ["ns", "segment"]) if version == 0 else []
+        return meta + [_add_action(self.log_dir, p) for p in new]
 
     def _write_snapshot(self, state: DataFrame, upto: int) -> None:
-        """Physical snapshot materialization at high-water ``upto``."""
-        state.write.mode("overwrite").parquet(f"{self.snap_dir}/upto={upto}")
+        """Materialize the snapshot table at high-water ``upto``: the data
+        job, then its version-0 commit — the only thing that makes it
+        visible (overwrite mode clears an uncommitted leftover)."""
+        table = f"{self.snap_dir}/upto={upto}"
+        state.write.mode("overwrite").parquet(table)
+        actions = _meta_actions(state.schema.json(), [])
+        _commit(table, 0, actions + [_add_action(table, p) for p in sorted(_list_parts(table))])
+
+    def _read_table(self, table: str) -> DataFrame | None:
+        """The table's live files as resolved by its journal, built once
+        per journal version; None for no commit or no live file (an empty
+        store). A missing live file or an unreadable one RAISES — a
+        corrupt log must never be indistinguishable from an empty one."""
+        j = self._journal(table)
+        if j is None or not j.adds:
+            return None
+        hit = self._frames.get(table)
+        if hit is None or hit[0] != j.version:
+            files = [f"{table}/{rel}" for rel in sorted(j.adds)]
+            df = self.spark.read.option("basePath", table).schema(DISK_SCHEMA).parquet(*files)
+            hit = self._frames[table] = (j.version, df)
+        return hit[1]
 
     def append_once(self, records: DataFrame, batch_id: str) -> int:
         """Idempotent producer append: a batch tagged with a producer-chosen
@@ -367,70 +564,35 @@ class MarasaLog:
         any at-least-once upstream) returns the recorded high-water instead
         of duplicating rows.
 
-        Concurrency/crash protocol (both halves atomic, so no torn state
-        is ever observable):
-
-        1. the tag is CLAIMED with O_CREAT|O_EXCL (same CAS as
-           :meth:`_claim_base`) BEFORE the append — two producers racing
-           the SAME batch_id can never both append; exactly one wins the
-           claim and the other reads the outcome;
-        2. after the batch commits, the recorded high-water is written to
-           a temp file and ``os.rename``\\ d onto the tag — a resubmit
-           either sees the full ``hw=N`` content or the empty claim,
-           never a truncated file.
-
-        A resubmit that finds an EMPTY claim (the owner is still in
-        flight, or crashed between claim and content-rename) raises
-        :class:`ProducerBatchInFlight` instead of guessing — the caller
-        retries later, or an operator who knows the owner is dead runs
-        :meth:`recover_claims` (which clears content-less tags; check the
-        commit journal for whether the dead attempt's batch landed before
-        resubmitting — the same check Kafka's transactional producer does
-        via its txn log, and the Delta slot-in does via txn appIds).
-        Concurrent DISTINCT batch ids serialize via append_retrying."""
-        if "/" in batch_id or batch_id.startswith("."):
-            raise ValueError(f"invalid batch_id: {batch_id!r}")
-        os.makedirs(self._txn_dir, exist_ok=True)
-        tag = f"{self._txn_dir}/producer_batch={batch_id}"
-        try:
-            fd = os.open(tag, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-        except FileExistsError:
-            with open(tag) as f:
-                content = f.read()
-            if content.startswith("hw="):
-                return int(content.split("=", 1)[1])
-            raise ProducerBatchInFlight(
-                f"batch_id {batch_id!r} is claimed but unrecorded: its "
-                "producer is in flight or crashed; retry later or run "
-                "recover_claims() if it is known dead"
-            ) from None
-        hw = self.append_retrying(records)
-        tmp = f"{tag}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(f"hw={hw}")
-        os.rename(tmp, tag)
-        return hw
+        The id is recorded as a txn action (appId ``marasa.batch.<id>``,
+        version = the batch's high-water) IN THE SAME COMMIT as the
+        batch's adds, so the batch and its dedup record land atomically —
+        the Delta idempotent-writer protocol, with no separate tag to
+        tear. Each attempt checks the journal it claimed against: two
+        producers racing the SAME id serialize on the version claim, and
+        the loser's retry finds the winner's txn and returns its
+        high-water. A producer that died holding its claim surfaces as
+        :class:`LogWriteConflict` after the retries, until
+        :meth:`recover_claims`; nothing it wrote is visible, so resubmitting
+        afterwards is safe."""
+        return _retry(lambda: self._append(records, batch_id), 10, 0.2)
 
     def clone_to(self, dest_path: str) -> "MarasaLog":
         """Consistent backup: copy the COMMITTED change history into a new
-        store at ``dest_path``, seqnos preserved verbatim, covered by one
-        commit marker at the source's committed high-water. Because the
-        copy reads through :meth:`changes` (the committed filter), an
-        in-flight or crashed writer's half-landed rows are invisible to
-        the backup by construction — a backup taken mid-append is exactly
-        the last committed state, never a torn one. The high-water is
-        captured ONCE, before the copy job runs, and both the row filter
-        (``changes(0, until=hw)``) and the destination commit marker use
-        that same value — so a concurrent ``append_retrying`` that commits
-        mid-copy can neither leak rows into the backup nor leave the
-        marker covering seqnos that were never copied. Snapshots are not
-        copied (they are derived data; the restored store re-compacts on
-        its own schedule). One distributed read + one partitioned write;
-        no driver-side data path."""
-        hw = self._committed_high_water()
-        if hw is None:
-            hw = self.max_seqno()
+        store at ``dest_path``, seqnos preserved verbatim, as ONE commit
+        carrying the source's high-water. Because the copy reads through
+        the journal, an in-flight or crashed writer's files are invisible
+        to the backup by construction — a backup taken mid-append is
+        exactly the last committed state, never a torn one. The
+        high-water is captured ONCE, before the copy job runs, and both
+        the row filter (``changes(0, until=hw)``) and the destination
+        commit use it — so a concurrent ``append_retrying`` that commits
+        mid-copy can neither leak rows into the backup nor leave its
+        high-water covering seqnos that were never copied. Snapshots are
+        not copied (they are derived data; the restored store re-compacts
+        on its own schedule). One distributed read + one partitioned
+        write; no driver-side data path."""
+        hw = self.max_seqno()
         rows = self.changes(0, until=hw)
         dest = MarasaLog(self.spark, dest_path, segment_size=self.segment_size)
         batch = rows.withColumn(
@@ -439,9 +601,8 @@ class MarasaLog:
                 "long"
             ),
         )
-        dest._write_log_batch(batch)
-        os.makedirs(dest._txn_dir, exist_ok=True)
-        dest._commit_base(0, hw)
+        version, _ = dest._claim()
+        dest._commit_log(version, dest._write_log_batch(batch, version), hw)
         return dest
 
     def put(self, ns: str, **changes: str) -> int:
@@ -478,53 +639,39 @@ class MarasaLog:
 
     # -- metadata -----------------------------------------------------------
 
-    def _read_dir(self, d: str, schema: str = DISK_SCHEMA) -> DataFrame | None:
-        """None only when the directory doesn't exist (an empty store).
-        A directory that exists but can't be read RAISES — a corrupt log
-        must never be indistinguishable from an empty one."""
-        if not os.path.isdir(d):
-            return None
-        return self.spark.read.schema(schema).parquet(d)
-
     def max_seqno(self) -> int:
-        whole = self._full_log()
-        if whole is None:
-            return 0
-        row = whole.agg(F.max("seqno").alias("m")).first()
-        return int(row["m"] or 0)
+        """The committed seqno high-water: the ``marasa.seqno`` txn of the
+        journal head — a journal read, never a data scan."""
+        j = self._journal(self.log_dir)
+        return j.txns.get(HIGH_WATER_APP, 0) if j else 0
 
     def _full_log(self) -> DataFrame | None:
         """The complete retained history. Compaction adds a snapshot but —
         like marasa's segments — does not delete log files, so history and
         time travel stay exact."""
-        log = self._committed(self._read_dir(self.log_dir))
-        return log if log is not None else self._union_snapshot_tail()
+        return self._read_table(self.log_dir)
 
     def _latest_snapshot_seq(self) -> int:
+        """High-water of the newest COMMITTED snapshot. Selection is by
+        commit, not by directory name: an ``upto=S`` directory a crashed
+        compact left half-written has no commit and never hides rows."""
         if not os.path.isdir(self.snap_dir):
             return 0
         seqs = [
             int(name.split("=", 1)[1])
             for name in os.listdir(self.snap_dir)
             if name.startswith("upto=")
+            and os.path.exists(f"{_dlog(f'{self.snap_dir}/{name}')}/{_commit_name(0)}")
         ]
         return max(seqs, default=0)
 
     def _union_snapshot_tail(self) -> DataFrame | None:
-        """snapshot(≤S) ∪ log-tail(>S) — the bounded-replay read set.
-
-        Crash-hardening: ``_latest_snapshot_seq`` selects by directory NAME,
-        so an ``upto=S`` dir a writer left half-materialized (exists but
-        ``_read_dir`` sees no committed content — e.g. unmanifested in the
-        manifest backend) must NOT silently hide rows ≤ S. When the selected
-        snapshot reads as None the fold falls back to replaying the full
-        log — correct (the log retains everything), just unaccelerated
-        until the next compact() succeeds."""
+        """snapshot(≤S) ∪ log-tail(>S) — the bounded-replay read set. A
+        committed snapshot with no live file (every key tombstoned at S)
+        falls back to replaying the full log."""
         s = self._latest_snapshot_seq()
-        tail = self._committed(self._read_dir(self.log_dir))
-        if s == 0:
-            return tail
-        snap = self._read_dir(f"{self.snap_dir}/upto={s}")
+        tail = self._full_log()
+        snap = self._read_table(f"{self.snap_dir}/upto={s}") if s else None
         if snap is None:
             return tail
         if tail is not None:
@@ -646,9 +793,9 @@ class MarasaLog:
     def compact(self) -> int:
         """Materialize the current fold as a snapshot (marasa's segment
         checkpoint). Reads after this touch snapshot ∪ tail(>S) only.
-        Returns the snapshot's high-water seqno."""
+        Returns the snapshot's high-water seqno; a committed snapshot at
+        the current high-water already is that fold, so it is kept."""
         s = self.max_seqno()
-        if s == 0:
-            return 0
-        self._write_snapshot(self.latest(), s)
+        if s and s != self._latest_snapshot_seq():
+            self._write_snapshot(self.latest(), s)
         return s

@@ -493,8 +493,8 @@ WHERE rn = 1
 @register("z3_log_backup_restore", oracle=Z3_ORACLE, group="J")
 def z3_log_backup_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backup/restore round-trip: write a store, ``clone_to`` a second
-    location (committed rows only, seqnos verbatim, one covering commit
-    marker), then serve ``latest()`` FROM THE RESTORE — hash-checked
+    location (committed rows only, seqnos verbatim, one journal commit
+    carrying the high-water), then serve ``latest()`` FROM THE RESTORE — hash-checked
     against the same oracle as the source (a4), so the backup is proven
     reader-indistinguishable, not just file-copied. The torn-backup case
     (clone taken while a writer's uncommitted batch is on disk) is pinned
@@ -529,12 +529,13 @@ def i15_log_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-namespace rollup (count + high-water seqno) is hash-checked
     against SQL that replays the append arithmetic — proving the stream
     sees every committed change exactly once AND the seqno numbering the
-    writers produced. The committed filter is applied in the stream (the
-    same seqno <= high-water predicate batch readers use), so an
-    in-flight writer's unmarked files would be invisible here too. At
-    scale this is the standing consumer: new log files become
-    micro-batches, checkpointed like i14, namespace directories prune at
-    the listing."""
+    writers produced. The stream lists the log directory rather than
+    resolving files from the journal, so it applies the journal's
+    committed high-water (``max_seqno``) as a seqno predicate: an
+    in-flight writer's uncommitted files sit above it and stay invisible
+    here too. At scale this is the standing consumer: new log files
+    become micro-batches, checkpointed like i14, namespace directories
+    prune at the listing."""
     from marasa_spark.log import DISK_SCHEMA
     from marasa_spark.streaming.runtime import run_to_memory
 
@@ -545,7 +546,7 @@ def i15_log_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store.append(log_df.filter(F.col("ns") == "click"))
     store.append(log_df.filter(F.col("ns") == "purchase"))
-    hw = store._committed_high_water()
+    hw = store.max_seqno()
 
     stream = (
         spark.readStream.schema(DISK_SCHEMA)
@@ -622,7 +623,7 @@ def j12_log_forget_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     forget instead of silently diverging), and compaction physically
     drops the keys from the snapshot. The forget list is collected —
     driver-side by design, forget lists are human-scale — and the delete
-    batch rides the normal seqno CAS like any writer."""
+    batch rides the normal version claim like any writer."""
     store = MarasaLog(spark, fresh_scratch("j12_forget", sf_dir))
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 500)
     store.append(_events_as_log(spark, sf_dir, events=ev))
@@ -640,7 +641,7 @@ def j12_log_forget_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# j13 — the manifest (Delta-style) backend as a driver-checked row
+# j13 — journal-resolved reads as a driver-checked row
 # ---------------------------------------------------------------------------
 
 J13_ORACLE = """
@@ -656,29 +657,20 @@ WHERE rn = 1
 
 @register("j13_log_manifest_backend", oracle=J13_ORACLE, group="J")
 def j13_log_manifest_backend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The storage-seam claim as a hash-checked contract row: build the
-    SAME events→log→compact→latest pipeline as j5, but on
-    ManifestMarasaLog — the Delta-style backend whose readers list data
-    files from an append-only transaction manifest instead of the
-    directory (log_backends.py; property-tested beside the parquet and
-    JSON backends in tests/test_log_properties.py). The fold must
-    hash-match the identical plain-SQL oracle, proving every semantics
-    layer (seqno assignment, committed filter, snapshot ∪ tail reads,
-    compaction) is byte-equivalent across physical backends — the slot-in
-    evidence for a real transactional table format, driver-visible rather
-    than test-only. An unmanifested rogue file is planted in the log
-    directory before the read: directory-listing readers would fold it
-    in; the manifest reader must not see it."""
-    from marasa_spark.log_backends import ManifestMarasaLog
-
-    store = ManifestMarasaLog(spark, fresh_scratch("j13_log", sf_dir))
-    store.append(_events_as_log(spark, sf_dir))
-    store.compact()
-    # listing-isolation probe: a foreign parquet file inside the log dir,
-    # never manifested — committed-range seqno, so only the manifest (not
-    # the seqno filter) can hide it
+    """Listing isolation as a hash-checked contract row: the SAME
+    events→log→compact→latest pipeline as j5, then a foreign parquet file
+    is planted in the log directory before the read. Its seqno sits
+    inside the committed range, so no seqno filter could hide it; only
+    the store's Delta journal can — readers resolve data files from the
+    journal's add actions, never from a directory listing (a listing
+    reader would fold the rogue row in and break the hash). The id keeps
+    its historical name: the manifest backend it once ran on is now the
+    store's own journal."""
     import datetime
 
+    store = MarasaLog(spark, fresh_scratch("j13_log", sf_dir))
+    store.append(_events_as_log(spark, sf_dir))
+    store.compact()
     rogue = spark.createDataFrame(
         [("click", "7", 1, datetime.datetime(2030, 1, 1), "ROGUE", 0)],
         "ns string, key string, seqno long, ts timestamp, value string, segment long",
@@ -688,7 +680,7 @@ def j13_log_manifest_backend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# j14 — the open-Delta-protocol backend as a driver-checked row
+# j14 — a read across a journal checkpoint as a driver-checked row
 # ---------------------------------------------------------------------------
 
 J14_ORACLE = J13_ORACLE
@@ -696,26 +688,31 @@ J14_ORACLE = J13_ORACLE
 
 @register("j14_log_delta_backend", oracle=J14_ORACLE, group="J")
 def j14_log_delta_backend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """j13's contract row on DeltaMarasaLog — the backend that writes the
-    REAL open Delta transaction-log protocol (_delta_log/ numbered JSON
-    commits with protocol/metaData/add/remove actions, parquet checkpoint
-    + _last_checkpoint, put-if-absent commit files; log_backends.py). The
-    same events→log→compact→latest pipeline must hash-match the identical
-    plain-SQL oracle, and the same rogue-file probe as j13 proves readers
-    resolve data files from the transaction log, never the directory
-    listing. segment_size is set low so the run crosses a checkpoint
-    boundary and the read path exercises checkpoint + tail replay, not
-    just raw commit replay."""
-    from marasa_spark.log_backends import DeltaMarasaLog
+    """The journal's checkpoint path as a hash-checked row: events are
+    ingested as CHECKPOINT_INTERVAL + 2 appends over consecutive ts
+    ranges, so the log commits cross a parquet checkpoint; a fresh
+    reader then resolves every log file from checkpoint + tail replay,
+    not raw commit replay, and folds ``latest()`` over them (no
+    snapshot, so a lost add breaks the hash). ts-range batches keep the
+    fold identical to j13's oracle: a key's last batch holds its latest
+    ts, and equal ts never straddle a batch edge."""
+    import os
 
-    store = DeltaMarasaLog(spark, fresh_scratch("j14_log", sf_dir))
-    store.append(_events_as_log(spark, sf_dir))
-    store.compact()
-    import datetime
+    from marasa_spark.log import CHECKPOINT_INTERVAL
 
-    rogue = spark.createDataFrame(
-        [("click", "7", 1, datetime.datetime(2030, 1, 1), "ROGUE", 0)],
-        "ns string, key string, seqno long, ts timestamp, value string, segment long",
-    )
-    rogue.write.mode("append").partitionBy("ns", "segment").parquet(store.log_dir)
-    return store.latest().select("ns", "key", "value")
+    store = MarasaLog(spark, fresh_scratch("j14_log", sf_dir))
+    log_df = _events_as_log(spark, sf_dir)
+    t = F.col("ts").cast("double")
+    lo, hi = log_df.agg(F.min(t), F.max(t)).first()
+    n = CHECKPOINT_INTERVAL + 2
+    edges = [lo + (hi - lo) * i / n for i in range(1, n)]
+    for i in range(n):
+        sel = F.lit(True)
+        if i:
+            sel = sel & (t >= edges[i - 1])
+        if i < n - 1:
+            sel = sel & (t < edges[i])
+        store.append(log_df.filter(sel))
+    if not os.path.exists(f"{store.log_dir}/_delta_log/_last_checkpoint"):
+        raise AssertionError("j14 never crossed a journal checkpoint")
+    return MarasaLog(spark, store.path).latest().select("ns", "key", "value")

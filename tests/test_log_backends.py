@@ -1,10 +1,13 @@
-"""The storage seam is real: JsonMarasaLog overrides ONLY the three
-physical methods and the full behavioral surface still holds — the
-offline rehearsal of the Delta/Iceberg slot-in (log_backends.py)."""
+"""The store's Delta-protocol journal: the on-disk layout is the open
+protocol, readers resolve files from it (never the directory), and every
+crash window — a claim, data without a commit, a half-written snapshot —
+leaves the store readable at exactly its committed state."""
 
 from __future__ import annotations
 
 import datetime
+import json
+import os
 
 import pytest
 
@@ -13,8 +16,7 @@ import pytest
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
-from marasa_spark.log import LogWriteConflict
-from marasa_spark.log_backends import JsonMarasaLog
+from marasa_spark.log import DISK_SCHEMA, LogWriteConflict, MarasaLog
 
 
 def _ts(i: int) -> datetime.datetime:
@@ -28,10 +30,19 @@ def _batch(spark, rows, t0):
     )
 
 
-def test_json_backend_full_surface(spark, tmp_path):
-    store = JsonMarasaLog(spark, str(tmp_path / "jstore"), segment_size=3)
+def _commits(table):
+    """(name, actions) per numbered commit, parsed without the store's code."""
+    dlog = f"{table}/_delta_log"
+    names = sorted(n for n in os.listdir(dlog) if n.endswith(".json") and n[0].isdigit())
+    return [
+        (n, [json.loads(line) for line in open(f"{dlog}/{n}") if line.strip()])
+        for n in names
+    ]
 
-    # append + numbering semantics are inherited
+
+def test_store_full_surface(spark, tmp_path):
+    store = MarasaLog(spark, str(tmp_path / "store"), segment_size=3)
+
     assert store.append(_batch(spark, [("a", "k1", "v1"), ("a", "k2", "v2")], 0)) == 2
     assert store.append(_batch(spark, [("a", "k1", "v3"), ("b", "k9", "v4")], 10)) == 4
 
@@ -49,28 +60,30 @@ def test_json_backend_full_surface(spark, tmp_path):
     assert store.append(_batch(spark, [("a", "k2", "v5")], 20)) == 5
     latest2 = {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()}
     assert latest2[("a", "k2")] == "v5" and latest2[("a", "k1")] == "v3"
+    # a re-compact at the same high-water keeps the committed snapshot
+    assert store.compact() == 5
+    assert store.compact() == 5
+    assert sorted(os.listdir(store.snap_dir)) == ["upto=4", "upto=5"]
+    assert {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()} == latest2
 
-    # crash recovery: claim + data without marker stays invisible, vacuums
-    base = store.max_seqno()
-    store._claim_base(base)
+    # crash recovery: claim + data without a commit stays invisible
+    version, _ = store._claim()
     orphan = store._number_batch(
-        _batch(spark, [("a", "k1", "TORN")], 30), base
+        _batch(spark, [("a", "k1", "TORN")], 30), store.max_seqno()
     ).withColumn("segment", F.lit(0).cast("long"))
-    store._write_log_batch(orphan)
+    store._write_log_batch(orphan, version)
     assert store.get("a", "k1") == "v3", "uncommitted row leaked"
     with pytest.raises(LogWriteConflict):
         store.append(_batch(spark, [("a", "k1", "x")], 40))
-    store.recover_claims()
+    assert store.recover_claims() == 1
     assert store.max_seqno() == 5
 
-    # idempotent producer + consistent backup are inherited too
+    # idempotent producer + consistent backup
     assert store.append_once(_batch(spark, [("c", "kz", "z1")], 50), "b-1") == 6
     assert store.append_once(_batch(spark, [("c", "kz", "z1")], 50), "b-1") == 6
-    # clone_to constructs a base-class (parquet) destination — the backup
-    # lands in the DESTINATION's format, which is itself a seam property:
-    # cross-backend migration is just clone_to.
-    dest = store.clone_to(str(tmp_path / "jclone"))
+    dest = store.clone_to(str(tmp_path / "clone"))
     assert dest.max_seqno() == 6
+    assert len(_commits(dest.log_dir)) == 1, "clone_to writes one commit"
     assert {
         (r["ns"], r["key"]): r["value"] for r in dest.latest().collect()
     } == {
@@ -81,40 +94,16 @@ def test_json_backend_full_surface(spark, tmp_path):
     }
 
 
-def test_manifest_backend_full_surface(spark, tmp_path):
-    from marasa_spark.log_backends import ManifestMarasaLog
-
-    store = ManifestMarasaLog(spark, str(tmp_path / "mstore"), segment_size=3)
-
-    assert store.append(_batch(spark, [("a", "k1", "v1"), ("a", "k2", "v2")], 0)) == 2
-    assert store.append(_batch(spark, [("a", "k1", "v3"), ("b", "k9", "v4")], 10)) == 4
-    latest = {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()}
-    assert latest == {("a", "k1"): "v3", ("a", "k2"): "v2", ("b", "k9"): "v4"}
-    asof2 = {(r["ns"], r["key"]): r["value"] for r in store.asof(2).collect()}
-    assert asof2 == {("a", "k1"): "v1", ("a", "k2"): "v2"}
-    assert [r["value"] for r in store.history("a", "k1").collect()] == ["v1", "v3"]
-    assert store.compact() == 4
-    assert store.append(_batch(spark, [("a", "k2", "v5")], 20)) == 5
-    latest2 = {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()}
-    assert latest2[("a", "k2")] == "v5" and latest2[("a", "k1")] == "v3"
-
-
-def test_manifest_backend_listing_isolation(spark, tmp_path):
-    """The property the manifest ADDS beyond the base class: readers list
-    files from the transaction journal, never the directory. A parquet
-    file that lands in the log directory without a manifest entry (a
-    foreign job, or a writer that crashed between its data job and its
-    manifest append) is invisible — even when its seqnos sit INSIDE the
-    committed range, where the base class's seqno filter would happily
-    admit it. This is Delta's add-action semantics, tested directly."""
-    import datetime
-
-    from marasa_spark.log_backends import ManifestMarasaLog
-
-    store = ManifestMarasaLog(spark, str(tmp_path / "iso_store"))
+def test_listing_isolation(spark, tmp_path):
+    """Readers list files from the journal, never the directory. A parquet
+    file that lands in the log directory without an add action (a foreign
+    job, or a writer that crashed between its data job and its commit) is
+    invisible — even when its seqnos sit INSIDE the committed range,
+    where no seqno filter could exclude it."""
+    store = MarasaLog(spark, str(tmp_path / "iso_store"))
     store.append(_batch(spark, [("a", "k1", "v1"), ("a", "k2", "v2")], 0))
 
-    # rogue file: committed-range seqno (2 == high-water), never manifested
+    # rogue file: committed-range seqno (2 == high-water), never committed
     rogue = spark.createDataFrame(
         [("a", "k1", 2, datetime.datetime(2030, 1, 1), "ALIEN", 0)],
         "ns string, key string, seqno long, ts timestamp, value string, segment long",
@@ -123,140 +112,101 @@ def test_manifest_backend_listing_isolation(spark, tmp_path):
 
     vals = {r["key"]: r["value"] for r in store.latest("a").collect()}
     assert vals == {"k1": "v1", "k2": "v2"}, (
-        "an unmanifested file leaked into a read — directory listing is "
+        "an uncommitted file leaked into a read — directory listing is "
         "not isolation"
     )
     assert store.max_seqno() == 2
-    # and the next append is numbered from the COMMITTED high-water,
-    # oblivious to the rogue file
+    # the next append numbers from the COMMITTED high-water and does not
+    # adopt the rogue file into its commit
     assert store.append(_batch(spark, [("a", "k1", "v3")], 10)) == 3
     assert store.get("a", "k1") == "v3"
+    assert store.changes(0).count() == 3
 
 
-def test_manifest_snapshot_crash_window_closed(spark, tmp_path):
-    """ADVICE r7 (medium): a writer dying between snapshot materialization
-    and its manifest entry must not make reads silently drop rows <= N.
-    Two layers close it: (1) _write_snapshot stages in a hidden .tmp dir
-    and atomically renames AFTER manifesting, so a half-materialized
-    snapshot is never visible under its upto=N name; (2) the base class's
-    _union_snapshot_tail falls back to full-log replay when the selected
-    snapshot reads as None (simulated here by planting an unmanifested
-    upto=N dir directly)."""
-    import os
-
-    from marasa_spark.log_backends import ManifestMarasaLog
-
-    store = ManifestMarasaLog(spark, str(tmp_path / "snapcrash"))
-    store.append(_batch(spark, [("a", "k1", "v1"), ("a", "k2", "v2")], 0))
-
-    # (1) a real compact is atomic: final dir carries its manifest, no tmp
-    store.compact()
-    snap_names = os.listdir(store.snap_dir)
-    assert snap_names == ["upto=2"]
-    assert os.path.isdir(f"{store.snap_dir}/upto=2/_manifest")
-
-    # (2) plant a NEWER half-materialized snapshot: dir exists by name,
-    # holds data files, but no manifest entry -> _read_dir sees None
-    torn = f"{store.snap_dir}/upto=99"
-    store.latest().write.mode("overwrite").parquet(torn)
-    assert store._read_dir(torn) is None
-    vals = {r["key"]: r["value"] for r in store.latest("a").collect()}
-    assert vals == {"k1": "v1", "k2": "v2"}, (
-        "half-materialized snapshot hid committed rows from latest()"
+def test_half_written_snapshot_hides_no_rows(spark, tmp_path):
+    """A compact that dies mid-write leaves ``snapshot/upto=S`` holding
+    only part of the fold (a job commit that renamed some part files).
+    Selected by directory name, it would hide every row <= S it lacks; a
+    snapshot is visible only through its commit, so reads must ignore it
+    — and the next compact at S replaces it with a committed one."""
+    store = MarasaLog(spark, str(tmp_path / "snapcrash"))
+    hw = store.append(
+        _batch(spark, [("a", "k1", "v1"), ("a", "k2", "v2"), ("b", "k3", "v3")], 0)
     )
-    asof1 = {r["key"]: r["value"] for r in store.asof(1).collect()}
-    assert asof1 == {"k1": "v1"}
+    want = {("a", "k1"): "v1", ("a", "k2"): "v2", ("b", "k3"): "v3"}
+
+    # the crash: one of the fold's part files landed at upto=hw
+    partial = store.latest().filter(F.col("key") == "k1")
+    partial.write.mode("overwrite").parquet(f"{store.snap_dir}/upto={hw}")
+
+    assert {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()} == want, (
+        "half-written snapshot hid committed rows from latest()"
+    )
+    assert {r["key"] for r in store.lookup("a", ["k1", "k2"]).collect()} == {"k1", "k2"}
+    assert {r["ns"] for r in store.namespaces().collect()} == {"a", "b"}
+
+    assert store.compact() == hw
+    assert os.path.exists(f"{store.snap_dir}/upto={hw}/_delta_log/{0:020d}.json")
+    assert {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()} == want
 
 
-def test_manifest_recover_sweeps_unmanifested(spark, tmp_path):
-    """ADVICE r7 (low): unmanifested data files (crash between parquet job
-    and _manifest_add) are invisible but used to accumulate forever; the
-    manifest backend's recovery now physically sweeps them, plus stale
-    .tmp snapshot staging dirs — restoring the base class's 'orphans do
-    not stay on disk' contract."""
-    import datetime
-    import os
-
-    from marasa_spark.log_backends import ManifestMarasaLog
-
-    store = ManifestMarasaLog(spark, str(tmp_path / "sweepstore"))
+def test_recover_sweeps_untracked_files(spark, tmp_path):
+    """Files no commit tracks (crash between a data job and its commit)
+    are invisible but must not accumulate: recovery unlinks exactly the
+    directory-minus-journal set, removes snapshot directories that never
+    committed, and leaves committed data untouched."""
+    store = MarasaLog(spark, str(tmp_path / "sweepstore"))
     store.append(_batch(spark, [("a", "k1", "v1"), ("a", "k2", "v2")], 0))
+    committed = {
+        os.path.join(root, f)
+        for root, dirs, files in os.walk(store.log_dir)
+        if "_delta_log" not in root
+        for f in files
+        if not f.startswith(("_", "."))
+    }
 
-    # unmanifested log file + stale snapshot staging dir, as a crash leaves
     rogue = spark.createDataFrame(
         [("a", "kX", 9, datetime.datetime(2030, 1, 1), "TORN", 0)],
         "ns string, key string, seqno long, ts timestamp, value string, segment long",
     )
     rogue.write.mode("append").partitionBy("ns", "segment").parquet(store.log_dir)
-    stale_tmp = f"{store.snap_dir}/.tmp_upto=2.dead.cafe"
-    store.latest().write.mode("overwrite").parquet(stale_tmp)
+    dead_snap = f"{store.snap_dir}/upto=2"
+    store.latest().write.mode("overwrite").parquet(dead_snap)
 
-    manifested = set(store._manifested_files(store.log_dir))
-    assert store._list_parts(store.log_dir) - manifested, "rogue not planted"
+    assert store.recover_claims() == 0
 
-    store.recover_claims()
-
-    assert store._list_parts(store.log_dir) == set(
-        store._manifested_files(store.log_dir)
-    ), "unmanifested files survived recovery"
-    assert not os.path.isdir(stale_tmp), "stale snapshot staging dir survived"
-    # committed data untouched
+    left = {
+        os.path.join(root, f)
+        for root, dirs, files in os.walk(store.log_dir)
+        if "_delta_log" not in root
+        for f in files
+        if not f.startswith(("_", "."))
+    }
+    assert left == committed, "untracked files survived, or committed ones moved"
+    assert not os.path.isdir(dead_snap), "uncommitted snapshot dir survived"
     vals = {r["key"]: r["value"] for r in store.latest("a").collect()}
     assert vals == {"k1": "v1", "k2": "v2"}
     assert store.max_seqno() == 2
 
 
-def test_delta_backend_full_surface(spark, tmp_path):
-    from marasa_spark.log_backends import DeltaMarasaLog
-
-    store = DeltaMarasaLog(spark, str(tmp_path / "dstore"), segment_size=3)
-
-    assert store.append(_batch(spark, [("a", "k1", "v1"), ("a", "k2", "v2")], 0)) == 2
-    assert store.append(_batch(spark, [("a", "k1", "v3"), ("b", "k9", "v4")], 10)) == 4
-    latest = {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()}
-    assert latest == {("a", "k1"): "v3", ("a", "k2"): "v2", ("b", "k9"): "v4"}
-    asof2 = {(r["ns"], r["key"]): r["value"] for r in store.asof(2).collect()}
-    assert asof2 == {("a", "k1"): "v1", ("a", "k2"): "v2"}
-    assert [r["value"] for r in store.history("a", "k1").collect()] == ["v1", "v3"]
-    assert store.compact() == 4
-    assert store.append(_batch(spark, [("a", "k2", "v5")], 20)) == 5
-    latest2 = {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()}
-    assert latest2[("a", "k2")] == "v5" and latest2[("a", "k1")] == "v3"
-    # re-compact at the same high-water = a real OVERWRITE transaction
-    assert store.compact() == 5
-    assert {
-        (r["ns"], r["key"]): r["value"] for r in store.latest().collect()
-    } == latest2
-
-
 def test_delta_protocol_layout_is_independently_parseable(spark, tmp_path):
     """The on-disk layout must be the OPEN protocol, checkable without any
-    of the backend's own reader code: numbered ndjson commits under
+    of the store's reader code: numbered ndjson commits under
     _delta_log/, version 0 carrying protocol (reader 1 / writer 2) and
     metaData (id, parquet format, Spark schemaString, partitionColumns),
     every add a relative path that exists with correct partitionValues,
-    and an overwrite commit containing remove actions for the replaced
-    files."""
-    import json
-    import os
-
-    from marasa_spark.log_backends import DeltaMarasaLog
-
-    store = DeltaMarasaLog(spark, str(tmp_path / "proto"), segment_size=3)
+    every log commit carrying the seqno high-water as a txn action, and
+    each snapshot its own table committed once."""
+    store = MarasaLog(spark, str(tmp_path / "proto"), segment_size=3)
     store.append(_batch(spark, [("a", "k1", "v1"), ("b", "k2", "v2")], 0))
     store.compact()
     store.append(_batch(spark, [("a", "k1", "v3")], 10))
-    store.compact()  # same-high-water? no — high-water moved; new upto dir
-    store.compact()  # SAME high-water: the overwrite commit
+    store.compact()
+    store.append_once(_batch(spark, [("b", "k5", "v5")], 20), "p-1")
 
-    dlog = f"{store.log_dir}/_delta_log"
-    names = sorted(
-        n for n in os.listdir(dlog) if n.endswith(".json") and n[0].isdigit()
-    )
-    assert names[0] == "00000000000000000000.json"
-    actions0 = [
-        json.loads(line) for line in open(f"{dlog}/{names[0]}") if line.strip()
-    ]
+    commits = _commits(store.log_dir)
+    assert [n for n, _ in commits] == [f"{v:020d}.json" for v in range(3)]
+    actions0 = commits[0][1]
     protocols = [a["protocol"] for a in actions0 if "protocol" in a]
     metas = [a["metaData"] for a in actions0 if "metaData" in a]
     assert protocols == [{"minReaderVersion": 1, "minWriterVersion": 2}]
@@ -265,9 +215,10 @@ def test_delta_protocol_layout_is_independently_parseable(spark, tmp_path):
     assert meta["format"] == {"provider": "parquet", "options": {}}
     assert meta["partitionColumns"] == ["ns", "segment"]
     assert "seqno" in meta["schemaString"] and meta["id"]
-    # every add in every commit: relative existing path + partitionValues
-    for name in names:
-        for a in (json.loads(l) for l in open(f"{dlog}/{name}") if l.strip()):
+    for (_name, actions), hw in zip(commits, [2, 3, 4]):
+        txns = {a["txn"]["appId"]: a["txn"]["version"] for a in actions if "txn" in a}
+        assert txns["marasa.seqno"] == hw
+        for a in actions:
             if "add" not in a:
                 continue
             add = a["add"]
@@ -275,89 +226,70 @@ def test_delta_protocol_layout_is_independently_parseable(spark, tmp_path):
             assert os.path.exists(f"{store.log_dir}/{add['path']}")
             assert add["partitionValues"].get("ns") in {"a", "b"}
             assert add["dataChange"] is True and add["size"] > 0
-    # the re-compacted snapshot table holds an overwrite commit (removes)
-    snaps = sorted(os.listdir(store.snap_dir))
-    last_snap = f"{store.snap_dir}/{snaps[-1]}"
-    sdlog = f"{last_snap}/_delta_log"
-    sn = sorted(n for n in os.listdir(sdlog) if n.endswith(".json"))
-    assert len(sn) == 2, "re-compact must be a second VERSION, not a wipe"
-    v1 = [json.loads(l) for l in open(f"{sdlog}/{sn[1]}") if l.strip()]
-    assert any("remove" in a for a in v1) and any("add" in a for a in v1)
-    # replaced files are retained on disk (time-travel retention)
-    for a in v1:
-        if "remove" in a:
-            assert os.path.exists(f"{last_snap}/{a['remove']['path']}")
+    assert txns["marasa.batch.p-1"] == 4, "append_once id rides its batch's commit"
+    # each snapshot is its own table, visible through one commit
+    for snap in sorted(os.listdir(store.snap_dir)):
+        sc = _commits(f"{store.snap_dir}/{snap}")
+        assert len(sc) == 1 and any("add" in a for a in sc[0][1])
+    # no second journal anywhere in the store
+    assert sorted(os.listdir(store.path)) == ["log", "snapshot"]
 
 
 def test_delta_checkpoint_replaces_commit_prefix(spark, tmp_path):
     """After a checkpoint lands, the JSON commits at or below its version
     are REDUNDANT: delete them (Delta's log-retention cleanup) and a fresh
-    reader must still reconstruct the exact state from checkpoint + tail —
-    the property that bounds metadata replay on a long-lived table."""
-    import os
-
-    from marasa_spark.log_backends import DeltaMarasaLog
-
-    store = DeltaMarasaLog(spark, str(tmp_path / "cp"), segment_size=100)
+    reader must still reconstruct the exact state — including the seqno
+    high-water txn — from checkpoint + tail, the property that bounds
+    metadata replay on a long-lived table."""
+    store = MarasaLog(spark, str(tmp_path / "cp"), segment_size=100)
     want = {}
     for i in range(12):  # crosses CHECKPOINT_INTERVAL=10
-        store.append(_batch(spark, [("n", f"k{i}", f"v{i}")], i * 5))
+        batch = _batch(spark, [("n", f"k{i}", f"v{i}")], i * 5)
+        if i == 3:  # a producer id the checkpoint must carry
+            store.append_once(batch, "early")
+        else:
+            store.append(batch)
         want[("n", f"k{i}")] = f"v{i}"
     dlog = f"{store.log_dir}/_delta_log"
-    assert os.path.exists(f"{dlog}/_last_checkpoint")
-    import json
-
     cp_v = json.load(open(f"{dlog}/_last_checkpoint"))["version"]
+    assert cp_v == 10
     removed = 0
     for name in list(os.listdir(dlog)):
         if name.endswith(".json") and name[0].isdigit() and int(name[:-5]) <= cp_v:
             os.unlink(f"{dlog}/{name}")
             removed += 1
     assert removed > 0
-    reader = DeltaMarasaLog(spark, str(tmp_path / "cp"))
+    reader = MarasaLog(spark, str(tmp_path / "cp"))
     got = {(r["ns"], r["key"]): r["value"] for r in reader.latest().collect()}
     assert got == want
     assert reader.max_seqno() == 12
+    assert reader.append_once(_batch(spark, [("n", "k3", "v3")], 15), "early") == 4
 
 
-def test_delta_vacuum_journals_removes_before_unlink(spark, tmp_path):
+def test_recover_leaves_no_dangling_add(spark, tmp_path):
     """A crashed writer's orphan files must leave the table with NO add
-    action pointing at a missing file after recovery: vacuum commits
-    remove actions, then unlinks — verified by replaying the log
-    independently and checking every live add's file exists."""
-    import json
-    import os
-
-    from marasa_spark.log import MarasaLog
-    from marasa_spark.log_backends import DeltaMarasaLog
-
-    store = DeltaMarasaLog(spark, str(tmp_path / "vac"), segment_size=3)
+    action pointing at a missing file after recovery — verified by
+    replaying the log independently and checking every live add's file
+    exists — and a raw directory read holds no orphan row."""
+    store = MarasaLog(spark, str(tmp_path / "vac"), segment_size=3)
     store.append(_batch(spark, [("a", "k1", "v1")], 0))
-    # crash injection: claim + data + DELTA COMMIT, but no MarasaLog
-    # commit marker (the window between _write_log_batch and _commit_base)
-    base = store.max_seqno()
-    store._claim_base(base)
-    orphan = store._number_batch(_batch(spark, [("a", "k1", "TORN")], 30), base)
-    orphan = orphan.withColumn("segment", F.lit(0).cast("long"))
-    store._write_log_batch(orphan)
+    version, _ = store._claim()
+    orphan = store._number_batch(_batch(spark, [("a", "k1", "TORN")], 30), 1)
+    store._write_log_batch(orphan.withColumn("segment", F.lit(0).cast("long")), version)
     assert store.get("a", "k1") == "v1", "uncommitted row leaked"
     assert store.recover_claims() == 1
     assert store.get("a", "k1") == "v1"
-    # independent replay: live adds must all exist on disk
-    dlog = f"{store.log_dir}/_delta_log"
     active = {}
-    for name in sorted(os.listdir(dlog)):
-        if not (name.endswith(".json") and name[0].isdigit()):
-            continue
-        for a in (json.loads(l) for l in open(f"{dlog}/{name}") if l.strip()):
+    for _name, actions in _commits(store.log_dir):
+        for a in actions:
             if "add" in a:
                 active[a["add"]["path"]] = True
             elif "remove" in a:
                 active.pop(a["remove"]["path"], None)
     assert active, "no live files left?"
     for rel in active:
-        assert os.path.exists(f"{store.log_dir}/{rel}"), (
-            f"live add points at vacuumed file {rel}"
-        )
+        assert os.path.exists(f"{store.log_dir}/{rel}"), f"live add points at missing {rel}"
+    raw = spark.read.schema(DISK_SCHEMA).parquet(store.log_dir)
+    assert raw.filter(F.col("value") == "TORN").count() == 0
     # and the store still appends cleanly from the recovered base
     assert store.append(_batch(spark, [("a", "k2", "v2")], 40)) == 2

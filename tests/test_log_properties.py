@@ -21,12 +21,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from marasa_spark.log import MarasaLog
-from marasa_spark.log_backends import (
-    DeltaMarasaLog,
-    JsonMarasaLog,
-    ManifestMarasaLog,
-)
+from marasa_spark.log import DISK_SCHEMA, LogWriteConflict, MarasaLog
 
 NS = ["alpha", "beta"]
 KEYS = ["k0", "k1", "k2"]
@@ -48,16 +43,12 @@ def tmp_base(tmp_path_factory):
     return tmp_path_factory.mktemp("marasa_log")
 
 
-@pytest.fixture(
-    scope="module",
-    params=[MarasaLog, JsonMarasaLog, ManifestMarasaLog, DeltaMarasaLog],
-    ids=["parquet", "json", "manifest", "delta"],
-)
+@pytest.fixture(scope="module", params=[MarasaLog], ids=["delta_journal"])
 def backend(request):
-    """Every property in this file must hold for EVERY physical backend —
-    the seam proof (VERDICT r6 item 2): semantics (snapshot isolation,
-    writer races, crash/recover interleavings, tombstones, idempotent
-    producers) live entirely above the 3-method storage seam."""
+    """The store under test: MarasaLog on its Delta-protocol journal, the
+    one commit record. Semantics (snapshot isolation, writer races,
+    crash/recover interleavings, tombstones, idempotent producers) are
+    properties of that journal."""
     return request.param
 
 
@@ -129,7 +120,7 @@ def test_log_replay_model(spark, tmp_base, backend, steps):
 
 
 # maintenance interleaving: each step is one of append / compact /
-# crashed-writer (claim + data, no marker) / recover (vacuum)
+# crashed-writer (claim + data, no commit) / recover (vacuum)
 maint_step = st.sampled_from(["append", "compact", "crash", "recover"])
 maint_steps = st.lists(maint_step, min_size=1, max_size=5)
 
@@ -186,10 +177,8 @@ def test_reader_snapshot_isolation_under_maintenance(spark, tmp_base, backend, m
     for step in msteps:
         if step == "append":
             if crashed:
-                # the dead writer's claim still holds the base: a bare
-                # append must conflict (append_retrying would wait it out)
-                from marasa_spark.log import LogWriteConflict
-
+                # the dead writer's claim still holds the next version: a
+                # bare append must conflict (append_retrying would wait)
                 with pytest.raises(LogWriteConflict):
                     store.append(batch([("a", "k1", "never")]))
             else:
@@ -199,11 +188,11 @@ def test_reader_snapshot_isolation_under_maintenance(spark, tmp_base, backend, m
             store.compact()
         elif step == "crash" and not crashed:
             base = store.max_seqno()
-            store._claim_base(base)
+            version, _ = store._claim()
             orphan = store._number_batch(
                 batch([("a", "k1", "TORN"), ("b", "kz", "TORN")]), base
             ).withColumn("segment", F.lit(0).cast("long"))
-            store._write_log_batch(orphan)
+            store._write_log_batch(orphan, version)
             crashed = True
         elif step == "recover":
             store.recover_claims()
@@ -257,15 +246,13 @@ def test_changes_range_and_replay_invariant(spark, tmp_base, backend):
 
 
 def test_concurrent_append_conflict_detected(spark, tmp_base, backend):
-    """The single-writer contract is ENFORCED, not assumed: two writers
-    racing append() from the same high-water must not silently interleave
+    """Writer conflicts are ENFORCED, not assumed: two writers racing
+    append() from the same journal version must not silently interleave
     colliding seqnos — the second claimant gets LogWriteConflict before any
-    of its data lands (the Delta slot-in commit-conflict contract,
-    BASELINE.json north star). Sequential appends (each from a fresh
-    high-water) never conflict; recover_claims() clears a dead writer's
-    claim and re-opens the base."""
-    from marasa_spark.log import LogWriteConflict
-
+    of its data lands (the Delta commit-conflict contract). Sequential
+    appends (each from a fresh journal head) never conflict;
+    recover_claims() clears a dead writer's claim and re-opens the
+    version."""
     path = str(tmp_base / f"conflict_store_{backend.__name__}")
     writer_a = backend(spark, path)
     writer_b = backend(spark, path)
@@ -276,22 +263,22 @@ def test_concurrent_append_conflict_detected(spark, tmp_base, backend):
     high = writer_a.append(df)
     assert high == 2
 
-    # race: both writers read high-water 2; A claims it first (the moment
-    # its append would, before writing), then B's whole append must abort
-    writer_a._claim_base(writer_a.max_seqno())
+    # race: both writers read version 0; A claims version 1 first (the
+    # moment its append would, before writing), then B's append must abort
+    writer_a._claim()
     with pytest.raises(LogWriteConflict):
         writer_b.append(df)
     # the loser wrote nothing: log still has exactly the first batch
     assert writer_b.max_seqno() == 2
     assert writer_a.latest().count() == 2
 
-    # A died before writing: its claim blocks any retry from base 2 ...
+    # A died before writing: its claim blocks any retry of version 1 ...
     with pytest.raises(LogWriteConflict):
         writer_b.append(df)
-    # ... until the operator clears stale (>= high-water) claims
+    # ... until the operator clears the dead claim
     assert writer_b.recover_claims() == 1
     assert writer_b.append(df) == 4
-    # committed claims stay as the journal; nothing stale remains
+    # a committed append releases its own claim: nothing stale remains
     assert writer_b.recover_claims() == 0
     # seqnos are contiguous and collision-free across the whole history
     seqs = [r["seqno"] for r in writer_b.changes(0).orderBy("seqno").collect()]
@@ -299,7 +286,7 @@ def test_concurrent_append_conflict_detected(spark, tmp_base, backend):
 
 
 def test_concurrent_appends_serialize_with_retry(spark, tmp_base, backend):
-    """append_retrying turns the claim CAS into optimistic concurrency:
+    """append_retrying turns the version claim into optimistic concurrency:
     N writers racing from the same high-water all SUCCEED, serialized by
     the commit loop (loser re-reads the advanced high-water and rebases) —
     the Delta/Iceberg commit-retry protocol. The merged history must be
@@ -356,8 +343,8 @@ def test_concurrent_appends_serialize_with_retry(spark, tmp_base, backend):
 
 def test_uncommitted_batch_is_invisible_to_readers(spark, tmp_base, backend):
     """Read atomicity against an in-flight writer: data files that landed
-    WITHOUT a commit marker (a writer mid-append, or crashed between its
-    data job and its marker) must be invisible to every read path —
+    WITHOUT a commit (a writer mid-append, or crashed between its data
+    job and its commit) must be invisible to every read path —
     latest, asof, history-by-changes, and max_seqno (so a new writer
     numbers from the committed base, not the orphan one)."""
     path = str(tmp_base / f"atomic_store_{backend.__name__}")
@@ -368,8 +355,8 @@ def test_uncommitted_batch_is_invisible_to_readers(spark, tmp_base, backend):
     )
     assert store.append(df) == 2
 
-    # simulate the in-flight writer: claim + data files, NO commit marker
-    store._claim_base(2)
+    # simulate the in-flight writer: claim + data files, NO commit
+    version, _ = store._claim()
     orphan = store._number_batch(
         spark.createDataFrame(
             [("n", "k1", "ORPHAN"), ("n", "k3", "ORPHAN")],
@@ -380,7 +367,7 @@ def test_uncommitted_batch_is_invisible_to_readers(spark, tmp_base, backend):
         "segment",
         (F.floor(F.col("seqno") / store.segment_size) * store.segment_size).cast("long"),
     )
-    store._write_log_batch(orphan)
+    store._write_log_batch(orphan, version)
 
     assert store.max_seqno() == 2
     latest = {r["key"]: r["value"] for r in store.latest().collect()}
@@ -390,17 +377,17 @@ def test_uncommitted_batch_is_invisible_to_readers(spark, tmp_base, backend):
 
 
 def test_recover_vacuums_crashed_writer_orphans(spark, tmp_base, backend):
-    """Crash recovery must physically remove the orphan rows, because the
-    next append re-issues the same seqnos from the committed base — if
-    the orphans stayed on disk, that batch's commit marker would surface
-    them as duplicates."""
+    """Crash recovery must physically remove the orphan files: they are
+    invisible, but they carry the same seqnos the next append re-issues
+    from the committed base, and any directory-listing reader (the i15
+    change stream) would surface them as duplicates."""
     path = str(tmp_base / f"vacuum_store_{backend.__name__}")
     store = backend(spark, path)
     df = spark.createDataFrame(
         [("n", "k1", "v1")], "ns string, key string, value string"
     )
     assert store.append(df) == 1
-    store._claim_base(1)
+    version, _ = store._claim()
     orphan = store._number_batch(
         spark.createDataFrame(
             [("n", "k1", "ORPHAN")], "ns string, key string, value string"
@@ -410,12 +397,12 @@ def test_recover_vacuums_crashed_writer_orphans(spark, tmp_base, backend):
         "segment",
         (F.floor(F.col("seqno") / store.segment_size) * store.segment_size).cast("long"),
     )
-    store._write_log_batch(orphan)
+    store._write_log_batch(orphan, version)
 
     assert store.recover_claims() == 1
-    # orphans are gone from DISK, not just filtered (raw backend read,
-    # no committed filter)
-    raw = store._read_dir(store.log_dir)
+    # orphans are gone from DISK, not just unreferenced (raw directory
+    # read, bypassing the journal)
+    raw = spark.read.schema(DISK_SCHEMA).parquet(store.log_dir)
     assert raw.filter(F.col("seqno") > 1).count() == 0
 
     # the re-issued seqno now commits cleanly with no duplicate surfacing
@@ -430,8 +417,8 @@ def test_recover_vacuums_crashed_writer_orphans(spark, tmp_base, backend):
 
 def test_clone_excludes_uncommitted(spark, tmp_base, backend):
     """A backup taken while a writer's data files are on disk WITHOUT a
-    commit marker must contain exactly the last committed state — the
-    clone reads through the committed filter, so a torn backup is
+    commit must contain exactly the last committed state — the clone
+    reads through the journal, so a torn backup is
     impossible by construction. Also: the restored store is
     reader-equivalent (latest, changes, max_seqno) and independently
     writable (its next append numbers from the copied high-water)."""
@@ -443,9 +430,9 @@ def test_clone_excludes_uncommitted(spark, tmp_base, backend):
     )
     store.append(df1)
 
-    # simulate an in-flight writer: claim + data landed, NO commit marker
+    # simulate an in-flight writer: claim + data landed, NO commit
     base = store.max_seqno()
-    store._claim_base(base)
+    version, _ = store._claim()
     orphan = spark.createDataFrame(
         [("ns1", "c", _ts(3), "torn")],
         "ns string, key string, ts timestamp, value string",
@@ -453,7 +440,7 @@ def test_clone_excludes_uncommitted(spark, tmp_base, backend):
     batch = store._number_batch(orphan, base).withColumn(
         "segment", F.lit(0).cast("long")
     )
-    store._write_log_batch(batch)
+    store._write_log_batch(batch, version)
 
     restored = store.clone_to(str(tmp_base / f"clone_dst_{backend.__name__}"))
     rows = {(r["key"], r["value"]) for r in restored.latest().collect()}
@@ -487,44 +474,36 @@ def test_append_once_idempotence(spark, tmp_base, backend):
     reopened = backend(spark, path)
     assert reopened.append_once(df, "batch-1") == 2   # tag is durable
     assert reopened.changes(0).count() == 4
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        store.append_once(df, "../escape")
 
 
-def test_append_once_inflight_claim(spark, tmp_base, backend):
-    """The batch_id tag is claimed (O_EXCL) BEFORE the append and its
-    content landed by atomic rename: a resubmit that finds the claim but
-    no recorded high-water (owner in flight or crashed between claim and
-    record) raises ProducerBatchInFlight — never double-appends, never
-    crashes on a truncated tag. recover_claims clears the dead claim so
-    the id becomes resubmittable."""
-    import os
+def test_append_once_inflight_claim(spark, tmp_base, backend, monkeypatch):
+    """A producer that died holding the version claim: a resubmit of its
+    batch_id retries, then surfaces LogWriteConflict — never
+    double-appends, and nothing of the dead attempt is visible.
+    recover_claims clears the dead claim so the id becomes resubmittable,
+    and it is idempotent again once it lands."""
+    import marasa_spark.log as log_mod
 
-    from marasa_spark.log import ProducerBatchInFlight
-
+    monkeypatch.setattr(log_mod.time, "sleep", lambda _s: None)
     path = str(tmp_base / f"once_inflight_{backend.__name__}")
     store = backend(spark, path)
     df = spark.createDataFrame(
         [("ns1", "a", _ts(1), "v1")],
         "ns string, key string, ts timestamp, value string",
     )
-    # simulate a crashed owner: claim exists, content never recorded
-    os.makedirs(store._txn_dir, exist_ok=True)
-    with open(f"{store._txn_dir}/producer_batch=dead-batch", "w"):
-        pass
-    # plus a stale temp from a crash between tmp-write and rename
-    with open(f"{store._txn_dir}/producer_batch=dead-batch.tmp.99999", "w") as f:
-        f.write("hw=1")
+    # simulate a crashed owner: claim + data landed, commit never written
+    version, _ = store._claim()
+    orphan = store._number_batch(df, 0).withColumn("segment", F.lit(0).cast("long"))
+    store._write_log_batch(orphan, version)
 
-    with pytest.raises(ProducerBatchInFlight):
+    with pytest.raises(LogWriteConflict):
         store.append_once(df, "dead-batch")
     assert store.changes(0).count() == 0, "in-flight resubmit must not append"
 
-    assert store.recover_claims() >= 2  # empty claim + stale tmp cleared
+    assert store.recover_claims() == 1
     assert store.append_once(df, "dead-batch") == 1  # now resubmittable
     assert store.append_once(df, "dead-batch") == 1  # and idempotent again
+    assert store.changes(0).count() == 1
 
 
 def test_tombstone_lifecycle(spark, tmp_base, backend):
@@ -550,7 +529,7 @@ def test_tombstone_lifecycle(spark, tmp_base, backend):
 
     # compaction drops the key from the PHYSICAL snapshot
     s_compact = store.compact()
-    snap = store._read_dir(f"{store.snap_dir}/upto={s_compact}")
+    snap = store._read_table(f"{store.snap_dir}/upto={s_compact}")
     assert snap.filter(F.col("key") == "a").count() == 0
     assert {r["key"] for r in store.latest("ns").collect()} == {"b"}
 
@@ -570,62 +549,6 @@ def test_tombstone_lifecycle(spark, tmp_base, backend):
     assert sum(len(fs) for _, _, fs in os.walk(store.log_dir)) == n_files
 
 
-def test_manifest_occ_bare_append_serializes(spark, tmp_base):
-    """VERDICT r7 #3 — the Delta-OCC seam on the transactional-manifest
-    backend: N writers racing BARE append() (no caller-side retry helper)
-    must ALL commit, serialized into contiguous collision-free seqno
-    ranges whose replay equals the serial model. The other backends keep
-    the single-writer LogWriteConflict raise on a bare append (pinned by
-    test_concurrent_append_conflict_detected); the manifest backend makes
-    the commit loop the table's own protocol, as Delta does."""
-    import threading
-
-    path = str(tmp_base / "occ_store")
-    n_writers, rows_each = 4, 10
-    results, errors = {}, []
-    barrier = threading.Barrier(n_writers)
-
-    def run(w: int) -> None:
-        store = ManifestMarasaLog(spark, path)
-        df = spark.createDataFrame(
-            [("ns1", f"w{w}_k{i}", _ts(w * rows_each + i), f"v{w}_{i}")
-             for i in range(rows_each)],
-            "ns string, key string, ts timestamp, value string",
-        )
-        barrier.wait()
-        try:
-            results[w] = store.append(df, max_attempts=40)
-        except Exception as e:  # noqa: BLE001 — surfaced in the assert below
-            errors.append(e)
-
-    threads = [threading.Thread(target=run, args=(w,)) for w in range(n_writers)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-
-    assert not errors, errors
-    total = n_writers * rows_each
-    assert sorted(results.values()) == [rows_each * (i + 1) for i in range(n_writers)]
-    reader = ManifestMarasaLog(spark, path)
-    rows = reader.changes(0).orderBy("seqno").collect()
-    assert [r["seqno"] for r in rows] == list(range(1, total + 1))
-    assert sorted(r["key"] for r in rows) == sorted(
-        f"w{w}_k{i}" for w in range(n_writers) for i in range(rows_each)
-    )
-    # batches never interleave: each writer's rows are a contiguous range
-    by_writer: dict[str, list[int]] = {}
-    for r in rows:
-        by_writer.setdefault(r["key"].split("_")[0], []).append(r["seqno"])
-    for seqs in by_writer.values():
-        assert seqs == list(range(min(seqs), min(seqs) + rows_each))
-    # replay equals the serial model: last write per key wins
-    latest = {r["key"]: r["value"] for r in reader.latest().collect()}
-    assert latest == {
-        f"w{w}_k{i}": f"v{w}_{i}" for w in range(n_writers) for i in range(rows_each)
-    }
-
-
 @settings(
     max_examples=6,
     deadline=None,
@@ -640,8 +563,8 @@ def test_compact_racing_append_interleaving(spark, tmp_base, backend, pre, racin
     safe: latest() folds snapshot ∪ tail(>N) by max seqno (duplicates
     collapse idempotently), while asof()/changes() read the RAW retained
     log, never the snapshot, so time travel stays exact. Replay must
-    equal the serial model at every prefix, and (manifest backend) no
-    manifest entry may dangle — every manifested file exists on disk."""
+    equal the serial model at every prefix, and no live add may dangle —
+    every file the journal adds exists on disk."""
     import os
 
     path = str(tmp_base / f"race_{next(_counter)}_{backend.__name__}")
@@ -710,25 +633,12 @@ def test_compact_racing_append_interleaving(spark, tmp_base, backend, pre, racin
     rows = reader.changes(0).orderBy("seqno").collect()
     assert [r["seqno"] for r in rows] == list(range(1, len(serial) + 1))
     assert [(r["ns"], r["key"], r["value"]) for r in rows] == serial
-    # 4. manifest backend: no dangling entries — every manifested file
-    # exists (vacuum may remove files, but nothing here vacuumed)
-    if backend is ManifestMarasaLog:
-        for d in [store.log_dir] + [
-            f"{store.snap_dir}/{n}"
-            for n in (os.listdir(store.snap_dir) if os.path.isdir(store.snap_dir) else [])
-            if n.startswith("upto=")
-        ]:
-            mdir = f"{d}/_manifest"
-            if not os.path.isdir(mdir):
-                continue
-            import json as _json
-
-            for name in sorted(os.listdir(mdir)):
-                if name.startswith(("_", ".")):
-                    continue
-                with open(f"{mdir}/{name}") as f:
-                    for fp in _json.load(f)["add"]:
-                        assert os.path.exists(fp), f"dangling manifest entry {fp}"
+    # 4. no dangling add: every live file the journal resolves exists
+    for table in [store.log_dir] + [
+        f"{store.snap_dir}/{n}" for n in os.listdir(store.snap_dir)
+    ]:
+        for rel in reader._journal(table).adds:
+            assert os.path.exists(f"{table}/{rel}"), f"dangling add {rel}"
     # 5. a follow-up compact at the new high-water restores the invariant
     assert store.compact() == len(serial)
     got2 = {(r["ns"], r["key"]): r["value"] for r in reader.latest().collect()}
@@ -736,148 +646,24 @@ def test_compact_racing_append_interleaving(spark, tmp_base, backend, pre, racin
 
 
 # ---------------------------------------------------------------------------
-# Manifest crash-recovery seam (round-9 verdict #6): a writer can die at ANY
-# point between producing data files and making them reader-visible via the
-# manifest (and, on the snapshot path, between manifesting and the atomic
-# rename). Inject each torn state directly into the store's directories and
-# assert the reader sees exactly the pre-commit state — never a partial
-# commit — and that recovery returns the store to full health.
+# Torn-commit states: a writer can die at ANY point between producing data
+# files and making them reader-visible through its commit (and a compact
+# between its snapshot data job and the snapshot's commit). Inject each torn
+# state directly into the store's directories and assert the reader sees
+# exactly the pre-commit state — never a partial commit — and that recovery
+# returns the store to full health.
 # ---------------------------------------------------------------------------
 
 _TORN = [
-    # crash between the parquet data job and _manifest_add: files on disk,
-    # no manifest entry (the log-side window)
-    "data_no_manifest",
-    # crash inside _manifest_add's tmp write: a torn hidden .tmp manifest
-    "torn_tmp_manifest",
-    # manifest entry whose data file is gone (vacuum's remove-action
-    # analogue) — must be skipped, not error
-    "ghost_entry",
-    # crash between snapshot staging+manifest and the atomic rename: a
-    # hidden .tmp_upto dir whose manifest names final paths that never
-    # appeared (the manifest-before-data-visibility direction)
-    "staged_snapshot",
-]
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    injections=st.lists(
-        st.sampled_from(_TORN), min_size=1, max_size=4, unique=True
-    ),
-    n_pre=st.integers(1, 3),
-)
-def test_manifest_torn_commit_states_are_invisible(
-    spark, tmp_base, injections, n_pre
-):
-    import json as _json
-    import os
-    import uuid
-
-    path = str(tmp_base / f"torn_{uuid.uuid4().hex}")
-    store = ManifestMarasaLog(spark, path)
-    committed = []
-    for i in range(n_pre):
-        committed.append(("n", f"k{i}", f"v{i}"))
-        assert (
-            store.append(
-                spark.createDataFrame(
-                    [committed[-1]], "ns string, key string, value string"
-                )
-            )
-            == i + 1
-        )
-    want = {k: v for _ns, k, v in committed}
-
-    crashed_claim = False
-    for kind in injections:
-        if kind == "data_no_manifest":
-            store._claim_base(n_pre)
-            crashed_claim = True
-            orphan = store._number_batch(
-                spark.createDataFrame(
-                    [("n", "k0", "TORN")], "ns string, key string, value string"
-                ),
-                base=n_pre,
-            ).withColumn(
-                "segment",
-                (
-                    F.floor(F.col("seqno") / store.segment_size)
-                    * store.segment_size
-                ).cast("long"),
-            )
-            # the base class's write = the data job WITHOUT the manifest step
-            MarasaLog._write_log_batch(store, orphan)
-        elif kind == "torn_tmp_manifest":
-            mdir = store._manifest_dir(store.log_dir)
-            os.makedirs(mdir, exist_ok=True)
-            with open(f"{mdir}/.0000000099-dead.json.tmp", "w") as f:
-                f.write('{"add": ["truncated')  # torn mid-write
-        elif kind == "ghost_entry":
-            store._manifest_add(
-                store.log_dir,
-                [f"{store.log_dir}/ns=n/segment=0/part-vacuumed-ghost.parquet"],
-            )
-        elif kind == "staged_snapshot":
-            tmp = f"{store.snap_dir}/.tmp_upto={n_pre}.dead.{uuid.uuid4().hex[:6]}"
-            os.makedirs(tmp, exist_ok=True)
-            with open(f"{tmp}/part-00000.parquet", "wb") as f:
-                f.write(b"PAR1 not really parquet")
-            store._manifest_add(
-                tmp,
-                [f"{store.snap_dir}/upto={n_pre}/part-00000.parquet"],
-            )
-
-    # ATOMICITY: every read path sees exactly the committed prefix
-    reader = ManifestMarasaLog(spark, path)
-    assert {r["key"]: r["value"] for r in reader.latest().collect()} == want
-    assert reader.max_seqno() == n_pre
-    assert reader.changes(0).count() == n_pre
-    assert reader.get("n", "k0") == "v0"
-
-    # RECOVERY: claims released, torn files swept, invariants restored
-    assert store.recover_claims() == (1 if crashed_claim else 0)
-    store._sweep_unmanifested()
-    leftovers = store._list_parts(store.log_dir) - set(
-        store._manifested_files(store.log_dir) or []
-    )
-    assert not leftovers, f"unmanifested files survived recovery: {leftovers}"
-    if os.path.isdir(store.snap_dir):
-        assert not [
-            n for n in os.listdir(store.snap_dir) if n.startswith(".tmp_upto=")
-        ], "staged snapshot dir survived recovery"
-
-    # the store is fully writable and consistent afterwards
-    assert (
-        store.append(
-            spark.createDataFrame(
-                [("n", "knew", "vnew")], "ns string, key string, value string"
-            )
-        )
-        == n_pre + 1
-    )
-    want["knew"] = "vnew"
-    assert {r["key"]: r["value"] for r in reader.latest().collect()} == want
-    # and every surviving manifest entry points at a real file
-    for fp in store._manifested_files(store.log_dir) or []:
-        assert os.path.exists(fp)
-
-
-_DELTA_TORN = [
-    # crash between the parquet data job and the Delta commit: files on
-    # disk, no add action (the log-side window)
+    # crash between the parquet data job and the commit: claim held, files
+    # on disk, no add action (the log-side window)
     "data_no_commit",
     # crash inside _commit's tmp write: a torn hidden .tmp commit attempt
     # (final commit files are hard-linked whole, so only tmp can tear)
     "torn_tmp_commit",
-    # a staged snapshot table whose data landed but whose _delta_log never
-    # materialized: selected by directory NAME, must read as empty and
-    # fall back to full-log replay
-    "snapshot_no_log",
+    # a snapshot table whose data landed but whose commit never did:
+    # selected by name it would hide rows, so it must read as absent
+    "snapshot_no_commit",
 ]
 
 
@@ -887,20 +673,15 @@ _DELTA_TORN = [
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(
-    injections=st.lists(
-        st.sampled_from(_DELTA_TORN), min_size=1, max_size=3, unique=True
-    ),
+    injections=st.lists(st.sampled_from(_TORN), min_size=1, max_size=3, unique=True),
     n_pre=st.integers(1, 3),
 )
-def test_delta_torn_commit_states_are_invisible(spark, tmp_base, injections, n_pre):
-    """Every Delta-protocol crash window leaves the table readable at
-    exactly the committed prefix (the manifest backend's torn-commit
-    property, re-proven for the real protocol's windows)."""
+def test_torn_commit_states_are_invisible(spark, tmp_base, backend, injections, n_pre):
     import os
     import uuid
 
-    path = str(tmp_base / f"dtorn_{uuid.uuid4().hex}")
-    store = DeltaMarasaLog(spark, path)
+    path = str(tmp_base / f"torn_{uuid.uuid4().hex}")
+    store = backend(spark, path)
     committed = []
     for i in range(n_pre):
         committed.append(("n", f"k{i}", f"v{i}"))
@@ -917,7 +698,7 @@ def test_delta_torn_commit_states_are_invisible(spark, tmp_base, injections, n_p
     crashed_claim = False
     for kind in injections:
         if kind == "data_no_commit":
-            store._claim_base(n_pre)
+            version, _ = store._claim()
             crashed_claim = True
             orphan = store._number_batch(
                 spark.createDataFrame(
@@ -931,33 +712,49 @@ def test_delta_torn_commit_states_are_invisible(spark, tmp_base, injections, n_p
                     * store.segment_size
                 ).cast("long"),
             )
-            # the data job WITHOUT the Delta commit
-            MarasaLog._write_log_batch(store, orphan)
+            store._write_log_batch(orphan, version)
         elif kind == "torn_tmp_commit":
             dlog = f"{store.log_dir}/_delta_log"
-            os.makedirs(dlog, exist_ok=True)
             with open(f"{dlog}/.00000000000000000099.json.dead.tmp", "w") as f:
                 f.write('{"add": {"path": "truncat')  # torn mid-write
-        elif kind == "snapshot_no_log":
+        elif kind == "snapshot_no_commit":
             staged = f"{store.snap_dir}/upto={n_pre}"
             os.makedirs(staged, exist_ok=True)
             with open(f"{staged}/part-00000.parquet", "wb") as f:
                 f.write(b"PAR1 not really parquet")
 
-    reader = DeltaMarasaLog(spark, path)
+    # ATOMICITY: every read path sees exactly the committed prefix
+    reader = backend(spark, path)
     assert {r["key"]: r["value"] for r in reader.latest().collect()} == want
     assert reader.max_seqno() == n_pre
-    if crashed_claim:
-        assert reader.recover_claims() >= 1
-        # post-recovery: orphans vacuumed via journaled removes, store
-        # appends cleanly from the committed base
-        assert (
-            reader.append(
-                spark.createDataFrame(
-                    [("n", "knew", "vnew")], "ns string, key string, value string"
-                )
+    assert reader.changes(0).count() == n_pre
+    assert reader.get("n", "k0") == "v0"
+
+    # RECOVERY: claims released, torn files swept, invariants restored
+    assert store.recover_claims() == (1 if crashed_claim else 0)
+    live = {f"{store.log_dir}/{rel}" for rel in store._journal(store.log_dir).adds}
+    on_disk = {
+        os.path.join(root, f)
+        for root, dirs, files in os.walk(store.log_dir)
+        if "_delta_log" not in root
+        for f in files
+        if not f.startswith(("_", "."))
+    }
+    assert on_disk == live, f"untracked files survived recovery: {on_disk - live}"
+    assert not [
+        n for n in os.listdir(f"{store.log_dir}/_delta_log") if n.startswith(".")
+    ], "claim or torn commit attempt survived recovery"
+    if os.path.isdir(store.snap_dir):
+        assert not os.listdir(store.snap_dir), "uncommitted snapshot survived"
+
+    # the store is fully writable and consistent afterwards
+    assert (
+        store.append(
+            spark.createDataFrame(
+                [("n", "knew", "vnew")], "ns string, key string, value string"
             )
-            == n_pre + 1
         )
-        got = {r["key"]: r["value"] for r in reader.latest().collect()}
-        assert got == {**want, "knew": "vnew"}
+        == n_pre + 1
+    )
+    want["knew"] = "vnew"
+    assert {r["key"]: r["value"] for r in reader.latest().collect()} == want

@@ -355,6 +355,35 @@ def test_log_append_avoids_single_partition_window(spark, tmp_path):
     assert plan.count("windowspecdefinition()") == 0
 
 
+def test_log_read_set_starts_no_job(spark, tmp_path):
+    """MarasaLog reads the explicit file list its journal resolves. Above
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths
+    (default 32) InMemoryFileIndex lists them with a Spark JOB — about
+    0.5 s per read on a 4-core box. Pin that building the read sets of a
+    store with more than 32 live log files starts zero jobs."""
+    from marasa_spark.log import MarasaLog
+
+    log = MarasaLog(spark, str(tmp_path / "many_files"), segment_size=1)
+    log.append(
+        spark.createDataFrame(
+            [("ns", f"k{i:02d}", "v") for i in range(40)],
+            "ns string, key string, value string",
+        )
+    )
+    log.compact()
+    reader = MarasaLog(spark, log.path)  # cold: nothing resolved yet
+    assert len(reader._journal(reader.log_dir).adds) > 32
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    reader._full_log()
+    reader._union_snapshot_tail()
+    bus.waitUntilEmpty()
+    started = set(sc.statusTracker().getJobIdsForGroup()) - before
+    assert not started, f"building the log read set started jobs {started}"
+
+
 def test_heavy_hitters_shuffles_only_candidates(spark):
     """m29: the exact-count pass must semi-join the exploded tokens against
     the BROADCAST candidate set BEFORE the groupBy — the point of the
