@@ -1,9 +1,12 @@
 """Benchmark harness — run the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON
-line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
+"build": {...}, "sf": ...}.
 
 Protocol mirrors BASELINE.md: warmed session, per-query warm best-of-3
-wall-clock of a full plan execution + collect().
+wall-clock of a full plan execution + collect(). This is the headline
+number BASELINE.md's 2x targets are read against; A/B performance work
+uses perfbench (BENCHMARK.json) instead.
 """
 
 from __future__ import annotations
@@ -15,7 +18,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from marasa_spark.collect import collect_arrow
 from marasa_spark.registry import queries_map
 from marasa_spark.session import get_spark
 
@@ -48,6 +50,13 @@ HEADLINE: dict[str, list[str]] = {
 
 RUNS = 3
 
+# At sf0.1 the default 64 MB advisory size coalesces post-shuffle stages to
+# one partition, serializing compute-bound stages such as the session-window
+# merge. 1 MB spreads the orders/events shuffles (4-25 MB) across tasks; a
+# real cluster at real data scale wants the 64 MB default or larger
+# (OPTIMIZATION_r11.md §bench-confs).
+ADVISORY_PARTITION_BYTES = "1m"
+
 
 def bench_one(spark, fn, sf_dir: str) -> float:
     """BASELINE.md protocol: warmed session, best-of-3 collect() of the
@@ -68,26 +77,14 @@ def bench_one(spark, fn, sf_dir: str) -> float:
     return min(times)
 
 
-# Probe gate (VERDICT r7 #1): BENCH_r07 was taken while the box's load
-# varied 11x within one sweep window, which no single scalar box_ratio can
-# correct — so a sample is accepted only when the fixed DuckDB probe, run
-# BEFORE and AFTER the query loop, agrees within this factor. A sample that
-# disagrees is contended and is re-measured (the measurement is cheap next
-# to being wrong); if the box never settles, the last sample ships marked
-# "contended": true so no downstream consumer mistakes it for evidence.
-PROBE_TOLERANCE = 1.20
-PROBE_GATE_ATTEMPTS = 3
-
-
 def _measure_headline(
     spark, sf_dir: str, qmap
 ) -> tuple[dict[str, float], dict[str, float]]:
     """Returns (warm best-of-N per label, BUILD time per label). Build =
     plan construction + FIRST collect (analysis, parquet footers, codegen/
-    JIT, any index side-effects) — the bench_full protocol's build_s,
-    recorded here too so the driver's BENCH_r{N}.json witnesses
-    plan-construction and first-run cost, not just warm latency (round-8
-    verdict #8: a 45 s first run hid behind a 9 s warm number)."""
+    JIT, any index side-effects), recorded so the output witnesses
+    plan-construction and first-run cost, not just warm latency (a 45 s
+    first run once hid behind a 9 s warm number)."""
     results: dict[str, float] = {}
     builds: dict[str, float] = {}
     for label, qids in HEADLINE.items():
@@ -106,251 +103,28 @@ def _measure_headline(
     return results, builds
 
 
-def _measure_headline_arrow(
-    spark, sf_dir: str, qmap
-) -> tuple[dict[str, float], dict[str, str]]:
-    """ADDITIVE second protocol (round 12, VERDICT r11 #1): the same
-    queries timed with the engine's Arrow collect path
-    (marasa_spark.collect.collect_arrow → DataFrame.toArrow) instead of
-    the row-pickle collect(). Runs AFTER the classic pass on the same
-    warmed session (plans/JIT already hot), same warm best-of-3-per-query
-    shape. The declared bench metric stays `value`/`queries` — this
-    column exists so the py4j-transfer share of every label is measured
-    in-band and the series can be re-based on evidence in a later round."""
-    import gc
-
-    results: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for label, qids in HEADLINE.items():
-        if not all(qid in qmap for qid in qids):
-            continue
-        total_t = 0.0
-        try:
-            for qid in qids:
-                df = qmap[qid](spark, sf_dir)
-                collect_arrow(df)  # warm the arrow path once
-                times = []
-                for _ in range(RUNS):
-                    t0 = time.perf_counter()
-                    tbl = collect_arrow(df)
-                    times.append(time.perf_counter() - t0)
-                    del tbl
-                gc.collect()
-                total_t += min(times)
-        except Exception as e:  # never fail the declared bench over the
-            errors[label] = f"{type(e).__name__}: {e}"  # additive column
-            continue
-        results[label] = round(total_t, 4)
-    return results, errors
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     spark = get_spark(app_name="marasa_spark_bench")
-    # bench-box tuning: at sf0.1 the default 64 MB advisory coalesces
-    # post-shuffle stages to 1 partition, serializing e.g. the session-window
-    # merge on a 32-core machine — compute-bound stages must be spread even
-    # when byte-tiny (the k9 lesson; optimization guide §2.5). Round 8
-    # measured 8 MB (~20% on q_session); round 11 re-measured the sweep
-    # 64m/8m/1m/256k on the window/session/percentile headliners: 1 MB is
-    # another 10-15% on e3/i3/d8 (orders/events shuffles are 4-25 MB, so
-    # 8 MB still coalesced them to 1-3 tasks) and 256 KB adds nothing.
-    # Parameterised for other box shapes; a real cluster at real data scale
-    # wants the 64 MB default or larger (OPTIMIZATION_r11.md §bench-confs).
     spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "1m"),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes", ADVISORY_PARTITION_BYTES
     )
-    qmap = queries_map()
-
-    for attempt in range(1, PROBE_GATE_ATTEMPTS + 1):
-        calib_start = calibration_probe(spark, sf_dir)
-        results, builds = _measure_headline(spark, sf_dir, qmap)
-        # arrow pass INSIDE the gated window so both protocols share the
-        # contention evidence; classic pass first so its numbers are taken
-        # under exactly the r11 conditions
-        results_arrow, arrow_errors = _measure_headline_arrow(spark, sf_dir, qmap)
-        calib_end = calibration_probe(spark, sf_dir)
-        d0 = calib_start["duckdb_lineitem_agg_sec"]
-        d1 = calib_end["duckdb_lineitem_agg_sec"]
-        drift = max(d0, d1) / min(d0, d1)
-        contended = drift > PROBE_TOLERANCE
-        if not contended:
-            break
-        print(
-            f"probe gate: start/end DuckDB probes disagree {drift:.2f}x "
-            f"(> {PROBE_TOLERANCE}x) — box contended, rejecting sample "
-            f"(attempt {attempt}/{PROBE_GATE_ATTEMPTS})",
-            file=sys.stderr,
-        )
-
-    # least-contended probe wins the normalization (transient load only
-    # ever inflates the probe, never deflates it)
-    calib = (
-        calib_start
-        if calib_start["duckdb_lineitem_agg_sec"] <= calib_end["duckdb_lineitem_agg_sec"]
-        else calib_end
-    )
-    total = round(sum(results.values()), 4)
-    ratio = box_ratio(calib, sf)
+    results, builds = _measure_headline(spark, sf_dir, queries_map())
     print(
         json.dumps(
             {
                 "metric": "sum_warm_best_of_3_latency",
-                "value": total,
+                "value": round(sum(results.values()), 4),
                 "unit": "sec",
                 "queries": results,
                 # per-query BUILD cost (construction + first collect):
-                # cold-start witness alongside the warm numbers; only the
-                # warm metric is normalized/compared across rounds
+                # cold-start witness alongside the warm numbers
                 "build": builds,
-                # ADDITIVE Arrow-protocol column (round 12): same queries,
-                # same warm best-of-3, timed action = collect_arrow()
-                # (DataFrame.toArrow) instead of the row-pickle collect().
-                # `value`/`queries` above remain the declared metric.
-                "value_arrow": round(sum(results_arrow.values()), 4),
-                "queries_arrow": results_arrow,
-                **({"arrow_errors": arrow_errors} if arrow_errors else {}),
                 "sf": sf,
-                "calibration": {
-                    **calib,
-                    "start": calib_start,
-                    "end": calib_end,
-                    "probe_drift": round(drift, 3),
-                    "attempts": attempt,
-                    "contended": contended,
-                },
-                # r5-box-equivalent numbers: raw / (this box's probe / the
-                # frozen R5_REF_PROBE). Cross-round comparisons use THESE
-                # (the round-5 verdict: raw-time comparison is defeated by
-                # 1.3-1.7x box swings between rounds) — and only when
-                # "contended" is false (the round-7 lesson: a probe gate,
-                # not a scalar ratio, is what makes the sample meaningful).
-                "box_ratio_vs_r5": round(ratio, 4),
-                "value_norm": round(total / ratio, 4),
-                "queries_norm": {q: round(t / ratio, 4) for q, t in results.items()},
             }
         )
     )
-
-
-# The round-5 driver box's probe values (BENCH_r05.json "calibration",
-# measured at sf0.1) — the frozen yardstick every later round normalizes
-# to. At the reference SF the DUCKDB probe is the normalizer: it is a
-# fixed CPU workload over the identical file and tracks box speed within
-# a few percent, where the Spark range-sum probe jitters ±30% with JVM
-# state (measured both on the r6 box). The Spark probe is still recorded
-# and is the fallback at other SFs (the duckdb probe's cost scales with
-# the data, so its reference value is only meaningful at sf0.1).
-R5_REF_PROBE = {"duckdb_lineitem_agg_sec": 0.0308, "spark_range_sum_sec": 0.0252}
-R5_REF_SF = 0.1
-
-
-def box_ratio(calib: dict[str, float], sf: float | None = None) -> float:
-    """this-box slowdown factor vs the frozen round-5 reference box
-    (>1 = this box is slower; divide raw times by it to get
-    r5-box-equivalent seconds)."""
-    if sf is None or abs(sf - R5_REF_SF) < 1e-12:
-        return calib["duckdb_lineitem_agg_sec"] / R5_REF_PROBE["duckdb_lineitem_agg_sec"]
-    return calib["spark_range_sum_sec"] / R5_REF_PROBE["spark_range_sum_sec"]
-
-
-def calibration_probe(spark, sf_dir: str) -> dict[str, float]:
-    """Fixed, engine-independent workload timed in the same run: DuckDB
-    (threads=4, warm best-of-3) aggregating lineitem. Bench numbers are
-    only comparable across rounds on the SAME hardware — the per-round
-    driver box changes (round 5's VM measures ~1.3-1.7x slower than the
-    box BASELINE.md was measured on; see BASELINE.md §Box calibration) —
-    so every BENCH_r{N}.json carries this yardstick: divide per-query
-    times by (calibration / the round-4 reference calibration) to compare
-    rounds box-neutrally."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("PRAGMA threads=4")
-    q = (
-        "SELECT l_returnflag, count(*), sum(l_extendedprice * (1 - l_discount)) "
-        f"FROM '{sf_dir}/lineitem.parquet' GROUP BY l_returnflag"
-    )
-    con.execute(q).fetchall()  # warm
-    times = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        con.execute(q).fetchall()
-        times.append(time.perf_counter() - t0)
-    duck = min(times)
-
-    # JVM multi-core probe on the same warmed session the bench used — this
-    # is the one that tracks the contention actually hitting the queries
-    probe = spark.range(50_000_000).selectExpr("sum(id) AS s")
-    probe.collect()  # warm
-    jtimes = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        probe.collect()
-        jtimes.append(time.perf_counter() - t0)
-    # Third probe (round 11, ADDITIVE — existing keys and the box_ratio
-    # normalization are untouched): a fixed pure-Python pickle round trip.
-    # The r11 sweep found the collect-protocol ops (py4j transfer, Python
-    # workers) uniformly +21-38% raw vs the r10 sweep on a box whose
-    # DuckDB probe was FASTER and whose Spark probe was flat — neither
-    # existing probe tracks the single-thread Python/pickle speed that
-    # governs every collect()-bound measurement. Recording it per sample
-    # lets future rounds separate "the Python path got slower on this VM"
-    # from a real engine regression (OPTIMIZATION_r11.md §calibration).
-    import pickle
-
-    pdata = [(i, float(i) * 0.5, "x" * 20, [i, i + 1]) for i in range(200_000)]
-    ptimes = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        pickle.loads(pickle.dumps(pdata, 4))
-        ptimes.append(time.perf_counter() - t0)
-    # Fourth probe (round 12, ADDITIVE): fixed pure-Python bytecode loop.
-    # The r12 sweep found a mapInPandas op (k91, pure-Python JPEG decode)
-    # drifting +42% raw on a box whose duckdb AND pickle probes both read
-    # FASTER than the prior's — Python interpreter compute speed is a
-    # distinct cost class from pickle serialization, and no existing probe
-    # tracks it. Recorded per sample so the next round's regression rule
-    # can include it once a prior carries it (bench_full's stable-probe
-    # intersection handles the bootstrap).
-    def _pyloop() -> int:
-        acc = 0
-        for i in range(3_000_000):
-            acc = (acc * 31 + i) & 0xFFFFFFFF
-        return acc
-
-    ctimes = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        _pyloop()
-        ctimes.append(time.perf_counter() - t0)
-    # Fifth probe (round 12, ADDITIVE): a fixed py4j row-collect — 150k
-    # (long, double, 20-char string) rows through the classic collect()
-    # protocol on the same warmed session. This is the DIRECT yardstick
-    # for the transfer-bound cost class (the JVM-side single-thread row
-    # pickling + socket + Python unpickle that dominates i7/k50/m6/h5/
-    # q_string_date warm numbers): the r12 sweeps saw that class drift
-    # +15-40% raw on a box whose duckdb, pickle and python-compute probes
-    # ALL read faster — none of them times the JVM's single-thread
-    # serialization path. Bootstrap story as python_compute_sec.
-    probe_rows = spark.range(150_000).selectExpr(
-        "id", "cast(id as double) AS d", "repeat('x', 20) AS s"
-    )
-    probe_rows.collect()  # warm
-    rtimes = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        probe_rows.collect()
-        rtimes.append(time.perf_counter() - t0)
-    return {
-        "duckdb_lineitem_agg_sec": round(duck, 4),
-        "spark_range_sum_sec": round(min(jtimes), 4),
-        "python_pickle_sec": round(min(ptimes), 4),
-        "python_compute_sec": round(min(ctimes), 4),
-        "py4j_collect_sec": round(min(rtimes), 4),
-    }
 
 
 if __name__ == "__main__":

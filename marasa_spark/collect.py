@@ -12,11 +12,11 @@ driver receives a ``pyarrow.Table``. For numeric/temporal-heavy results
 this is the guide §6 "Arrow for driver transfers" point applied to the
 engine's own result path.
 
-``collect_arrow`` is the engine-layer entry so call sites (bench, future
-writers) share one implementation and one fallback policy. The bench
-reports BOTH protocols for round 12 (``value``/``queries`` keep the
-declared collect() methodology; ``value_arrow``/``queries_arrow`` are
-additive) so the cross-round series stays comparable before any re-base.
+``collect_arrow`` is the engine-layer entry so call sites (perfbench's
+request loop, future writers) share one implementation and one fallback
+policy. perfbench times it per request (``collect.arrow_ms``, and the
+transfer share over a noop sink as ``collect.transfer_ms``); bench.py's
+headline line keeps the declared collect() methodology.
 
 Value parity with collect() is pinned in tests/test_collect_arrow.py:
 same rows, same values, same column order — only the container differs

@@ -752,7 +752,7 @@ def _decode_scan(
     for y in range(height):
         # hoist the per-row chroma/luma row bases; the inner loop is pure
         # index arithmetic (a per-pixel closure call tripled the decode
-        # cost on subsampled fixtures — measured in bench_full round 9)
+        # cost on subsampled fixtures — measured in round 9)
         r0 = (y * v0 // vmax) * pw0
         r1 = (y * v1 // vmax) * pw1
         r2 = (y * v2 // vmax) * pw2

@@ -1,7 +1,7 @@
 """collect_arrow (DataFrame.toArrow) value parity with collect().
 
-The round-12 bench reports an additive Arrow-protocol column; its
-numbers are only meaningful if the Arrow path materializes exactly the
+perfbench delivers every olap_mix result through collect_arrow; its
+timings are only meaningful if the Arrow path materializes exactly the
 rows the declared collect() protocol does. Pinned over a type-diverse
 slice of the headline set: decimals/doubles (d1), dates+timestamps (h4),
 strings/json (h8), longs + window ranks (k6), set ops (g3).
