@@ -20,9 +20,10 @@ the API shape follows SURVEY's reconstruction of pjz/marasa: ``put``/
 * any historical state is a prefix fold: ``filter(seqno <= s)`` + the same
   window (time travel);
 * **compaction** (= marasa's segment snapshot) materializes the fold into
-  ``snapshot/upto=<S>/``, itself a Delta table that becomes visible only
-  through its commit, so reads become snapshot ∪ log-tail — replay cost
-  is bounded by the tail length, not log length;
+  the ``snapshot/`` table through the same claim/commit path as a log
+  append, so it becomes visible only through its commit and reads become
+  snapshot ∪ log-tail — replay cost is bounded by the tail length, not
+  log length;
 * **deletes are tombstones** (NULL-value records, the Kafka-compaction
   convention): ``latest``/``lookup``/``get``/``asof`` treat
   tombstone-as-last-change as key-gone, ``changes`` surfaces the
@@ -32,21 +33,24 @@ the API shape follows SURVEY's reconstruction of pjz/marasa: ``put``/
 Record schema (marasa stores JSON payloads keyed by string keys):
 ``ns string, key string, seqno long, ts timestamp, value string``.
 
-Journal layout (each table directory)::
+Journal layout (two tables, ``log/`` and ``snapshot/``, one journal each)::
 
     <table>/_delta_log/00000000000000000000.json   # numbered commits
     <table>/_delta_log/0000000000000000000N.checkpoint.parquet
     <table>/_delta_log/_last_checkpoint            # {"version": N, ...}
     <table>/_delta_log/.0000000000000000000N.json.claim   # writer's claim
-    <table>/ns=a/segment=0/part-*.parquet          # data files
+    log/ns=a/segment=0/part-*.parquet              # log data files
+    snapshot/v0000000000000000000N/part-*.parquet  # fold committed at N
 
 A commit is a newline-delimited JSON action list: the first carries
 ``protocol`` and ``metaData``; a log commit carries one ``add`` per new
 data file plus the seqno high-water as a spec ``txn`` action (appId
 ``marasa.seqno``, version = high-water), and an ``append_once`` commit
-also records its producer batch id as a ``txn``. Commits are put-if-absent
+also records its producer batch id as a ``txn``. A snapshot commit
+``remove``s the previous fold's files, adds the new fold's and records
+its high-water as txn ``marasa.snapshot``. Commits are put-if-absent
 (``os.link``: EEXIST means another writer won that version); every
-``CHECKPOINT_INTERVAL`` log commits a parquet checkpoint (live adds and
+``CHECKPOINT_INTERVAL`` commits a parquet checkpoint (live adds and
 txns) bounds the replay to checkpoint + tail.
 
 Scale posture (100 TB):
@@ -65,6 +69,7 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -79,9 +84,10 @@ from marasa_spark.session import ensure_session_configs
 
 
 class LogWriteConflict(RuntimeError):
-    """Two writers raced ``append()`` from the same journal version.
+    """Two writers raced ``append()`` (or ``compact()``) from the same
+    journal version.
 
-    Each append claims the next commit version before it writes any data,
+    Each claims the next commit version before it writes any data,
     so the loser gets THIS error instead of silently writing colliding
     seqnos — the Delta concurrent-modification surface. A claim left by a
     writer that died is cleared with :meth:`MarasaLog.recover_claims`."""
@@ -96,6 +102,7 @@ DISK_SCHEMA = LOG_SCHEMA + ", segment long"
 
 HIGH_WATER_APP = "marasa.seqno"  # txn appId whose version is the high-water
 BATCH_APP_PREFIX = "marasa.batch."  # txn appId prefix of append_once ids
+SNAPSHOT_APP = "marasa.snapshot"  # txn appId whose version is the snapshot high-water
 CHECKPOINT_INTERVAL = 10
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
@@ -120,6 +127,10 @@ def _dlog(table: str) -> str:
 
 def _commit_name(version: int) -> str:
     return f"{version:020d}.json"
+
+
+def _claim_path(table: str, version: int) -> str:
+    return f"{_dlog(table)}/.{_commit_name(version)}.claim"
 
 
 def _versions(table: str) -> list[int]:
@@ -346,11 +357,11 @@ class MarasaLog:
         becomes visible exactly when that commit file lands; a crash
         anywhere before leaves invisible files and a dead claim, both
         cleared by :meth:`recover_claims`."""
-        version, j = self._claim()
+        version, j = self._claim(self.log_dir)
         base = j.txns.get(HIGH_WATER_APP, 0) if j else 0
         done = j.txns.get(BATCH_APP_PREFIX + batch_id) if j and batch_id is not None else None
         if done is not None:
-            os.unlink(self._claim_path(version))
+            os.unlink(_claim_path(self.log_dir, version))
             return done
         batch = self._number_batch(records, base).withColumn(
             "segment",
@@ -362,7 +373,8 @@ class MarasaLog:
         batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
         actions = self._write_log_batch(batch, version)
         hw = base + int(obs.get["n"])
-        self._commit_log(version, actions, hw, batch_id)
+        apps = [HIGH_WATER_APP] + ([] if batch_id is None else [BATCH_APP_PREFIX + batch_id])
+        self._commit_log(self.log_dir, version, actions, hw, apps)
         return hw
 
     def append_retrying(
@@ -417,11 +429,8 @@ class MarasaLog:
 
     # -- commit protocol -----------------------------------------------------
 
-    def _claim_path(self, version: int) -> str:
-        return f"{_dlog(self.log_dir)}/.{_commit_name(version)}.claim"
-
-    def _claim(self) -> tuple[int, _Journal | None]:
-        """Reserve the log's next commit version before any data is
+    def _claim(self, table: str) -> tuple[int, _Journal | None]:
+        """Reserve the table's next commit version before any data is
         written: create the hidden ``.<version>.json.claim`` with
         O_CREAT|O_EXCL (the filesystem's compare-and-set), then re-read
         the journal head. Returns the claimed version and the journal it
@@ -433,42 +442,42 @@ class MarasaLog:
         catches a claim re-created after its commit landed). So at most
         ONE writer is between claim and commit, which is what makes the
         before/after listing in :meth:`_write_log_batch` exactly the
-        batch's own files."""
-        j = self._journal(self.log_dir)
+        batch's own files, and a snapshot sub-directory its compact's."""
+        j = self._journal(table)
         version = 0 if j is None else j.version + 1
-        os.makedirs(_dlog(self.log_dir), exist_ok=True)
-        path = self._claim_path(version)
+        os.makedirs(_dlog(table), exist_ok=True)
+        path = _claim_path(table, version)
         try:
             fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         except FileExistsError:
             raise LogWriteConflict(
-                f"another writer holds log version {version} ({path}); re-read "
-                "the high-water and retry, or run recover_claims() if that "
-                "writer is known dead"
+                f"another writer holds {table} version {version} ({path}); "
+                "re-read the journal and retry, or run recover_claims() if "
+                "that writer is known dead"
             ) from None
         os.write(fd, f"pid={os.getpid()}\n".encode())
         os.close(fd)
-        if (_versions(self.log_dir) or [-1])[-1] >= version:
+        if (_versions(table) or [-1])[-1] >= version:
             os.unlink(path)
-            raise LogWriteConflict(f"log version {version} is already committed")
+            raise LogWriteConflict(f"{table} version {version} is already committed")
         return version, j
 
     def _commit_log(
-        self, version: int, actions: list[dict], hw: int, batch_id: str | None = None
+        self, table: str, version: int, actions: list[dict], hw: int, apps: list[str]
     ) -> None:
-        """Commit a claimed version: the batch's actions plus the seqno
-        high-water (and the producer batch id) as txn actions, atomically
-        in one commit file; then release the claim and checkpoint every
+        """Commit a claimed version: the actions plus one txn action per
+        appId in ``apps`` carrying ``hw`` (the seqno high-water, producer
+        batch id or snapshot high-water), atomically in one commit file;
+        then release the claim and checkpoint every
         ``CHECKPOINT_INTERVAL`` versions."""
         now = int(time.time() * 1000)
-        apps = [HIGH_WATER_APP] + ([] if batch_id is None else [BATCH_APP_PREFIX + batch_id])
         actions = actions + [
             {"txn": {"appId": app, "version": hw, "lastUpdated": now}} for app in apps
         ]
-        _commit(self.log_dir, version, actions)
-        os.unlink(self._claim_path(version))
+        _commit(table, version, actions)
+        os.unlink(_claim_path(table, version))
         if version and version % CHECKPOINT_INTERVAL == 0:
-            _write_checkpoint(self.log_dir, self._journal(self.log_dir))
+            _write_checkpoint(table, self._journal(table))
 
     def _journal(self, table: str) -> _Journal | None:
         """The table's committed state: the cached state plus the commits
@@ -488,33 +497,29 @@ class MarasaLog:
 
     def recover_claims(self) -> int:
         """Operator recovery after a writer died (never run while a writer
-        is in flight): release dead claims, drop torn commit temp files,
-        and sweep every data file no commit tracks — the set difference
-        of the directory against the journal's live adds, so committed
-        data is never touched (a pinned reader cannot tear: no byte of
-        it moves). Snapshot directories without a commit (a compact that
-        died mid-write) are removed whole. Returns the number of claims
-        released."""
+        is in flight): release dead claims and drop torn commit temp
+        files in both tables, then sweep what no commit made visible —
+        in the log, every data file outside the journal's live adds; in
+        the snapshot table, every sub-directory whose version the journal
+        never committed (a compact that died mid-write), removed whole.
+        Committed data is never touched, superseded snapshot files
+        included (a pinned reader cannot tear: no byte of it moves).
+        Returns the number of claims released."""
         released = 0
-        d = _dlog(self.log_dir)
-        for name in os.listdir(d) if os.path.isdir(d) else []:
-            if name.endswith((".claim", ".tmp")):
-                os.unlink(f"{d}/{name}")
-                released += name.endswith(".claim")
+        for table in (self.log_dir, self.snap_dir):
+            d = _dlog(table)
+            for name in os.listdir(d) if os.path.isdir(d) else []:
+                if name.endswith((".claim", ".tmp")):
+                    os.unlink(f"{d}/{name}")
+                    released += name.endswith(".claim")
         j = self._journal(self.log_dir)
         live = {f"{self.log_dir}/{rel}" for rel in (j.adds if j else ())}
         for p in _list_parts(self.log_dir) - live:
             os.unlink(p)
-        for name in os.listdir(self.snap_dir) if os.path.isdir(self.snap_dir) else []:
-            if not name.startswith("upto="):
-                continue
-            table = f"{self.snap_dir}/{name}"
-            j = self._journal(table)
-            if j is None:
-                shutil.rmtree(table)
-                continue
-            for p in _list_parts(table) - {f"{table}/{rel}" for rel in j.adds}:
-                os.unlink(p)
+        j = self._journal(self.snap_dir)
+        for sub in glob.glob(f"{glob.escape(self.snap_dir)}/v{'[0-9]' * 20}"):
+            if j is None or int(sub[-20:]) > j.version:
+                shutil.rmtree(sub)
         return released
 
     # -- storage seam --------------------------------------------------------
@@ -534,14 +539,14 @@ class MarasaLog:
         meta = _meta_actions(batch.schema.json(), ["ns", "segment"]) if version == 0 else []
         return meta + [_add_action(self.log_dir, p) for p in new]
 
-    def _write_snapshot(self, state: DataFrame, upto: int) -> None:
-        """Materialize the snapshot table at high-water ``upto``: the data
-        job, then its version-0 commit — the only thing that makes it
-        visible (overwrite mode clears an uncommitted leftover)."""
-        table = f"{self.snap_dir}/upto={upto}"
-        state.write.mode("overwrite").parquet(table)
-        actions = _meta_actions(state.schema.json(), [])
-        _commit(table, 0, actions + [_add_action(table, p) for p in sorted(_list_parts(table))])
+    def _write_snapshot(self, state: DataFrame, version: int) -> list[dict]:
+        """Physical write of one fold into the sub-directory of the claimed
+        snapshot ``version``; returns its actions (``metaData`` on version
+        0, one ``add`` per file). Overwrite clears an uncommitted leftover."""
+        sub = f"{self.snap_dir}/v{version:020d}"
+        state.write.mode("overwrite").parquet(sub)
+        meta = _meta_actions(state.schema.json(), []) if version == 0 else []
+        return meta + [_add_action(self.snap_dir, p) for p in sorted(_list_parts(sub))]
 
     def _read_table(self, table: str) -> DataFrame | None:
         """The table's live files as resolved by its journal, built once
@@ -601,8 +606,9 @@ class MarasaLog:
                 "long"
             ),
         )
-        version, _ = dest._claim()
-        dest._commit_log(version, dest._write_log_batch(batch, version), hw)
+        version, _ = dest._claim(dest.log_dir)
+        actions = dest._write_log_batch(batch, version)
+        dest._commit_log(dest.log_dir, version, actions, hw, [HIGH_WATER_APP])
         return dest
 
     def put(self, ns: str, **changes: str) -> int:
@@ -652,26 +658,20 @@ class MarasaLog:
         return self._read_table(self.log_dir)
 
     def _latest_snapshot_seq(self) -> int:
-        """High-water of the newest COMMITTED snapshot. Selection is by
-        commit, not by directory name: an ``upto=S`` directory a crashed
-        compact left half-written has no commit and never hides rows."""
-        if not os.path.isdir(self.snap_dir):
-            return 0
-        seqs = [
-            int(name.split("=", 1)[1])
-            for name in os.listdir(self.snap_dir)
-            if name.startswith("upto=")
-            and os.path.exists(f"{_dlog(f'{self.snap_dir}/{name}')}/{_commit_name(0)}")
-        ]
-        return max(seqs, default=0)
+        """High-water of the committed snapshot: the ``marasa.snapshot``
+        txn of the snapshot journal head — a journal read, so a fold a
+        crashed compact left half-written never hides rows."""
+        j = self._journal(self.snap_dir)
+        return j.txns[SNAPSHOT_APP] if j else 0
 
     def _union_snapshot_tail(self) -> DataFrame | None:
         """snapshot(≤S) ∪ log-tail(>S) — the bounded-replay read set. A
         committed snapshot with no live file (every key tombstoned at S)
-        falls back to replaying the full log."""
+        falls back to replaying the full log. S is read first: a compact
+        landing in between only adds overlap, which the fold collapses."""
         s = self._latest_snapshot_seq()
         tail = self._full_log()
-        snap = self._read_table(f"{self.snap_dir}/upto={s}") if s else None
+        snap = self._read_table(self.snap_dir)
         if snap is None:
             return tail
         if tail is not None:
@@ -794,8 +794,22 @@ class MarasaLog:
         """Materialize the current fold as a snapshot (marasa's segment
         checkpoint). Reads after this touch snapshot ∪ tail(>S) only.
         Returns the snapshot's high-water seqno; a committed snapshot at
-        the current high-water already is that fold, so it is kept."""
+        the current high-water already is that fold, so it is kept — also
+        when a concurrent compact commits it first (re-checked under the
+        claim). The commit removes the previous fold's files. A compact
+        that died holding its claim surfaces :class:`LogWriteConflict`
+        after the retries, until :meth:`recover_claims`."""
+        return _retry(self._compact, 10, 0.2)
+
+    def _compact(self) -> int:
         s = self.max_seqno()
-        if s and s != self._latest_snapshot_seq():
-            self._write_snapshot(self.latest(), s)
+        if not s or s == self._latest_snapshot_seq():
+            return s
+        version, j = self._claim(self.snap_dir)
+        if j is not None and j.txns[SNAPSHOT_APP] == s:
+            os.unlink(_claim_path(self.snap_dir, version))
+            return s
+        removes = [{"remove": {"path": rel, "dataChange": True}} for rel in (j.adds if j else ())]
+        adds = self._write_snapshot(self.latest(), version)
+        self._commit_log(self.snap_dir, version, removes + adds, s, [SNAPSHOT_APP])
         return s

@@ -12,10 +12,9 @@ deterministic tiebreak on ``right_seq``):
   ``last(..., ignorenulls)``: ONE shuffle, no pair amplification, all
   JVM-side. The default scale path — a key with R right rows and L left
   rows costs O((R+L) log(R+L)) locally vs the band join's O(R·L) pairs.
-* :func:`asof_join_grouped` — ``applyInPandas`` + ``pandas.merge_asof`` per
-  key-partition: one shuffle on the key, then a linear two-pointer merge per
-  group — same no-amplification shape but crosses the Python boundary;
-  kept as the escape hatch for merge logic built-ins can't express.
+
+:func:`asof_join_bucketed` (tolerance-bounded, hot-key safe) and
+:func:`asof_join_nearest` (nearest match in either direction) build on them.
 
 Use a ``tolerance`` (max lookback) with the window variant at scale so the
 band join prunes to a bounded time slice.
@@ -23,10 +22,9 @@ band join prunes to a bounded time slice.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import StructType
 
 
 def asof_join(
@@ -152,51 +150,6 @@ def asof_join_union(
         *[F.col(f"_lpay.{c}").alias(c) for c in lcols],
         *[F.col(f"_m.{c}").alias(c) for c in rpay],
     )
-
-
-def asof_join_grouped(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    right_seq: str | None = None,
-) -> DataFrame:
-    """merge_asof per key group (the linear-time scale path).
-
-    Column names of ``left`` and ``right`` must be disjoint apart from
-    ``on``. Inner semantics: left rows without a prior right row are
-    dropped. Output: all left columns + right columns except ``on``.
-    ``right_seq`` makes right_ts ties deterministic (max seq wins, matching
-    :func:`asof_join`) — merge_asof picks the LAST tied row, so a stable
-    sort on (right_ts, right_seq) pins the winner.
-    """
-    lcols = left.columns
-    rcols = [c for c in right.columns if c != on]
-    overlap = (set(lcols) & set(right.columns)) - {on}
-    if overlap:
-        raise ValueError(f"column names must be disjoint, overlap: {overlap}")
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in list(left.schema.fields)
-        + [f for f in right.schema.fields if f.name != on]
-    )
-    r_sort = [right_ts, right_seq] if right_seq else [right_ts]
-
-    def merge(_key, pdf_l: pd.DataFrame, pdf_r: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf_l) == 0 or len(pdf_r) == 0:
-            return pd.DataFrame(columns=lcols + rcols)
-        merged = pd.merge_asof(
-            pdf_l.sort_values(left_ts, kind="mergesort"),
-            pdf_r.drop(columns=[on]).sort_values(r_sort, kind="mergesort"),
-            left_on=left_ts,
-            right_on=right_ts,
-            direction="backward",
-        )
-        return merged.dropna(subset=[right_ts])[lcols + rcols]
-
-    # cogroup: one shuffle each side on the key, linear merge per group
-    return left.groupBy(on).cogroup(right.groupBy(on)).applyInPandas(merge, out_schema)
 
 
 def asof_join_bucketed(

@@ -30,6 +30,11 @@ def _batch(spark, rows, t0):
     )
 
 
+def _snap_dirs(store):
+    """The snapshot table's fold sub-directories on disk, by name."""
+    return sorted(n for n in os.listdir(store.snap_dir) if n.startswith("v"))
+
+
 def _commits(table):
     """(name, actions) per numbered commit, parsed without the store's code."""
     dlog = f"{table}/_delta_log"
@@ -60,14 +65,17 @@ def test_store_full_surface(spark, tmp_path):
     assert store.append(_batch(spark, [("a", "k2", "v5")], 20)) == 5
     latest2 = {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()}
     assert latest2[("a", "k2")] == "v5" and latest2[("a", "k1")] == "v3"
-    # a re-compact at the same high-water keeps the committed snapshot
+    # a re-compact at the same high-water keeps the committed snapshot;
+    # the superseded fold stays on disk, removed from the one journal
     assert store.compact() == 5
     assert store.compact() == 5
-    assert sorted(os.listdir(store.snap_dir)) == ["upto=4", "upto=5"]
+    assert _snap_dirs(store) == [f"v{0:020d}", f"v{1:020d}"]
+    assert len(_commits(store.snap_dir)) == 2
+    assert store._latest_snapshot_seq() == 5
     assert {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()} == latest2
 
     # crash recovery: claim + data without a commit stays invisible
-    version, _ = store._claim()
+    version, _ = store._claim(store.log_dir)
     orphan = store._number_batch(
         _batch(spark, [("a", "k1", "TORN")], 30), store.max_seqno()
     ).withColumn("segment", F.lit(0).cast("long"))
@@ -124,20 +132,22 @@ def test_listing_isolation(spark, tmp_path):
 
 
 def test_half_written_snapshot_hides_no_rows(spark, tmp_path):
-    """A compact that dies mid-write leaves ``snapshot/upto=S`` holding
-    only part of the fold (a job commit that renamed some part files).
-    Selected by directory name, it would hide every row <= S it lacks; a
-    snapshot is visible only through its commit, so reads must ignore it
-    — and the next compact at S replaces it with a committed one."""
+    """A compact that dies mid-write holds its claim on the snapshot
+    table and leaves its version's sub-directory holding only part of
+    the fold (a job commit that renamed some part files). Selected by
+    directory, it would hide every row <= S it lacks; a snapshot is
+    visible only through its commit, so reads must ignore it — and after
+    recovery the next compact at S commits a whole one."""
     store = MarasaLog(spark, str(tmp_path / "snapcrash"))
     hw = store.append(
         _batch(spark, [("a", "k1", "v1"), ("a", "k2", "v2"), ("b", "k3", "v3")], 0)
     )
     want = {("a", "k1"): "v1", ("a", "k2"): "v2", ("b", "k3"): "v3"}
 
-    # the crash: one of the fold's part files landed at upto=hw
+    # the crash: one of the fold's part files landed under the claim
+    version, _ = store._claim(store.snap_dir)
     partial = store.latest().filter(F.col("key") == "k1")
-    partial.write.mode("overwrite").parquet(f"{store.snap_dir}/upto={hw}")
+    store._write_snapshot(partial, version)
 
     assert {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()} == want, (
         "half-written snapshot hid committed rows from latest()"
@@ -145,18 +155,55 @@ def test_half_written_snapshot_hides_no_rows(spark, tmp_path):
     assert {r["key"] for r in store.lookup("a", ["k1", "k2"]).collect()} == {"k1", "k2"}
     assert {r["ns"] for r in store.namespaces().collect()} == {"a", "b"}
 
+    assert store._latest_snapshot_seq() == 0
+
+    assert store.recover_claims() == 1
+    assert _snap_dirs(store) == []
     assert store.compact() == hw
-    assert os.path.exists(f"{store.snap_dir}/upto={hw}/_delta_log/{0:020d}.json")
+    assert [n for n, _ in _commits(store.snap_dir)] == [f"{0:020d}.json"]
+    assert store._latest_snapshot_seq() == hw
     assert {(r["ns"], r["key"]): r["value"] for r in store.latest().collect()} == want
+
+
+def test_concurrent_compacts_serialize(spark, tmp_path):
+    """Two compacts racing at the same high-water: the other one commits
+    S between this one's check and its claim, so this one re-reads the
+    snapshot journal under its claim, finds S there and commits nothing —
+    one snapshot commit and one fold, not two."""
+    store = MarasaLog(spark, str(tmp_path / "cc"))
+    other = MarasaLog(spark, store.path)
+    hw = store.append(_batch(spark, [("a", "k1", "v1"), ("b", "k2", "v2")], 0))
+    claim = store._claim
+
+    def racing_claim(table):
+        assert other.compact() == hw
+        return claim(table)
+
+    store._claim = racing_claim
+    assert store.compact() == hw
+    assert len(_commits(store.snap_dir)) == 1
+    assert _snap_dirs(store) == [f"v{0:020d}"]
+    assert not [n for n in os.listdir(f"{store.snap_dir}/_delta_log") if n.startswith(".")]
+    assert store.get("b", "k2") == "v2"
 
 
 def test_recover_sweeps_untracked_files(spark, tmp_path):
     """Files no commit tracks (crash between a data job and its commit)
     are invisible but must not accumulate: recovery unlinks exactly the
-    directory-minus-journal set, removes snapshot directories that never
-    committed, and leaves committed data untouched."""
+    directory-minus-journal set, removes snapshot sub-directories whose
+    version never committed, and leaves committed data untouched — the
+    superseded fold included, since its files were committed."""
     store = MarasaLog(spark, str(tmp_path / "sweepstore"))
-    store.append(_batch(spark, [("a", "k1", "v1"), ("a", "k2", "v2")], 0))
+    store.append(_batch(spark, [("a", "k1", "v1")], 0))
+    store.compact()
+    store.append(_batch(spark, [("a", "k2", "v2")], 10))
+    store.compact()
+    snap_files = {
+        os.path.join(root, f)
+        for root, dirs, files in os.walk(store.snap_dir)
+        if "_delta_log" not in root
+        for f in files
+    }
     committed = {
         os.path.join(root, f)
         for root, dirs, files in os.walk(store.log_dir)
@@ -170,7 +217,7 @@ def test_recover_sweeps_untracked_files(spark, tmp_path):
         "ns string, key string, seqno long, ts timestamp, value string, segment long",
     )
     rogue.write.mode("append").partitionBy("ns", "segment").parquet(store.log_dir)
-    dead_snap = f"{store.snap_dir}/upto=2"
+    dead_snap = f"{store.snap_dir}/v{2:020d}"
     store.latest().write.mode("overwrite").parquet(dead_snap)
 
     assert store.recover_claims() == 0
@@ -184,6 +231,8 @@ def test_recover_sweeps_untracked_files(spark, tmp_path):
     }
     assert left == committed, "untracked files survived, or committed ones moved"
     assert not os.path.isdir(dead_snap), "uncommitted snapshot dir survived"
+    assert _snap_dirs(store) == [f"v{0:020d}", f"v{1:020d}"]
+    assert all(os.path.exists(p) for p in snap_files), "a committed fold moved"
     vals = {r["key"]: r["value"] for r in store.latest("a").collect()}
     assert vals == {"k1": "v1", "k2": "v2"}
     assert store.max_seqno() == 2
@@ -196,13 +245,15 @@ def test_delta_protocol_layout_is_independently_parseable(spark, tmp_path):
     metaData (id, parquet format, Spark schemaString, partitionColumns),
     every add a relative path that exists with correct partitionValues,
     every log commit carrying the seqno high-water as a txn action, and
-    each snapshot its own table committed once."""
+    every compaction one commit of the single snapshot table that
+    removes the previous fold's files and adds its own."""
     store = MarasaLog(spark, str(tmp_path / "proto"), segment_size=3)
     store.append(_batch(spark, [("a", "k1", "v1"), ("b", "k2", "v2")], 0))
     store.compact()
     store.append(_batch(spark, [("a", "k1", "v3")], 10))
     store.compact()
     store.append_once(_batch(spark, [("b", "k5", "v5")], 20), "p-1")
+    store.compact()
 
     commits = _commits(store.log_dir)
     assert [n for n, _ in commits] == [f"{v:020d}.json" for v in range(3)]
@@ -227,20 +278,32 @@ def test_delta_protocol_layout_is_independently_parseable(spark, tmp_path):
             assert add["partitionValues"].get("ns") in {"a", "b"}
             assert add["dataChange"] is True and add["size"] > 0
     assert txns["marasa.batch.p-1"] == 4, "append_once id rides its batch's commit"
-    # each snapshot is its own table, visible through one commit
-    for snap in sorted(os.listdir(store.snap_dir)):
-        sc = _commits(f"{store.snap_dir}/{snap}")
-        assert len(sc) == 1 and any("add" in a for a in sc[0][1])
-    # no second journal anywhere in the store
+    # one snapshot table: commit v adds the fold under v<v>/, removes
+    # every file of the fold before it and records its high-water
+    snap_commits = _commits(store.snap_dir)
+    assert [n for n, _ in snap_commits] == [f"{v:020d}.json" for v in range(3)]
+    assert any("metaData" in a for a in snap_commits[0][1])
+    prev = set()
+    for v, ((_name, actions), hw) in enumerate(zip(snap_commits, [2, 3, 4])):
+        adds = {a["add"]["path"] for a in actions if "add" in a}
+        removes = {a["remove"]["path"] for a in actions if "remove" in a}
+        txns = {a["txn"]["appId"]: a["txn"]["version"] for a in actions if "txn" in a}
+        assert adds and all(p.startswith(f"v{v:020d}/") for p in adds)
+        assert removes == prev and txns == {"marasa.snapshot": hw}
+        prev = adds
+    # a store compacted 3 times has two journals, and nothing else at its root
     assert sorted(os.listdir(store.path)) == ["log", "snapshot"]
+    dlogs = [root for root, dirs, _files in os.walk(store.path) if "_delta_log" in dirs]
+    assert sorted(dlogs) == [store.log_dir, store.snap_dir]
 
 
 def test_delta_checkpoint_replaces_commit_prefix(spark, tmp_path):
     """After a checkpoint lands, the JSON commits at or below its version
     are REDUNDANT: delete them (Delta's log-retention cleanup) and a fresh
     reader must still reconstruct the exact state — including the seqno
-    high-water txn — from checkpoint + tail, the property that bounds
-    metadata replay on a long-lived table."""
+    and snapshot high-water txns — from checkpoint + tail, the property
+    that bounds metadata replay on a long-lived table. Both tables cross
+    a checkpoint: the snapshot table's holds only the live fold's adds."""
     store = MarasaLog(spark, str(tmp_path / "cp"), segment_size=100)
     want = {}
     for i in range(12):  # crosses CHECKPOINT_INTERVAL=10
@@ -249,20 +312,26 @@ def test_delta_checkpoint_replaces_commit_prefix(spark, tmp_path):
             store.append_once(batch, "early")
         else:
             store.append(batch)
+        store.compact()
         want[("n", f"k{i}")] = f"v{i}"
-    dlog = f"{store.log_dir}/_delta_log"
-    cp_v = json.load(open(f"{dlog}/_last_checkpoint"))["version"]
-    assert cp_v == 10
-    removed = 0
-    for name in list(os.listdir(dlog)):
-        if name.endswith(".json") and name[0].isdigit() and int(name[:-5]) <= cp_v:
-            os.unlink(f"{dlog}/{name}")
-            removed += 1
-    assert removed > 0
+    for table in (store.log_dir, store.snap_dir):
+        dlog = f"{table}/_delta_log"
+        cp_v = json.load(open(f"{dlog}/_last_checkpoint"))["version"]
+        assert cp_v == 10
+        removed = 0
+        for name in list(os.listdir(dlog)):
+            if name.endswith(".json") and name[0].isdigit() and int(name[:-5]) <= cp_v:
+                os.unlink(f"{dlog}/{name}")
+                removed += 1
+        assert removed > 0
     reader = MarasaLog(spark, str(tmp_path / "cp"))
+    assert {
+        p.split("/")[0] for p in reader._journal(reader.snap_dir).adds
+    } == {f"v{11:020d}"}
     got = {(r["ns"], r["key"]): r["value"] for r in reader.latest().collect()}
     assert got == want
     assert reader.max_seqno() == 12
+    assert reader._latest_snapshot_seq() == 12
     assert reader.append_once(_batch(spark, [("n", "k3", "v3")], 15), "early") == 4
 
 
@@ -273,7 +342,7 @@ def test_recover_leaves_no_dangling_add(spark, tmp_path):
     exists — and a raw directory read holds no orphan row."""
     store = MarasaLog(spark, str(tmp_path / "vac"), segment_size=3)
     store.append(_batch(spark, [("a", "k1", "v1")], 0))
-    version, _ = store._claim()
+    version, _ = store._claim(store.log_dir)
     orphan = store._number_batch(_batch(spark, [("a", "k1", "TORN")], 30), 1)
     store._write_log_batch(orphan.withColumn("segment", F.lit(0).cast("long")), version)
     assert store.get("a", "k1") == "v1", "uncommitted row leaked"

@@ -43,24 +43,15 @@ def tmp_base(tmp_path_factory):
     return tmp_path_factory.mktemp("marasa_log")
 
 
-@pytest.fixture(scope="module", params=[MarasaLog], ids=["delta_journal"])
-def backend(request):
-    """The store under test: MarasaLog on its Delta-protocol journal, the
-    one commit record. Semantics (snapshot isolation, writer races,
-    crash/recover interleavings, tombstones, idempotent producers) are
-    properties of that journal."""
-    return request.param
-
-
 @settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(steps=steps)
-def test_log_replay_model(spark, tmp_base, backend, steps):
+def test_log_replay_model(spark, tmp_base, steps):
     path = str(tmp_base / f"store_{next(_counter)}")
-    store = backend(spark, path)
+    store = MarasaLog(spark, path)
 
     model: dict[tuple[str, str], str] = {}   # (ns,key) -> value
     journal: list[tuple[int, str, str, str]] = []  # (seqno, ns, key, value)
@@ -131,7 +122,7 @@ maint_steps = st.lists(maint_step, min_size=1, max_size=5)
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(msteps=maint_steps)
-def test_reader_snapshot_isolation_under_maintenance(spark, tmp_base, backend, msteps):
+def test_reader_snapshot_isolation_under_maintenance(spark, tmp_base, msteps):
     """Round-5 verdict #5 — the read half of the ACID contract: a reader
     pinned at seqno S must see exactly the prefix-fold state at S across
     ANY interleaving of compact / crashed-writer / vacuum-recovery /
@@ -145,7 +136,7 @@ def test_reader_snapshot_isolation_under_maintenance(spark, tmp_base, backend, m
     import os
 
     path = str(tmp_base / f"iso_{next(_counter)}")
-    store = backend(spark, path, segment_size=5)
+    store = MarasaLog(spark, path, segment_size=5)
 
     def committed_files() -> dict[str, float]:
         out = {}
@@ -188,7 +179,7 @@ def test_reader_snapshot_isolation_under_maintenance(spark, tmp_base, backend, m
             store.compact()
         elif step == "crash" and not crashed:
             base = store.max_seqno()
-            version, _ = store._claim()
+            version, _ = store._claim(store.log_dir)
             orphan = store._number_batch(
                 batch([("a", "k1", "TORN"), ("b", "kz", "TORN")]), base
             ).withColumn("segment", F.lit(0).cast("long"))
@@ -210,9 +201,9 @@ def test_reader_snapshot_isolation_under_maintenance(spark, tmp_base, backend, m
         store.recover_claims()
 
 
-def test_marasa_call_shapes(spark, tmp_base, backend):
+def test_marasa_call_shapes(spark, tmp_base):
     """The reference's call shapes (SURVEY §0.4): put/write/get/read."""
-    store = backend(spark, str(tmp_base / f"shapes_{backend.__name__}"))
+    store = MarasaLog(spark, str(tmp_base / "shapes"))
     s1 = store.put("cfg", color="red", size="large")
     assert s1 == 2
     s2 = store.write("cfg", color="blue")
@@ -224,11 +215,11 @@ def test_marasa_call_shapes(spark, tmp_base, backend):
     assert asof_rows["color"] == "red"
 
 
-def test_changes_range_and_replay_invariant(spark, tmp_base, backend):
+def test_changes_range_and_replay_invariant(spark, tmp_base):
     """changes(s, u) returns exactly the (s, u] seqno slice; consuming the
     feed in two adjacent ranges replays the full log; an open until reads
     to the head; ns filter composes."""
-    store = backend(spark, str(tmp_base / f"cdc_{backend.__name__}"), segment_size=4)
+    store = MarasaLog(spark, str(tmp_base / "cdc"), segment_size=4)
     rows = [("a", f"k{i % 3}", _ts(i), f"v{i}") for i in range(10)]
     store.append(spark.createDataFrame(rows, "ns string, key string, ts timestamp, value string"))
     rows2 = [("b", f"k{i % 2}", _ts(100 + i), f"w{i}") for i in range(5)]
@@ -245,7 +236,7 @@ def test_changes_range_and_replay_invariant(spark, tmp_base, backend):
     assert store.changes(15).count() == 0
 
 
-def test_concurrent_append_conflict_detected(spark, tmp_base, backend):
+def test_concurrent_append_conflict_detected(spark, tmp_base):
     """Writer conflicts are ENFORCED, not assumed: two writers racing
     append() from the same journal version must not silently interleave
     colliding seqnos — the second claimant gets LogWriteConflict before any
@@ -253,9 +244,9 @@ def test_concurrent_append_conflict_detected(spark, tmp_base, backend):
     appends (each from a fresh journal head) never conflict;
     recover_claims() clears a dead writer's claim and re-opens the
     version."""
-    path = str(tmp_base / f"conflict_store_{backend.__name__}")
-    writer_a = backend(spark, path)
-    writer_b = backend(spark, path)
+    path = str(tmp_base / "conflict_store")
+    writer_a = MarasaLog(spark, path)
+    writer_b = MarasaLog(spark, path)
     df = spark.createDataFrame(
         [("ns1", "k1", "v1"), ("ns1", "k2", "v2")],
         "ns string, key string, value string",
@@ -265,7 +256,7 @@ def test_concurrent_append_conflict_detected(spark, tmp_base, backend):
 
     # race: both writers read version 0; A claims version 1 first (the
     # moment its append would, before writing), then B's append must abort
-    writer_a._claim()
+    writer_a._claim(writer_a.log_dir)
     with pytest.raises(LogWriteConflict):
         writer_b.append(df)
     # the loser wrote nothing: log still has exactly the first batch
@@ -285,7 +276,7 @@ def test_concurrent_append_conflict_detected(spark, tmp_base, backend):
     assert seqs == [1, 2, 3, 4]
 
 
-def test_concurrent_appends_serialize_with_retry(spark, tmp_base, backend):
+def test_concurrent_appends_serialize_with_retry(spark, tmp_base):
     """append_retrying turns the version claim into optimistic concurrency:
     N writers racing from the same high-water all SUCCEED, serialized by
     the commit loop (loser re-reads the advanced high-water and rebases) —
@@ -294,13 +285,13 @@ def test_concurrent_appends_serialize_with_retry(spark, tmp_base, backend):
     free seqnos, i.e. equivalent to SOME serial order of the appends."""
     import threading
 
-    path = str(tmp_base / f"retry_store_{backend.__name__}")
+    path = str(tmp_base / "retry_store")
     n_writers, rows_each = 4, 25
     results, errors = {}, []
     barrier = threading.Barrier(n_writers)
 
     def run(w: int) -> None:
-        store = backend(spark, path)
+        store = MarasaLog(spark, path)
         df = spark.createDataFrame(
             [("ns1", f"w{w}_k{i}", _ts(w * rows_each + i), f"v{w}_{i}")
              for i in range(rows_each)],
@@ -326,7 +317,7 @@ def test_concurrent_appends_serialize_with_retry(spark, tmp_base, backend):
     assert sorted(results.values()) == [
         rows_each * (i + 1) for i in range(n_writers)
     ]
-    reader = backend(spark, path)
+    reader = MarasaLog(spark, path)
     rows = reader.changes(0).orderBy("seqno").collect()
     assert [r["seqno"] for r in rows] == list(range(1, total + 1))
     # the union of batches survived intact: every key exactly once
@@ -341,14 +332,14 @@ def test_concurrent_appends_serialize_with_retry(spark, tmp_base, backend):
         assert seqs == list(range(min(seqs), min(seqs) + rows_each))
 
 
-def test_uncommitted_batch_is_invisible_to_readers(spark, tmp_base, backend):
+def test_uncommitted_batch_is_invisible_to_readers(spark, tmp_base):
     """Read atomicity against an in-flight writer: data files that landed
     WITHOUT a commit (a writer mid-append, or crashed between its data
     job and its commit) must be invisible to every read path —
     latest, asof, history-by-changes, and max_seqno (so a new writer
     numbers from the committed base, not the orphan one)."""
-    path = str(tmp_base / f"atomic_store_{backend.__name__}")
-    store = backend(spark, path)
+    path = str(tmp_base / "atomic_store")
+    store = MarasaLog(spark, path)
     df = spark.createDataFrame(
         [("n", "k1", "v1"), ("n", "k2", "v2")],
         "ns string, key string, value string",
@@ -356,7 +347,7 @@ def test_uncommitted_batch_is_invisible_to_readers(spark, tmp_base, backend):
     assert store.append(df) == 2
 
     # simulate the in-flight writer: claim + data files, NO commit
-    version, _ = store._claim()
+    version, _ = store._claim(store.log_dir)
     orphan = store._number_batch(
         spark.createDataFrame(
             [("n", "k1", "ORPHAN"), ("n", "k3", "ORPHAN")],
@@ -376,18 +367,18 @@ def test_uncommitted_batch_is_invisible_to_readers(spark, tmp_base, backend):
     assert store.get("n", "k3") is None
 
 
-def test_recover_vacuums_crashed_writer_orphans(spark, tmp_base, backend):
+def test_recover_vacuums_crashed_writer_orphans(spark, tmp_base):
     """Crash recovery must physically remove the orphan files: they are
     invisible, but they carry the same seqnos the next append re-issues
     from the committed base, and any directory-listing reader (the i15
     change stream) would surface them as duplicates."""
-    path = str(tmp_base / f"vacuum_store_{backend.__name__}")
-    store = backend(spark, path)
+    path = str(tmp_base / "vacuum_store")
+    store = MarasaLog(spark, path)
     df = spark.createDataFrame(
         [("n", "k1", "v1")], "ns string, key string, value string"
     )
     assert store.append(df) == 1
-    version, _ = store._claim()
+    version, _ = store._claim(store.log_dir)
     orphan = store._number_batch(
         spark.createDataFrame(
             [("n", "k1", "ORPHAN")], "ns string, key string, value string"
@@ -415,15 +406,15 @@ def test_recover_vacuums_crashed_writer_orphans(spark, tmp_base, backend):
     assert store.get("n", "k1") == "v2"
 
 
-def test_clone_excludes_uncommitted(spark, tmp_base, backend):
+def test_clone_excludes_uncommitted(spark, tmp_base):
     """A backup taken while a writer's data files are on disk WITHOUT a
     commit must contain exactly the last committed state — the clone
     reads through the journal, so a torn backup is
     impossible by construction. Also: the restored store is
     reader-equivalent (latest, changes, max_seqno) and independently
     writable (its next append numbers from the copied high-water)."""
-    path = str(tmp_base / f"clone_src_{backend.__name__}")
-    store = backend(spark, path)
+    path = str(tmp_base / "clone_src")
+    store = MarasaLog(spark, path)
     df1 = spark.createDataFrame(
         [("ns1", "a", _ts(1), "v1"), ("ns1", "b", _ts(2), "v2")],
         "ns string, key string, ts timestamp, value string",
@@ -432,7 +423,7 @@ def test_clone_excludes_uncommitted(spark, tmp_base, backend):
 
     # simulate an in-flight writer: claim + data landed, NO commit
     base = store.max_seqno()
-    version, _ = store._claim()
+    version, _ = store._claim(store.log_dir)
     orphan = spark.createDataFrame(
         [("ns1", "c", _ts(3), "torn")],
         "ns string, key string, ts timestamp, value string",
@@ -442,7 +433,7 @@ def test_clone_excludes_uncommitted(spark, tmp_base, backend):
     )
     store._write_log_batch(batch, version)
 
-    restored = store.clone_to(str(tmp_base / f"clone_dst_{backend.__name__}"))
+    restored = store.clone_to(str(tmp_base / "clone_dst"))
     rows = {(r["key"], r["value"]) for r in restored.latest().collect()}
     assert rows == {("a", "v1"), ("b", "v2")}, "torn row leaked into backup"
     assert restored.max_seqno() == 2
@@ -457,12 +448,12 @@ def test_clone_excludes_uncommitted(spark, tmp_base, backend):
     assert store.max_seqno() == 2
 
 
-def test_append_once_idempotence(spark, tmp_base, backend):
+def test_append_once_idempotence(spark, tmp_base):
     """append_once: same batch_id is a no-op returning the recorded
     high-water; distinct ids append normally; the tag survives a reader
     re-open (a NEW store object over the same path still dedups)."""
-    path = str(tmp_base / f"once_store_{backend.__name__}")
-    store = backend(spark, path)
+    path = str(tmp_base / "once_store")
+    store = MarasaLog(spark, path)
     df = spark.createDataFrame(
         [("ns1", "a", _ts(1), "v1"), ("ns1", "b", _ts(2), "v2")],
         "ns string, key string, ts timestamp, value string",
@@ -471,12 +462,12 @@ def test_append_once_idempotence(spark, tmp_base, backend):
     assert store.append_once(df, "batch-1") == 2      # resubmit: no-op
     assert store.changes(0).count() == 2
     assert store.append_once(df, "batch-2") == 4      # new id: appends
-    reopened = backend(spark, path)
+    reopened = MarasaLog(spark, path)
     assert reopened.append_once(df, "batch-1") == 2   # tag is durable
     assert reopened.changes(0).count() == 4
 
 
-def test_append_once_inflight_claim(spark, tmp_base, backend, monkeypatch):
+def test_append_once_inflight_claim(spark, tmp_base, monkeypatch):
     """A producer that died holding the version claim: a resubmit of its
     batch_id retries, then surfaces LogWriteConflict — never
     double-appends, and nothing of the dead attempt is visible.
@@ -485,14 +476,14 @@ def test_append_once_inflight_claim(spark, tmp_base, backend, monkeypatch):
     import marasa_spark.log as log_mod
 
     monkeypatch.setattr(log_mod.time, "sleep", lambda _s: None)
-    path = str(tmp_base / f"once_inflight_{backend.__name__}")
-    store = backend(spark, path)
+    path = str(tmp_base / "once_inflight")
+    store = MarasaLog(spark, path)
     df = spark.createDataFrame(
         [("ns1", "a", _ts(1), "v1")],
         "ns string, key string, ts timestamp, value string",
     )
     # simulate a crashed owner: claim + data landed, commit never written
-    version, _ = store._claim()
+    version, _ = store._claim(store.log_dir)
     orphan = store._number_batch(df, 0).withColumn("segment", F.lit(0).cast("long"))
     store._write_log_batch(orphan, version)
 
@@ -506,13 +497,13 @@ def test_append_once_inflight_claim(spark, tmp_base, backend, monkeypatch):
     assert store.changes(0).count() == 1
 
 
-def test_tombstone_lifecycle(spark, tmp_base, backend):
+def test_tombstone_lifecycle(spark, tmp_base):
     """The delete verb's full contract: latest hides a tombstoned key,
     asof BEFORE the tombstone still shows it (history exact), the CDC
     feed carries the tombstone itself (consumers learn about forgets),
     a later put revives the key, and compaction physically drops
     tombstoned keys from the snapshot files."""
-    store = backend(spark, str(tmp_base / f"tomb{next(_counter)}"))
+    store = MarasaLog(spark, str(tmp_base / f"tomb{next(_counter)}"))
     s1 = store.put("ns", a="1", b="2")
     store.delete("ns", ["a"])
 
@@ -529,7 +520,8 @@ def test_tombstone_lifecycle(spark, tmp_base, backend):
 
     # compaction drops the key from the PHYSICAL snapshot
     s_compact = store.compact()
-    snap = store._read_table(f"{store.snap_dir}/upto={s_compact}")
+    assert store._latest_snapshot_seq() == s_compact
+    snap = store._read_table(store.snap_dir)
     assert snap.filter(F.col("key") == "a").count() == 0
     assert {r["key"] for r in store.latest("ns").collect()} == {"b"}
 
@@ -555,11 +547,11 @@ def test_tombstone_lifecycle(spark, tmp_base, backend):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(pre=batch, racing=batch)
-def test_compact_racing_append_interleaving(spark, tmp_base, backend, pre, racing):
+def test_compact_racing_append_interleaving(spark, tmp_base, pre, racing):
     """The snapshot-writer-vs-appender interleaving (round-8 verdict #6):
     compact() reads high-water N, and BEFORE its snapshot materializes an
-    OCC append commits N+1..M. The lazily-evaluated snapshot labeled
-    upto=N may then fold in rows > N — the property pins why that is
+    OCC append commits N+1..M. The lazily-evaluated snapshot committed
+    with high-water N may then fold in rows > N — the property pins why that is
     safe: latest() folds snapshot ∪ tail(>N) by max seqno (duplicates
     collapse idempotently), while asof()/changes() read the RAW retained
     log, never the snapshot, so time travel stays exact. Replay must
@@ -567,8 +559,8 @@ def test_compact_racing_append_interleaving(spark, tmp_base, backend, pre, racin
     every file the journal adds exists on disk."""
     import os
 
-    path = str(tmp_base / f"race_{next(_counter)}_{backend.__name__}")
-    store = backend(spark, path)
+    path = str(tmp_base / f"race_{next(_counter)}")
+    store = MarasaLog(spark, path)
     serial: list[tuple[str, str, str]] = []
 
     def to_df(rows, tag):
@@ -598,10 +590,10 @@ def test_compact_racing_append_interleaving(spark, tmp_base, backend, pre, racin
     # a concurrent writer's commit would land)
     orig_write = store._write_snapshot
 
-    def racing_write(state, upto):
-        racer = backend(spark, path)
+    def racing_write(state, version):
+        racer = MarasaLog(spark, path)
         racer.append(to_df(racing, "race"))
-        orig_write(state, upto)
+        return orig_write(state, version)
 
     store._write_snapshot = racing_write
     try:
@@ -611,7 +603,7 @@ def test_compact_racing_append_interleaving(spark, tmp_base, backend, pre, racin
     serial += serial_order(racing, "race")
     assert hw == n_pre  # compact labeled the snapshot at the pre-race water
 
-    reader = backend(spark, path)
+    reader = MarasaLog(spark, path)
     # 1. latest == serial last-write-wins over ALL committed rows
     want_latest = {}
     for ns, k, v in serial:
@@ -634,9 +626,7 @@ def test_compact_racing_append_interleaving(spark, tmp_base, backend, pre, racin
     assert [r["seqno"] for r in rows] == list(range(1, len(serial) + 1))
     assert [(r["ns"], r["key"], r["value"]) for r in rows] == serial
     # 4. no dangling add: every live file the journal resolves exists
-    for table in [store.log_dir] + [
-        f"{store.snap_dir}/{n}" for n in os.listdir(store.snap_dir)
-    ]:
+    for table in (store.log_dir, store.snap_dir):
         for rel in reader._journal(table).adds:
             assert os.path.exists(f"{table}/{rel}"), f"dangling add {rel}"
     # 5. a follow-up compact at the new high-water restores the invariant
@@ -648,10 +638,11 @@ def test_compact_racing_append_interleaving(spark, tmp_base, backend, pre, racin
 # ---------------------------------------------------------------------------
 # Torn-commit states: a writer can die at ANY point between producing data
 # files and making them reader-visible through its commit (and a compact
-# between its snapshot data job and the snapshot's commit). Inject each torn
-# state directly into the store's directories and assert the reader sees
-# exactly the pre-commit state — never a partial commit — and that recovery
-# returns the store to full health.
+# anywhere between its snapshot claim and the snapshot's commit). Inject each
+# torn state directly into the store's directories and assert the reader
+# sees exactly the pre-commit state — never a partial commit — and that
+# recovery returns the store to full health: the next append and compact
+# succeed.
 # ---------------------------------------------------------------------------
 
 _TORN = [
@@ -661,9 +652,16 @@ _TORN = [
     # crash inside _commit's tmp write: a torn hidden .tmp commit attempt
     # (final commit files are hard-linked whole, so only tmp can tear)
     "torn_tmp_commit",
-    # a snapshot table whose data landed but whose commit never did:
-    # selected by name it would hide rows, so it must read as absent
+    # a snapshot sub-directory with neither claim nor commit (a recovery
+    # killed between releasing the claim and sweeping the directory):
+    # selected by directory it would hide rows, so it must read as absent
     "snapshot_no_commit",
+    # a compact that died right after claiming the snapshot table's next
+    # version: claim held, no data
+    "compact_dead_claim",
+    # a compact that died between its fold data job and its commit: claim
+    # held, the version's sub-directory written, no add/remove/txn
+    "compact_data_no_commit",
 ]
 
 
@@ -673,15 +671,17 @@ _TORN = [
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(
-    injections=st.lists(st.sampled_from(_TORN), min_size=1, max_size=3, unique=True),
+    injections=st.lists(
+        st.sampled_from(_TORN), min_size=1, max_size=len(_TORN), unique=True
+    ),
     n_pre=st.integers(1, 3),
 )
-def test_torn_commit_states_are_invisible(spark, tmp_base, backend, injections, n_pre):
+def test_torn_commit_states_are_invisible(spark, tmp_base, injections, n_pre):
     import os
     import uuid
 
     path = str(tmp_base / f"torn_{uuid.uuid4().hex}")
-    store = backend(spark, path)
+    store = MarasaLog(spark, path)
     committed = []
     for i in range(n_pre):
         committed.append(("n", f"k{i}", f"v{i}"))
@@ -693,12 +693,15 @@ def test_torn_commit_states_are_invisible(spark, tmp_base, backend, injections, 
             )
             == i + 1
         )
+        if i == 0:  # a committed snapshot the torn compacts would supersede
+            assert store.compact() == 1
     want = {k: v for _ns, k, v in committed}
+    snap_v = store._journal(store.snap_dir).version + 1  # next compact's version
 
-    crashed_claim = False
+    crashed_claim = snap_claim = False
     for kind in injections:
         if kind == "data_no_commit":
-            version, _ = store._claim()
+            version, _ = store._claim(store.log_dir)
             crashed_claim = True
             orphan = store._number_batch(
                 spark.createDataFrame(
@@ -718,20 +721,28 @@ def test_torn_commit_states_are_invisible(spark, tmp_base, backend, injections, 
             with open(f"{dlog}/.00000000000000000099.json.dead.tmp", "w") as f:
                 f.write('{"add": {"path": "truncat')  # torn mid-write
         elif kind == "snapshot_no_commit":
-            staged = f"{store.snap_dir}/upto={n_pre}"
+            staged = f"{store.snap_dir}/v{snap_v:020d}"
             os.makedirs(staged, exist_ok=True)
             with open(f"{staged}/part-00000.parquet", "wb") as f:
                 f.write(b"PAR1 not really parquet")
+        else:  # compact_dead_claim / compact_data_no_commit
+            if not snap_claim:
+                assert store._claim(store.snap_dir)[0] == snap_v
+                snap_claim = True
+            if kind == "compact_data_no_commit":
+                torn = store.latest().withColumn("value", F.lit("TORN"))
+                store._write_snapshot(torn, snap_v)
 
     # ATOMICITY: every read path sees exactly the committed prefix
-    reader = backend(spark, path)
+    reader = MarasaLog(spark, path)
     assert {r["key"]: r["value"] for r in reader.latest().collect()} == want
     assert reader.max_seqno() == n_pre
     assert reader.changes(0).count() == n_pre
     assert reader.get("n", "k0") == "v0"
+    assert reader._latest_snapshot_seq() == 1
 
     # RECOVERY: claims released, torn files swept, invariants restored
-    assert store.recover_claims() == (1 if crashed_claim else 0)
+    assert store.recover_claims() == crashed_claim + snap_claim
     live = {f"{store.log_dir}/{rel}" for rel in store._journal(store.log_dir).adds}
     on_disk = {
         os.path.join(root, f)
@@ -741,11 +752,13 @@ def test_torn_commit_states_are_invisible(spark, tmp_base, backend, injections, 
         if not f.startswith(("_", "."))
     }
     assert on_disk == live, f"untracked files survived recovery: {on_disk - live}"
-    assert not [
-        n for n in os.listdir(f"{store.log_dir}/_delta_log") if n.startswith(".")
-    ], "claim or torn commit attempt survived recovery"
-    if os.path.isdir(store.snap_dir):
-        assert not os.listdir(store.snap_dir), "uncommitted snapshot survived"
+    for table in (store.log_dir, store.snap_dir):
+        assert not [
+            n for n in os.listdir(f"{table}/_delta_log") if n.startswith(".")
+        ], "claim or torn commit attempt survived recovery"
+    assert sorted(n for n in os.listdir(store.snap_dir) if n != "_delta_log") == [
+        f"v{v:020d}" for v in range(snap_v)
+    ], "uncommitted snapshot survived, or a committed one moved"
 
     # the store is fully writable and consistent afterwards
     assert (
@@ -757,4 +770,6 @@ def test_torn_commit_states_are_invisible(spark, tmp_base, backend, injections, 
         == n_pre + 1
     )
     want["knew"] = "vnew"
+    assert store.compact() == n_pre + 1
+    assert reader._latest_snapshot_seq() == n_pre + 1
     assert {r["key"]: r["value"] for r in reader.latest().collect()} == want

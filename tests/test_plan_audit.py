@@ -79,36 +79,6 @@ def test_codegen_covers_hot_paths(spark):
         assert "*(" in plan, f"{qid}: no WholeStageCodegen spans in plan"
 
 
-def test_bucketed_join_is_exchange_free(spark):
-    """The write-once/join-many bucketing path: same-bucketed fact tables
-    join with zero Exchange (the 100 TB repeated-join strategy)."""
-    from marasa_spark.catalog import load_table
-    from marasa_spark.ops.bucketing import bucketed_join, write_bucketed
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-    try:
-        write_bucketed(
-            load_table(spark, SF, "orders").select("o_orderkey", "o_totalprice"),
-            "bkt_orders",
-            "o_orderkey",
-        )
-        write_bucketed(
-            load_table(spark, SF, "lineitem")
-            .select("l_orderkey", "l_quantity")
-            .withColumnRenamed("l_orderkey", "o_orderkey"),
-            "bkt_lineitem",
-            "o_orderkey",
-        )
-        joined = bucketed_join(spark, "bkt_orders", "bkt_lineitem", "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan[:1500]}"
-        assert joined.count() == load_table(spark, SF, "lineitem").count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-
-
 def test_lsh_band_shuffle_carries_no_token_payload(spark):
     """minhash_lsh_pairs' bands× amplified shuffles (the (band, bucket)
     exchange feeding the bucket self-join) must carry only the fixed-width

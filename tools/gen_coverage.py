@@ -126,7 +126,7 @@ finds no history for any of these):
 
 FOOTER = """
 Supporting operator library (used by the entries above, each with its
-own tests): `ops/asof.py` (window + merge_asof scale path),
+own tests): `ops/asof.py` (band-join window + union-sort scale path),
 `ops/dedup.py` (exact, Jaccard, MinHash-LSH, SimHash, shingles),
 `ops/similarity.py` (cosine top-k, IVF ANN, random-hyperplane LSH,
 Lloyd's k-means, kNN vote), `ops/text.py`
