@@ -59,11 +59,11 @@ Scale posture (100 TB):
   real scale the snapshot write would bucket by key so the tail-merge
   window co-locates without a shuffle;
 * seqno assignment reads the high-water from the journal and numbers only
-  the incoming batch — via the f3 two-phase range-partition +
-  broadcast-offset shape, so even a bulk-load-sized batch never funnels
-  through a single-partition window. Writers that race from the same
-  journal version get :class:`LogWriteConflict` (:meth:`append_retrying`
-  serializes them);
+  the incoming batch — via :func:`marasa_spark.ops.skew.global_prefix`
+  (range partitions + broadcast offsets), so even a bulk-load-sized batch
+  never funnels through a single-partition window. Writers that race from
+  the same journal version get :class:`LogWriteConflict`
+  (:meth:`append_retrying` serializes them);
 * no driver-side ``collect()`` anywhere in the data path.
 """
 
@@ -80,6 +80,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marasa_spark.ops.skew import global_prefix
 from marasa_spark.session import ensure_session_configs
 
 
@@ -339,15 +340,11 @@ class MarasaLog:
         Raises :class:`LogWriteConflict` when another writer holds the
         next journal version (see :meth:`append_retrying`).
 
-        Seqno assignment is the f3_global_index two-phase shape, NOT a
-        global ``row_number() OVER (ORDER BY ...)``: a bare global window
-        funnels the whole batch through one task, which serializes a bulk
-        load. Instead (1) range-repartition the batch on the sort key —
-        balanced, sampled bounds; (2) per-partition counts → exclusive
-        running offsets (one tiny N-row window, broadcast back); (3)
-        seqno = base + offset + local row_number within the partition.
-        Every phase is parallel; the only global object is the N-row
-        offset table. Produces the identical contiguous numbering.
+        Seqno = base + 1 + the row's rank from
+        :func:`marasa_spark.ops.skew.global_prefix` (range partitions and
+        a broadcast per-partition offset table), NOT a global
+        ``row_number() OVER (ORDER BY ...)``, whose single task would
+        serialize a bulk load. Same contiguous numbering.
         """
         return self._append(records)
 
@@ -399,30 +396,17 @@ class MarasaLog:
         Audited by tests/test_plan_audit.py (no single-partition window)."""
         if "ts" not in records.columns:
             records = records.withColumn("ts", F.current_timestamp())
-        sort_cols = [F.col("ns"), F.col("key"), F.col("ts"), F.col("value")]
         nparts = max(1, min(32, records.rdd.getNumPartitions()))
-        ranged = (
-            records.select(
-                F.col("ns").cast("string"),
-                F.col("key").cast("string"),
-                F.col("ts").cast("timestamp"),
-                F.col("value").cast("string"),
-            )
-            .repartitionByRange(nparts, *sort_cols)
-            .withColumn("_pid", F.spark_partition_id())
+        typed = records.select(
+            F.col("ns").cast("string"),
+            F.col("key").cast("string"),
+            F.col("ts").cast("timestamp"),
+            F.col("value").cast("string"),
         )
-        counts = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-        wcum = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-        offsets = counts.withColumn(
-            "_offset", F.coalesce(F.sum("_n").over(wcum), F.lit(0))
-        ).select("_pid", "_offset")
-        wlocal = Window.partitionBy("_pid").orderBy(*sort_cols)
-        return ranged.join(F.broadcast(offsets), "_pid").select(
+        return global_prefix(typed, ["ns", "key", "ts", "value"], nparts).select(
             "ns",
             "key",
-            (F.col("_offset") + F.row_number().over(wlocal) + F.lit(base))
-            .cast("long")
-            .alias("seqno"),
+            (F.col("_before") + F.lit(base + 1)).cast("long").alias("seqno"),
             "ts",
             "value",
         )

@@ -284,10 +284,7 @@ def minhash_lsh_pairs(
     # a 16 s sf0.1 cold build. Lineage-cut tradeoff documented in
     # connected_components; disk-backed at scale like any shuffle.
     if cut_lineage:
-        try:
-            grp = grp.localCheckpoint(eager=True)
-        except Exception:
-            grp.cache().count()
+        grp = grp.localCheckpoint(eager=True)
     toks_df = grp.select(F.col("gid").alias("doc"), "toks", "gn")
     # The signature is wrapped in the nondeterministic no-op barrier (the
     # `inter` pattern below) so CollapseProject must keep it a materialized
@@ -330,10 +327,7 @@ def minhash_lsh_pairs(
     # pass re-executes per branch. One row per SET (~(8·bands+28) B), a
     # bands× smaller checkpoint than the exploded predecessor.
     if cut_lineage:
-        try:
-            per_set = per_set.localCheckpoint(eager=True)
-        except Exception:
-            per_set.cache().count()
+        per_set = per_set.localCheckpoint(eager=True)
     # Cap on the DOC count (sum of collapsed group sizes), byte-identical
     # to the uncollapsed per-doc count(*): a (band, bucket) cell is capped
     # iff its doc total exceeds max_bucket_size. The groupBy partial-
@@ -599,10 +593,7 @@ def minhash_lsh_pairs(
     # checkpoint is rep-pair-sized (thin doc_a/doc_b/jaccard rows), far
     # below the expanded output. Same recoverability tradeoff as above.
     if cut_lineage:
-        try:
-            rep_pairs = rep_pairs.localCheckpoint(eager=True)
-        except Exception:
-            rep_pairs.cache().count()
+        rep_pairs = rep_pairs.localCheckpoint(eager=True)
     # Expand rep-level pairs back to doc pairs by attaching each side's
     # member-doc ARRAY off the set-level checkpoint and exploding (round
     # 11): the previous per-doc mapping join broadcast a corpus-sized
@@ -675,10 +666,7 @@ def connected_components(
     # every propagation round below joins against `edges` — without this
     # checkpoint each round re-executes that whole lineage (measured: 21
     # min instead of ~1 at sf0.1 for k25).
-    try:
-        edges = edges.localCheckpoint(eager=True)
-    except Exception:
-        edges.cache().count()
+    edges = edges.localCheckpoint(eager=True)
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "cluster", F.col("node")
     )
@@ -698,10 +686,7 @@ def connected_components(
                 (F.col("nmin") < F.col("cluster")).alias("_changed"),
             )
         )
-        try:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        except Exception:
-            new_labels.cache().count()
+        new_labels = new_labels.localCheckpoint(eager=True)
         changed = new_labels.filter(F.col("_changed")).count()
         labels = new_labels.drop("_changed")
         if changed == 0:
@@ -748,10 +733,7 @@ def connected_components_star(
     # cut the pair-source lineage before iterating (see
     # connected_components): round 1's sym/large-star would otherwise
     # re-execute the expensive candidate/verify plan twice.
-    try:
-        e = e.localCheckpoint(eager=True)
-    except Exception:
-        e.cache().count()
+    e = e.localCheckpoint(eager=True)
     prev: tuple[int, int] | None = None
     for _ in range(max_iters):
         # large-star over the symmetrized neighborhood
@@ -776,10 +758,7 @@ def connected_components_star(
             .unionAll(mins2.select(F.col("u"), F.col("m").alias("v")))
             .distinct()
         )
-        try:
-            ss = ss.localCheckpoint(eager=True)
-        except Exception:
-            ss.cache().count()
+        ss = ss.localCheckpoint(eager=True)
         # order-insensitive, overflow-free (ANSI mode) edge-set fingerprint
         probe = ss.agg(
             F.count(F.lit(1)).alias("n"),
@@ -877,24 +856,3 @@ def simhash_table(
             )
         )
     return agg.select(F.col("_sid").alias(id_col), out.alias("simhash"))
-
-
-def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance (reference O(n²) compare;
-    scale path buckets on 16-bit blocks first — a pair within distance d
-    shares at least one of d+1 blocks exactly)."""
-    sigs = df.select(
-        F.col(id_col).alias("doc"), simhash64(tokens(F.col(text_col))).alias("sh")
-    )
-    a, b = sigs.alias("a"), sigs.alias("b")
-    return (
-        a.join(b, F.col("a.doc") < F.col("b.doc"))
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )

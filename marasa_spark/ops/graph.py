@@ -35,19 +35,13 @@ def pagerank(edges: DataFrame, iters: int = 5, damping: float = 0.85) -> DataFra
     the plan stays flat at any iteration count; no driver-side data moves
     at all (the loop is fixed-length, not convergence-tested)."""
     e = edges.unionAll(edges.selectExpr("dst AS src", "src AS dst"))
-    try:
-        e = e.localCheckpoint(eager=True)
-    except Exception:
-        e.cache().count()
+    e = e.localCheckpoint(eager=True)
     deg = (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).cast("double").alias("deg"))
         .withColumnRenamed("src", "node")
     )
-    try:
-        deg = deg.localCheckpoint(eager=True)
-    except Exception:
-        deg.cache().count()
+    deg = deg.localCheckpoint(eager=True)
     nn = deg.agg(F.count(F.lit(1)).cast("double").alias("n"))
     ranks = deg.crossJoin(F.broadcast(nn)).select(
         "node", "deg", r2(F.lit(1.0) / F.col("n"), 8).alias("r")
@@ -69,8 +63,5 @@ def pagerank(edges: DataFrame, iters: int = 5, damping: float = 0.85) -> DataFra
                 r2(base / F.col("n") + F.lit(damping) * F.col("c"), 8).alias("r"),
             )
         )
-        try:
-            ranks = ranks.localCheckpoint(eager=True)
-        except Exception:
-            ranks.cache().count()
+        ranks = ranks.localCheckpoint(eager=True)
     return ranks

@@ -202,21 +202,6 @@ def _rh_signs(num_bits: int, dim: int, seed: int) -> list[list[float]]:
     return signs
 
 
-def rh_signature_bits(vec: Column, signs: list[list[float]]) -> list[Column]:
-    """One boolean-as-int column per hyperplane: bit_b = [⟨signs_b, v⟩ > 0].
-    Pure zip_with/aggregate — JVM-side, one pass over the array per bit."""
-    bits = []
-    for row in signs:
-        plane = F.array(*[F.lit(s) for s in row])
-        proj = F.aggregate(
-            F.zip_with(vec, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj > 0, F.lit(1)).otherwise(F.lit(0)))
-    return bits
-
-
 def rh_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -352,10 +337,7 @@ def rh_lsh_pairs(
         # capped + withkb (both self-join sides, exchange-reused) consume
         # this; without the cut the signature projection (the dominant
         # num_bits×dim fold over the corpus) re-executes per branch
-        try:
-            per_vec = per_vec.localCheckpoint(eager=True)
-        except Exception:
-            per_vec.cache().count()
+        per_vec = per_vec.localCheckpoint(eager=True)
     enc = lambda band, bucket: F.shiftleft(band.cast("long"), 32).bitwiseOR(  # noqa: E731
         bucket.cast("long").bitwiseAND(F.lit(0xFFFFFFFF))
     )

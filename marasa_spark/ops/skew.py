@@ -9,11 +9,16 @@ automatically; these explicit tools cover the cases AQE can't:
   aggregate (sum/count/min/max, and avg via sum+count).
 * ``salted_join_hot_keys`` — replicate the small side per salt for the hot
   keys only; non-hot keys join normally (the classic split-union plan).
+* ``global_prefix`` — a global rank / running sum without the
+  single-partition window: range partitions, a tiny per-partition offset
+  table broadcast back, then partition-local windows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -72,3 +77,46 @@ def salted_join_hot_keys(
 
     cold = big.filter(~is_hot).join(small.filter(~is_hot), on)
     return hot.unionByName(cold)
+
+
+def global_prefix(
+    df: DataFrame,
+    order: Sequence[str | Column],
+    nparts: int,
+    by: Sequence[str] = (),
+    weight: str | None = None,
+) -> DataFrame:
+    """``df`` plus a long column ``_before``: the rows strictly before each
+    row in ``(by, order)`` order — their count, or with ``weight`` the sum
+    of that (integral) column, nulls as 0 — restarting per ``by`` group.
+
+    A bare ``row_number()``/``sum() OVER (ORDER BY ...)`` funnels every
+    row through one task. This is the two-phase plan instead, every phase
+    parallel: (1) range-repartition into ``nparts`` on ``(by, order)``
+    (Spark's sampled global-sort bounds) and tag rows with ``_pid``;
+    (2) per-``(by, _pid)`` totals → exclusive running offsets over that
+    tiny table, broadcast back; ``_before`` = offset + the partition-local
+    ``row_number() - 1`` or exclusive running sum. The only global object
+    is the offset table. ``order`` must be total within a ``by`` group
+    (end it with a unique key), or ties are numbered arbitrarily."""
+    ranged = df.repartitionByRange(nparts, *by, *order).withColumn(
+        "_pid", F.spark_partition_id()
+    )
+    total = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    before = Window.unboundedPreceding, -1
+    wcum = Window.partitionBy(*by).orderBy("_pid").rowsBetween(*before)
+    offsets = (
+        ranged.groupBy(*by, "_pid")
+        .agg(total.alias("_n"))
+        .select(
+            *by, "_pid", F.coalesce(F.sum("_n").over(wcum), F.lit(0)).alias("_offset")
+        )
+    )
+    wlocal = Window.partitionBy(*by, "_pid").orderBy(*order)
+    if weight is None:
+        local = F.row_number().over(wlocal) - 1
+    else:
+        local = F.coalesce(F.sum(weight).over(wlocal.rowsBetween(*before)), F.lit(0))
+    return ranged.join(F.broadcast(offsets), [*by, "_pid"]).select(
+        *df.columns, (F.col("_offset") + local).cast("long").alias("_before")
+    )

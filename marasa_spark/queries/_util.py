@@ -21,7 +21,11 @@ import shutil
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-SCRATCH = "/root/repo/_scratch"
+# <repo>/_scratch, next to the package (listed in .gitignore)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "_scratch",
+)
 
 _swept_this_process = False
 

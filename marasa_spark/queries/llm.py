@@ -19,6 +19,7 @@ from marasa_spark.ops import dedup as D
 from marasa_spark.ops import multimodal as M
 from marasa_spark.ops import similarity as S
 from marasa_spark.ops import text as T
+from marasa_spark.ops.skew import global_prefix
 from marasa_spark.queries._util import fresh_scratch, r2, r2sql
 from marasa_spark.registry import register
 
@@ -1521,32 +1522,15 @@ def k36_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-sequence packing: concatenate the corpus in doc_id order
     and split at a fixed token budget (concat-and-chunk, the standard
     pretraining layout) — each document's sequence is floor(global token
-    offset / budget). The global prefix sum is NOT a single-partition
-    window: same two-phase shape as f3_global_index — range-repartition by
-    doc_id, per-partition token subtotals (one tiny row each) → exclusive
-    offsets broadcast back, then a partition-local running sum. Every
-    phase is parallel; the only serial object is the #partitions-row
-    offset table, so the layout holds at 100 TB."""
-    nparts = 16
+    offset / budget). The global prefix sum is
+    :func:`~marasa_spark.ops.skew.global_prefix`'s two-phase running sum,
+    NOT a single-partition window, so the layout holds at 100 TB."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tok")
     )
-    ranged = docs.repartitionByRange(nparts, "doc_id").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    counts = ranged.groupBy("pid").agg(F.sum("n_tok").alias("part_tok"))
-    wcum = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "off", F.coalesce(F.sum("part_tok").over(wcum), F.lit(0))
-    ).select("pid", "off")
-    wloc = W.partitionBy("pid").orderBy("doc_id").rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    pos = ranged.join(F.broadcast(offsets), "pid").withColumn(
-        "start_off", F.col("off") + F.sum("n_tok").over(wloc) - F.col("n_tok")
-    )
+    pos = global_prefix(docs, ["doc_id"], 16, weight="n_tok")
     seq = F.floor(
-        F.col("start_off") / F.lit(float(_K36_BUDGET))
+        F.col("_before") / F.lit(float(_K36_BUDGET))
     ).alias("seq_id")
     return pos.groupBy(seq).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2346,10 +2330,7 @@ def k52_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
     )
     asg = S.ivf_assign(corpus, centroids)
-    try:
-        asg = asg.localCheckpoint(eager=True)
-    except Exception:
-        asg.cache().count()
+    asg = asg.localCheckpoint(eager=True)
     an = asg.withColumn("_nrm", S.norm(F.col("c_vec")))
     x = an.select(
         F.col("c_id").alias("vec_id"), F.col("c_vec").alias("xv"), "cluster",
@@ -3453,30 +3434,20 @@ def k66_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     gives every shard one big-half and one small-half doc), so shard
     byte-loads land within a fraction of a percent of each other instead
     of the size-skew a naive hash or round-robin-by-id deal leaves. The
-    global rank uses f3's two-phase shape (range repartition on the sort
-    key -> 16-row per-partition offset table broadcast back -> local
-    row_number), NOT a single-partition window — the deal stays fully
-    parallel at 100 TB, and the snake arithmetic is stateless per row.
-    All-integer arithmetic: both engines agree bit-for-bit."""
+    global rank is :func:`~marasa_spark.ops.skew.global_prefix`'s, NOT a
+    single-partition window — the deal stays fully parallel at 100 TB,
+    and the snake arithmetic is stateless per row. All-integer
+    arithmetic: both engines agree bit-for-bit."""
     n_shards = 16
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    ranged = d.repartitionByRange(
-        n_shards, F.col("n_chars").desc(), F.col("doc_id")
-    ).withColumn("pid", F.spark_partition_id())
-    counts = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
-    wcum = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "offset", F.coalesce(F.sum("n").over(wcum), F.lit(0))
-    ).select("pid", "offset")
-    wlocal = W.partitionBy("pid").orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-    r = F.col("offset") + F.row_number().over(wlocal) - 1
+    ranked = global_prefix(d, [F.col("n_chars").desc(), F.col("doc_id")], n_shards)
+    r = F.col("_before")
     shard = F.when(
         F.floor(r.cast("double") / F.lit(16.0)).cast("long") % 2 == 0,
         r % n_shards,
     ).otherwise(n_shards - 1 - (r % n_shards))
     return (
-        ranged.join(F.broadcast(offsets), "pid")
-        .select(shard.cast("long").alias("shard"), "n_chars")
+        ranked.select(shard.cast("long").alias("shard"), "n_chars")
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -3676,15 +3647,12 @@ def k69_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     (except at the modulus wraparound) preserves the order — epoch 1
     would replay epoch 0's sequence; the behavioral test caught exactly
     that in the first draft. h = id*(P + e*C) mod prime gives
-    decorrelated permutations. Positions come from f3's two-phase
-    rank GENERALIZED to partitioned-global ranks: range-repartition on
-    (epoch, hash), per-(epoch, partition) counts, running offsets per
-    epoch (a window over the tiny counts table), local row_number —
-    never a one-task-per-epoch window, which is what a naive
-    PARTITION BY epoch ORDER BY hash would plan at 100 TB. Epoch
+    decorrelated permutations. Positions are
+    :func:`~marasa_spark.ops.skew.global_prefix` ranks per epoch
+    (``by=["epoch"]``) — never a one-task-per-epoch window, which is what
+    a naive PARTITION BY epoch ORDER BY hash would plan at 100 TB. Epoch
     decorrelation (almost no doc keeps its position across epochs) is
     pinned behaviorally in tests/test_jl_projection.py."""
-    nparts = 16
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     e = spark.range(2).select(F.col("id").cast("int").alias("epoch"))
     x = d.crossJoin(F.broadcast(e)).select(
@@ -3695,26 +3663,8 @@ def k69_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             % F.lit(1000000007)
         ).alias("h"),
     )
-    ranged = x.repartitionByRange(nparts, "epoch", "h", "doc_id").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    counts = ranged.groupBy("epoch", "pid").agg(F.count(F.lit(1)).alias("n"))
-    wcum = (
-        W.partitionBy("epoch")
-        .orderBy("pid")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "offset", F.coalesce(F.sum("n").over(wcum), F.lit(0))
-    ).select("epoch", "pid", "offset")
-    wlocal = W.partitionBy("epoch", "pid").orderBy("h", "doc_id")
-    return (
-        ranged.join(F.broadcast(offsets), ["epoch", "pid"])
-        .select(
-            "epoch",
-            "doc_id",
-            (F.col("offset") + F.row_number().over(wlocal)).cast("long").alias("pos"),
-        )
+    return global_prefix(x, ["h", "doc_id"], 16, by=["epoch"]).select(
+        "epoch", "doc_id", (F.col("_before") + 1).alias("pos")
     )
 
 
@@ -3752,39 +3702,17 @@ def k70_prefix_sum_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     the budget, no bin search, reproducible from the order alone). The
     interesting part at 100 TB is the RUNNING SUM: a bare
     ROWS UNBOUNDED PRECEDING window over a global order is one task, so
-    this generalizes f3's two-phase rank to a two-phase PREFIX SUM —
-    range-repartition on the order key, per-partition char totals, an
-    exclusive running offset over the tiny per-partition table broadcast
-    back, then offset + local exclusive cumsum inside each partition.
-    Same movement budget as a global sort; the only single-partition
-    object is the 16-row offset table. Batch-size discipline is pinned
-    behaviorally in tests/test_jl_projection.py."""
-    nparts = 16
+    chars_before is :func:`~marasa_spark.ops.skew.global_prefix`'s
+    two-phase prefix sum — same movement budget as a global sort.
+    Batch-size discipline is pinned behaviorally in
+    tests/test_jl_projection.py."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "n_chars",
         ((F.col("doc_id") * F.lit(2654435761)) % F.lit(1000000007)).alias("h"),
     )
-    ranged = d.repartitionByRange(nparts, "h", "doc_id").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    psums = ranged.groupBy("pid").agg(F.sum("n_chars").alias("s"))
-    wcum = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = psums.withColumn(
-        "offset", F.coalesce(F.sum("s").over(wcum), F.lit(0))
-    ).select("pid", "offset")
-    wlocal = (
-        W.partitionBy("pid")
-        .orderBy("h", "doc_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    cum = ranged.join(F.broadcast(offsets), "pid").withColumn(
-        "chars_before",
-        (
-            F.col("offset") + F.coalesce(F.sum("n_chars").over(wlocal), F.lit(0))
-        ).cast("long"),
-    )
-    batch = F.floor(F.col("chars_before").cast("double") / F.lit(20000.0)).cast(
+    cum = global_prefix(d, ["h", "doc_id"], 16, weight="n_chars")
+    batch = F.floor(F.col("_before").cast("double") / F.lit(20000.0)).cast(
         "long"
     )
     return (
@@ -4051,10 +3979,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, iters: int):
             .limit(1)
             .select(F.lit(t).alias("it"), "p1", "p2", "cnt")
         )
-        try:
-            top1 = top1.localCheckpoint(eager=True)
-        except Exception:
-            top1.cache().count()
+        top1 = top1.localCheckpoint(eager=True)
         if not top1.take(1):
             # No bigrams left (tiny or fully-merged vocab): without this
             # guard the crossJoin against an EMPTY top1 would silently
@@ -4069,10 +3994,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, iters: int):
             "freq",
             "replace(s, ' ' || p1 || '  ' || p2 || ' ', ' ' || p1 || p2 || ' ') AS s",
         )
-        try:
-            vocab = vocab.localCheckpoint(eager=True)
-        except Exception:
-            vocab.cache().count()
+        vocab = vocab.localCheckpoint(eager=True)
     if not merges:
         raise ValueError("_bpe_train: corpus produced no symbol bigrams at all")
     out = merges[0]

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from marasa_spark.catalog import load_table
+from marasa_spark.ops.skew import global_prefix
 from marasa_spark.queries._util import r2, r2sql
 from marasa_spark.registry import register
 
@@ -126,17 +127,11 @@ WHERE o_totalprice > 450000
 @register("f1_sort_multi", oracle=F1_ORACLE, group="F")
 def f1_sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key sort with explicit NULLS LAST; rn materializes the order so
-    the order-insensitive hash still verifies ordering semantics. The rank
-    rides f3_global_index's TWO-PHASE shape, not a global row_number()
-    window (which funnels every surviving row through ONE task): (1)
-    range-repartition on the full sort key — balanced, sampled bounds,
-    Spark's own global-sort machinery, nulls-last honored by the range
-    partitioner; (2) tiny per-partition counts → exclusive running offsets
-    (a 16-row window, broadcast back); (3) rn = offset + local row_number
-    within the partition. The unique o_orderkey tiebreaker makes the total
-    order — and therefore rn — exact regardless of which side of a range
-    boundary equal-key rows land on."""
-    nparts = 16
+    the order-insensitive hash still verifies ordering semantics. rn is
+    :func:`~marasa_spark.ops.skew.global_prefix`'s parallel rank, not a
+    global row_number() window (one task for every surviving row); the
+    range partitioner honors nulls-last, and the unique o_orderkey
+    tiebreaker makes rn exact on either side of a range boundary."""
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 450000)
     prio = F.nullif(F.col("o_orderpriority"), F.lit("5-LOW"))
     base = o.select("o_orderkey", prio.alias("prio"), "o_totalprice")
@@ -145,22 +140,12 @@ def f1_sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").desc(),
         F.col("o_orderkey"),
     ]
-    ranged = base.repartitionByRange(nparts, *keys).withColumn(
-        "pid", F.spark_partition_id()
-    )
-    counts = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
-    wcum = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "offset", F.coalesce(F.sum("n").over(wcum), F.lit(0))
-    ).select("pid", "offset")
-    wlocal = Window.partitionBy("pid").orderBy(*keys)
     return (
-        ranged.join(F.broadcast(offsets), "pid")
-        .withColumn("rn", (F.col("offset") + F.row_number().over(wlocal)).cast("long"))
-        .select("o_orderkey", "prio", "o_totalprice", "rn")
-        .orderBy(
-            F.col("prio").desc_nulls_last(), F.col("o_totalprice").desc(), "o_orderkey"
+        global_prefix(base, keys, 16)
+        .select(
+            "o_orderkey", "prio", "o_totalprice", (F.col("_before") + 1).alias("rn")
         )
+        .orderBy(*keys)
     )
 
 
@@ -330,33 +315,14 @@ FROM customer
 @register("f3_global_index", oracle=F3_ORACLE, group="F")
 def f3_global_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global sequence assignment WITHOUT the single-partition window: a
-    bare row_number() OVER (ORDER BY ...) funnels 100 TB through one task.
-    Two-phase instead: (1) range-repartition on the sort key — balanced,
-    sampled bounds, Spark's own global-sort machinery; (2) tiny
-    per-partition counts → exclusive running offsets (a 16-row window,
-    broadcast back); (3) idx = offset + local row_number within the
-    partition id. Every phase is JVM-side and parallel; the only global
-    object is the 16-row offset table. Matches row_number() exactly
-    (unique (acctbal, custkey) total order)."""
-    nparts = 16
+    bare row_number() OVER (ORDER BY ...) runs all data in one task, so
+    idx is :func:`~marasa_spark.ops.skew.global_prefix`'s two-phase rank
+    over 16 range partitions. Matches row_number() exactly (unique
+    (acctbal, custkey) total order)."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    ranged = c.repartitionByRange(
-        nparts, F.col("c_acctbal").desc(), F.col("c_custkey")
-    ).withColumn("pid", F.spark_partition_id())
-    counts = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
-    wcum = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "offset", F.coalesce(F.sum("n").over(wcum), F.lit(0))
-    ).select("pid", "offset")
-    wlocal = Window.partitionBy("pid").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    return (
-        ranged.join(F.broadcast(offsets), "pid")
-        .withColumn(
-            "idx", (F.col("offset") + F.row_number().over(wlocal)).cast("long")
-        )
-        .select("c_custkey", "c_acctbal", "idx")
+    keys = [F.col("c_acctbal").desc(), F.col("c_custkey")]
+    return global_prefix(c, keys, 16).select(
+        "c_custkey", "c_acctbal", (F.col("_before") + 1).alias("idx")
     )
 
 

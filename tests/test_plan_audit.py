@@ -158,8 +158,8 @@ def test_global_index_avoids_single_partition_window(spark):
     the anti-pattern this op exists to avoid."""
     plan = plan_of(spark, "f3_global_index")
     assert "rangepartitioning" in plan
-    # the data-sized row_number window is keyed by pid — never global
-    assert "row_number() windowspecdefinition(pid#" in plan
+    # the data-sized row_number window is keyed by _pid — never global
+    assert "row_number() windowspecdefinition(_pid#" in plan
 
 
 def test_interval_overlap_is_equi_join(spark):

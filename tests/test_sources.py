@@ -54,7 +54,9 @@ def test_clustered_sink_stats_are_tight_and_disjoint(spark, sf_dir):
     tag = sf_dir.rstrip("/").split("/")[-1]
     import os
 
-    d = f"/root/repo/_scratch/a13_cluster_{tag}_p{os.getpid()}"
+    from marasa_spark.queries._util import SCRATCH
+
+    d = f"{SCRATCH}/a13_cluster_{tag}_p{os.getpid()}"
     spans = []
     for f in glob.glob(f"{d}/*.parquet"):
         md = pq.ParquetFile(f).metadata

@@ -17,13 +17,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from marasa_spark.catalog import load_table
+from marasa_spark.queries import _util
 from marasa_spark.streaming.runtime import (
     read_event_stream,
     run_to_memory,
     stage_event_chunks,
 )
 
-SCRATCH = "/root/repo/_scratch/streaming_tests"
+SCRATCH = f"{_util.SCRATCH}/streaming_tests"
 
 
 def _r2(x: float) -> float:
