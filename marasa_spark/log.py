@@ -59,22 +59,28 @@ Scale posture (100 TB):
   real scale the snapshot write would bucket by key so the tail-merge
   window co-locates without a shuffle;
 * seqno assignment reads the high-water from the journal and numbers only
-  the incoming batch — via :func:`marasa_spark.ops.skew.global_prefix`
-  (range partitions + broadcast offsets), so even a bulk-load-sized batch
-  never funnels through a single-partition window. Writers that race from
-  the same journal version get :class:`LogWriteConflict`
-  (:meth:`append_retrying` serializes them);
+  the incoming batch. A DataFrame batch (``append``) is numbered by
+  :func:`marasa_spark.ops.skew.global_prefix` (range partitions +
+  broadcast offsets), so even a bulk-load-sized batch never funnels
+  through a single-partition window. The rows ``put``/``delete`` already
+  hold in the driver are sorted and numbered in Python and written as one
+  small Arrow-backed frame. Both share the claim, the storage seam and
+  the commit. Writers that race from the same journal version get
+  :class:`LogWriteConflict` (:meth:`append_retrying` serializes them),
+  and a writer that fails before its commit releases its own claim;
 * no driver-side ``collect()`` anywhere in the data path.
 """
 
 from __future__ import annotations
 
+import datetime
 import glob
 import json
 import os
 import shutil
 import time
 import uuid
+from contextlib import contextmanager, suppress
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -344,35 +350,49 @@ class MarasaLog:
         :func:`marasa_spark.ops.skew.global_prefix` (range partitions and
         a broadcast per-partition offset table), NOT a global
         ``row_number() OVER (ORDER BY ...)``, whose single task would
-        serialize a bulk load. Same contiguous numbering.
+        serialize a bulk load. Same contiguous numbering. The batch never
+        reaches the driver; ``put``/``delete``, whose rows are already
+        there, number them in Python instead (:meth:`_number_rows`).
         """
         return self._append(records)
 
-    def _append(self, records: DataFrame, batch_id: str | None = None) -> int:
+    def _append(self, records: DataFrame | list[tuple], batch_id: str | None = None) -> int:
         """Claim the next version → number → data job → one commit of the
-        batch's adds + high-water (+ ``batch_id``) txn actions. The batch
-        becomes visible exactly when that commit file lands; a crash
-        anywhere before leaves invisible files and a dead claim, both
-        cleared by :meth:`recover_claims`."""
-        version, j = self._claim(self.log_dir)
-        base = j.txns.get(HIGH_WATER_APP, 0) if j else 0
-        done = j.txns.get(BATCH_APP_PREFIX + batch_id) if j and batch_id is not None else None
-        if done is not None:
-            os.unlink(_claim_path(self.log_dir, version))
-            return done
-        batch = self._number_batch(records, base).withColumn(
-            "segment",
-            (F.floor(F.col("seqno") / self.segment_size) * self.segment_size).cast("long"),
-        )
-        # single-pass batch count: observed during the write job itself (a
-        # separate count() would re-evaluate the input lineage)
-        obs = Observation()
-        batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
-        actions = self._write_log_batch(batch, version)
-        hw = base + int(obs.get["n"])
-        apps = [HIGH_WATER_APP] + ([] if batch_id is None else [BATCH_APP_PREFIX + batch_id])
-        self._commit_log(self.log_dir, version, actions, hw, apps)
-        return hw
+        batch's adds + high-water (+ ``batch_id``) txn actions. The input
+        type picks the numbering front end: a DataFrame gets the parallel
+        plan, driver-held ``(ns, key, value)`` rows are numbered in
+        Python; everything after numbering is shared. The batch becomes
+        visible exactly when that commit file lands. A writer that fails
+        before then releases its own claim (:meth:`_claimed`); a crash
+        leaves invisible files and a dead claim, both cleared by
+        :meth:`recover_claims`."""
+        if isinstance(records, DataFrame):
+            rows = None
+        elif records:
+            rows = self._rows_table(records)
+        else:  # a no-op put/delete claims no version and writes no file
+            return self.max_seqno()
+        with self._claimed(self.log_dir) as (version, j):
+            base = j.txns.get(HIGH_WATER_APP, 0) if j else 0
+            done = j.txns.get(BATCH_APP_PREFIX + batch_id) if j and batch_id is not None else None
+            if done is not None:
+                os.unlink(_claim_path(self.log_dir, version))
+                return done
+            if rows is None:
+                batch = self._number_batch(records, base)
+            else:
+                batch = self._number_rows(rows, base)
+            # single-pass batch count: observed during the write job itself
+            # (a separate count() would re-evaluate the input lineage)
+            obs = Observation()
+            batch = batch.withColumn("segment", self._segment(F.col("seqno"))).observe(
+                obs, F.count(F.lit(1)).alias("n")
+            )
+            actions = self._write_log_batch(batch, version)
+            hw = base + int(obs.get["n"])
+            apps = [HIGH_WATER_APP] + ([] if batch_id is None else [BATCH_APP_PREFIX + batch_id])
+            self._commit_log(self.log_dir, version, actions, hw, apps)
+            return hw
 
     def append_retrying(
         self, records: DataFrame, max_attempts: int = 10, backoff_s: float = 0.2
@@ -389,6 +409,10 @@ class MarasaLog:
         per attempt — pass a deterministic input, as with any retried
         write job."""
         return _retry(lambda: self.append(records), max_attempts, backoff_s)
+
+    def _segment(self, seqno):
+        """The ``segment`` partition column of a ``seqno`` column."""
+        return (F.floor(seqno / self.segment_size) * self.segment_size).cast("long")
 
     def _number_batch(self, records: DataFrame, base: int) -> DataFrame:
         """Stamp ``seqno = base + rank in (ns, key, ts, value) order`` onto
@@ -410,6 +434,52 @@ class MarasaLog:
             "ts",
             "value",
         )
+
+    @staticmethod
+    def _row_order(row: tuple) -> tuple:
+        """The order :meth:`_number_batch` gives a batch with one ``ts``:
+        (ns, key, value) ascending, a NULL value first. Python's code-point
+        order on ``str`` is Spark's UTF8_BINARY byte order. The two MUST
+        agree — tests/test_log_writes.py holds them to it."""
+        ns, key, value = row
+        return ns, key, value is not None, value or ""
+
+    @staticmethod
+    def _rows_table(rows: list[tuple]):
+        """The ``put``/``delete`` batch, built before the claim: the
+        driver-held ``(ns, key, value)`` rows checked (``TypeError``
+        unless ``str``, ``value`` may be None), sorted by
+        :meth:`_row_order` and stamped with one ``ts``, as
+        ``current_timestamp()`` gives one per query."""
+        import pyarrow as pa
+
+        for row in rows:
+            ns, key, value = row
+            names = isinstance(ns, str) and isinstance(key, str)
+            if not names or not (value is None or isinstance(value, str)):
+                raise TypeError(f"ns, key and value must be str (value may be None): {row!r}")
+        ns, key, value = zip(*sorted(rows, key=MarasaLog._row_order))
+        now = datetime.datetime.now(datetime.timezone.utc)
+        return pa.table(
+            {
+                "ns": pa.array(ns, pa.string()),
+                "key": pa.array(key, pa.string()),
+                "ts": pa.array([now] * len(rows), pa.timestamp("us", tz="UTC")),
+                "value": pa.array(value, pa.string()),
+            }
+        )
+
+    def _number_rows(self, rows, base: int) -> DataFrame:
+        """Stamp ``seqno = base + position`` onto a :meth:`_rows_table`
+        batch — already in :meth:`_row_order` — as one small Arrow-backed
+        frame. One partition, so the write makes one file per
+        ``(ns, segment)``; a local relation is otherwise split over
+        ``defaultParallelism`` tasks."""
+        import pyarrow as pa
+
+        seqno = pa.array(range(base + 1, base + 1 + rows.num_rows), pa.int64())
+        rows = rows.add_column(2, "seqno", seqno)
+        return self.spark.createDataFrame(rows, LOG_SCHEMA).coalesce(1)
 
     # -- commit protocol -----------------------------------------------------
 
@@ -445,6 +515,23 @@ class MarasaLog:
             os.unlink(path)
             raise LogWriteConflict(f"{table} version {version} is already committed")
         return version, j
+
+    @contextmanager
+    def _claimed(self, table: str):
+        """:meth:`_claim`, released by the claiming writer itself when an
+        error is raised before its commit lands, then re-raised — so one
+        failed write never blocks the next. Files the failed job left
+        are invisible (no commit adds them) and :meth:`recover_claims`
+        sweeps them. Not on ``BaseException``: an interrupted driver may
+        leave its job running, so its files must stay behind its claim."""
+        version, j = self._claim(table)
+        try:
+            yield version, j
+        except Exception:
+            if not os.path.exists(f"{_dlog(table)}/{_commit_name(version)}"):
+                with suppress(FileNotFoundError):
+                    os.unlink(_claim_path(table, version))
+            raise
 
     def _commit_log(
         self, table: str, version: int, actions: list[dict], hw: int, apps: list[str]
@@ -584,23 +671,19 @@ class MarasaLog:
         hw = self.max_seqno()
         rows = self.changes(0, until=hw)
         dest = MarasaLog(self.spark, dest_path, segment_size=self.segment_size)
-        batch = rows.withColumn(
-            "segment",
-            (F.floor(F.col("seqno") / dest.segment_size) * dest.segment_size).cast(
-                "long"
-            ),
-        )
-        version, _ = dest._claim(dest.log_dir)
-        actions = dest._write_log_batch(batch, version)
-        dest._commit_log(dest.log_dir, version, actions, hw, [HIGH_WATER_APP])
+        batch = rows.withColumn("segment", dest._segment(F.col("seqno")))
+        with dest._claimed(dest.log_dir) as (version, _):
+            actions = dest._write_log_batch(batch, version)
+            dest._commit_log(dest.log_dir, version, actions, hw, [HIGH_WATER_APP])
         return dest
 
     def put(self, ns: str, **changes: str) -> int:
-        """marasa ``put(ns, key=value, ...)`` — tiny-batch convenience over
-        :meth:`append`."""
-        rows = [(ns, k, v) for k, v in changes.items()]
-        df = self.spark.createDataFrame(rows, "ns string, key string, value string")
-        return self.append(df)
+        """marasa ``put(ns, key=value, ...)``: one tiny batch, numbered in
+        Python (see :meth:`_number_rows`) and committed like any append.
+        ``ns`` and every value must be ``str`` (``TypeError`` otherwise,
+        before anything is claimed). With no changes it is a no-op that
+        returns the high-water."""
+        return self._append([(ns, k, v) for k, v in changes.items()])
 
     def write(self, ns: str, **changes: str) -> int:
         """marasa ``write(ns, **changes)`` — alias of :meth:`put` (SURVEY
@@ -619,13 +702,9 @@ class MarasaLog:
         raw log files age out via j9 retention). A later ``put`` of the
         same key simply supersedes the tombstone. The key list is
         driver-side by design — forget lists are human-scale, not
-        corpus-scale."""
-        if not keys:
-            # A no-op delete must not claim a seqno / write empty log files.
-            return self.max_seqno()
-        rows = [(ns, k, None) for k in keys]
-        df = self.spark.createDataFrame(rows, "ns string, key string, value string")
-        return self.append(df)
+        corpus-scale — so it takes the same Python-numbered path as
+        :meth:`put`: ``str`` keys only, and an empty list is a no-op."""
+        return self._append([(ns, k, None) for k in keys])
 
     # -- metadata -----------------------------------------------------------
 
@@ -789,11 +868,13 @@ class MarasaLog:
         s = self.max_seqno()
         if not s or s == self._latest_snapshot_seq():
             return s
-        version, j = self._claim(self.snap_dir)
-        if j is not None and j.txns[SNAPSHOT_APP] == s:
-            os.unlink(_claim_path(self.snap_dir, version))
-            return s
-        removes = [{"remove": {"path": rel, "dataChange": True}} for rel in (j.adds if j else ())]
-        adds = self._write_snapshot(self.latest(), version)
-        self._commit_log(self.snap_dir, version, removes + adds, s, [SNAPSHOT_APP])
+        with self._claimed(self.snap_dir) as (version, j):
+            if j is not None and j.txns[SNAPSHOT_APP] == s:
+                os.unlink(_claim_path(self.snap_dir, version))
+                return s
+            removes = [
+                {"remove": {"path": rel, "dataChange": True}} for rel in (j.adds if j else ())
+            ]
+            adds = self._write_snapshot(self.latest(), version)
+            self._commit_log(self.snap_dir, version, removes + adds, s, [SNAPSHOT_APP])
         return s

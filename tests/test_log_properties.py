@@ -531,14 +531,53 @@ def test_tombstone_lifecycle(spark, tmp_base):
     # and lookup agrees with latest on the tombstone rule
     assert store.lookup("ns", ["a", "b"]).count() == 2
 
-    # an EMPTY forget list is a no-op: no seqno claimed, no log files written
+    # an EMPTY forget list, and a put with no changes, are no-ops: no
+    # version claimed or committed, no log files written
     import os
 
     hw = store.max_seqno()
+    version = store._journal(store.log_dir).version
     n_files = sum(len(fs) for _, _, fs in os.walk(store.log_dir))
     assert store.delete("ns", []) == hw
+    assert store.put("ns") == hw
     assert store.max_seqno() == hw
+    assert store._journal(store.log_dir).version == version
     assert sum(len(fs) for _, _, fs in os.walk(store.log_dir)) == n_files
+
+
+text = st.sampled_from(["", "a", "b", "é", "中"])
+row = st.tuples(st.sampled_from(["n", "é"]), text, st.none() | text)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    batches=st.lists(st.lists(row, min_size=1, max_size=8), min_size=1, max_size=3),
+    segment_size=st.integers(1, 7),
+)
+def test_rows_path_numbers_like_append_property(spark, tmp_base, batches, segment_size):
+    """The driver-rows front end of put/delete and the DataFrame plan of
+    append stamp every row with the same seqno and segment, and return
+    the same high-water, on any batches (ties, NULLs, duplicate rows,
+    "" and non-ASCII strings, segment straddles)."""
+    n = next(_counter)
+    by_rows = MarasaLog(spark, str(tmp_base / f"rows_{n}"), segment_size=segment_size)
+    by_frame = MarasaLog(spark, str(tmp_base / f"frame_{n}"), segment_size=segment_size)
+    for rows in batches:
+        assert by_rows._append(list(rows)) == by_frame.append(
+            spark.createDataFrame(rows, "ns string, key string, value string")
+        )
+
+    def landed(store):
+        return sorted(
+            (r["seqno"], r["ns"], r["key"], r["value"], r["segment"])
+            for r in store._read_table(store.log_dir).collect()
+        )
+
+    assert landed(by_rows) == landed(by_frame)
 
 
 @settings(
