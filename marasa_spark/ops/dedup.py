@@ -12,6 +12,12 @@ Scale notes (100 TB):
   buckets (banding), exact Jaccard verification on candidates only. With b
   bands of r rows the match probability curve is 1-(1-s^r)^b — pick
   (b, r) for the target threshold.
+* banded-LSH core — the bucket cap (`banded_kb`) and the salted
+  first-shared-band candidate join (`banded_pairs`) are one implementation
+  for every banded signature: minhash_lsh_pairs here and
+  similarity.rh_lsh_pairs differ only in how they sign and verify.
+  `overlap` and `size_compatible` are the pinned-intersect verify and the
+  Jaccard size prune every token-set verifier shares.
 * SimHash — 64-bit signature per doc in one pass; near-dup = small Hamming
   distance; bucketing on bit-blocks gives the LSH analogue for cosine-ish
   token-weight similarity.
@@ -45,6 +51,37 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
+
+
+def overlap(th_a, th_b) -> Column:
+    """|A ∩ B| of two hashed token arrays, as a double, evaluated once."""
+    # Project it as its OWN column: spark_partition_id() >= 0 is vacuously
+    # true but nondeterministic, and predicates cannot be pushed through a
+    # nondeterministic projection, so a threshold filter above it compares
+    # a plain column. Without the pin the optimizer substitutes the
+    # intersect into the filter (and, one rewrite further, into an attach
+    # join's condition), evaluating it 2-3x per row on the slow path —
+    # measured on k9 at sf0.1 over 7.3M candidates: 831 CPU-s (join
+    # condition) and 1,059 CPU-s (substituted filter) vs ~60 pinned. This
+    # relies on UNDOCUMENTED optimizer behavior;
+    # tests/test_plan_audit.py::test_k9_intersect_evaluated_exactly_once
+    # fails if a Spark upgrade starts pushing predicates through it.
+    return F.when(
+        F.spark_partition_id() >= 0,
+        F.size(F.array_intersect(th_a, th_b)).cast("double"),
+    ).otherwise(F.lit(-1.0))
+
+
+def size_compatible(n_a, n_b, t: float) -> Column:
+    """Jaccard size prune: J ≥ t needs min(|A|,|B|) ≥ t·max (J ≤ min/max)."""
+    # The 1e-9 slack keeps the prune output-neutral under IEEE rounding: a
+    # pair the verify accepts has real J ≥ t − ulp/2, hence size ratio
+    # ≥ t − ~3e-16 ≫ t − 1e-9; a borderline extra survivor just reaches
+    # the exact verify, which stays the sole decider (md5-checked on k9 at
+    # sf0.1: 964,854 pairs, unchanged hash).
+    return F.least(n_a, n_b).cast("double") >= F.lit(t - 1e-9) * F.greatest(
+        n_a, n_b
+    ).cast("double")
 
 
 def jaccard_pairs(
@@ -86,16 +123,12 @@ def jaccard_pairs(
     toks_col = (shingle or tokens)(F.col(text_col))
     t = df.select(F.col(id_col).alias("doc"), toks_col.alias("toks"))
     sized = t.select("doc", F.size("toks").alias("n"))
-    size_compat = F.least(F.col("n_a"), F.col("n_b")).cast(
-        "double"
-    ) >= F.lit(threshold - 1e-9) * F.greatest(F.col("n_a"), F.col("n_b")).cast(
-        "double"
-    )
     pair_ids = (
         sized.select(F.col("doc").alias("doc_a"), F.col("n").alias("n_a"))
         .join(
             sized.select(F.col("doc").alias("doc_b"), F.col("n").alias("n_b")),
-            (F.col("doc_a") < F.col("doc_b")) & size_compat,
+            (F.col("doc_a") < F.col("doc_b"))
+            & size_compatible(F.col("n_a"), F.col("n_b"), threshold),
         )
         .repartition("doc_a", "doc_b")
     )
@@ -109,13 +142,7 @@ def jaccard_pairs(
         F.broadcast(th.select(F.col("doc").alias("doc_b"), F.col("th").alias("th_b"))),
         "doc_b",
     )
-    pairs = pairs.withColumn(
-        "inter",
-        F.when(
-            F.spark_partition_id() >= 0,
-            F.size(F.array_intersect("th_a", "th_b")).cast("double"),
-        ).otherwise(F.lit(-1.0)),
-    )
+    pairs = pairs.withColumn("inter", overlap("th_a", "th_b"))
     union = (F.col("n_a") + F.col("n_b")).cast("double") - F.col("inter")
     jac = F.col("inter") / union
     return (
@@ -144,6 +171,201 @@ def minhash_signature(toks: Column, num_hashes: int) -> Column:
     )
 
 
+def check_banding(
+    df: DataFrame, op: str, id_col: str, width: int, bands: int, selfjoin_salt: int
+) -> None:
+    """Reject bad banded-LSH arguments before the first Spark job."""
+    if width % bands != 0:
+        raise ValueError(
+            f"{op}: signature length ({width}) must be divisible by bands "
+            f"({bands}); trailing signature entries would be silently ignored"
+        )
+    # The capped-cell sentinel of banded_kb is id + 2^32; with a string id
+    # the addition coerces to double and yields NULL, which makes the
+    # first-shared-band predicate NULL and silently DROPS pairs (ADVICE
+    # r9). Map string ids to a surrogate long upstream.
+    id_type = dict(df.dtypes).get(id_col)
+    if id_type not in ("tinyint", "smallint", "int", "bigint"):
+        raise ValueError(
+            f"{op} requires an integral id column; {id_col} is {id_type}"
+        )
+    if selfjoin_salt < 1:
+        raise ValueError(f"selfjoin_salt must be >= 1, got {selfjoin_salt}")
+
+
+def _cell(band: Column, bucket: Column) -> Column:
+    """(band << 32) | bucket-low-bits: one exact long per (band, bucket)."""
+    return F.shiftleft(band.cast("long"), 32).bitwiseOR(
+        bucket.cast("long").bitwiseAND(F.lit(0xFFFFFFFF))
+    )
+
+
+def banded_kb(
+    per_item: DataFrame,
+    id_col: str,
+    bands: int,
+    max_bucket_size: int,
+    weight: str | None = None,
+) -> DataFrame:
+    """The banded-LSH bucket cap: ``per_item`` (one row per item: id,
+    ``bks`` = its ``bands`` bucket hashes, carried columns) plus ``kb``,
+    the bucket array with every cell holding more than ``max_bucket_size``
+    items masked out. Items are counted as rows, or as the sum of
+    ``weight`` when a row stands for several items. The cap is a
+    documented recall cut on degenerate keys instead of an O(bucket²)
+    blowup; members of a capped cell still pair through their other
+    bands."""
+    # The only cross-item fact — which cells are capped — reduces through
+    # a map-side-partial groupBy over thin exploded cells to ONE row of
+    # capped cells (a primitive array<long>), crossJoin-broadcast onto the
+    # per-item rows. On a healthy corpus it is EMPTY; it is bounded by
+    # items / max_bucket_size on pathological ones (past that, swap the
+    # crossJoin for an anti-join of the exploded cells).
+    cells = per_item.select(
+        *([weight] if weight else []), F.posexplode("bks").alias("band", "bucket")
+    )
+    n = F.sum(weight) if weight else F.count(F.lit(1))
+    capped = (
+        cells.groupBy("band", "bucket")
+        .agg(n.alias("n"))
+        .filter(F.col("n") > max_bucket_size)
+        .agg(F.collect_list(_cell(F.col("band"), F.col("bucket"))).alias("capped"))
+    )
+    # kb is a PRIMITIVE array<long> so banded_pairs' first-shared-band
+    # test stays scalar: a capped entry becomes id + 2^32 (outside the
+    # int32 bucket range, unique per item, so it never falsely matches); a
+    # genuine bucket-hash collision at an earlier band is CONSISTENT with
+    # the join (both items really are in that cell, so that band emits).
+    bk = lambda b: F.element_at(F.col("bks"), b + 1)  # noqa: E731
+    kb = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.when(
+            ~F.array_contains(F.col("capped"), _cell(b, bk(b))), bk(b).cast("long")
+        ).otherwise(F.col(id_col) + F.lit(1 << 32)),
+    )
+    return per_item.crossJoin(F.broadcast(capped)).select(
+        *per_item.columns, kb.alias("kb")
+    )
+
+
+def banded_pairs(
+    withkb: DataFrame,
+    id_col: str,
+    bands: int,
+    selfjoin_salt: int,
+    nparts: int,
+    names: tuple[str, str],
+    carry: tuple[str, ...] = (),
+    on: Column | None = None,
+    extra: tuple[Column, ...] = (),
+) -> DataFrame:
+    """The banded-LSH candidate join: :func:`banded_kb` rows → one row per
+    unordered pair sharing a kept (band, bucket) cell, as (least id,
+    greatest id) named ``names`` plus ``extra``, spread over ``nparts``
+    partitions. ``on`` (an extra join predicate) and ``extra`` refer to the
+    sides as ``a.*``/``b.*``, which hold only id, ``carry``, kb, band and
+    bucket: payloads re-attach per unique candidate after this returns, so
+    they never ride the bands× amplified exchange (test_plan_audit pins
+    it). ``selfjoin_salt`` = s splits each cell's pair work s·(s+1)/2 ways;
+    the pair set is identical for every s."""
+    # SALT (guide §2.5 hot-key split): one dense near-dup family collides
+    # in EVERY band, capping the cell self-join at ``bands`` tasks however
+    # many cores exist; AQE skew split never fires on the KB-sized,
+    # compute-bound partitions. Each item gets a group g = pmod(xxhash64(id),
+    # s); ONE membership table carries every sub-cell copy a row serves,
+    # T(g) = {(g, q): q ≥ g} ∪ {(p, g): p ≤ g} (s copies after the (g, g)
+    # dedup by array_union), through ONE (band, bucket, sp, sq) exchange.
+    # Measured on k9 at sf0.1 (one ~2,200-set family hot in all 16 bands,
+    # 32 cores): candidate-join warm noop 4.5–5.8 s → 1.3 s at s=4.
+    g = F.pmod(F.xxhash64(id_col), F.lit(selfjoin_salt)).cast("int")
+    copies = F.array_union(
+        F.transform(
+            F.sequence(F.col("g"), F.lit(selfjoin_salt - 1)),
+            lambda q: F.struct(
+                F.col("g").cast("int").alias("sp"), q.cast("int").alias("sq")
+            ),
+        ),
+        F.transform(
+            F.sequence(F.lit(0), F.col("g")),
+            lambda p: F.struct(
+                p.cast("int").alias("sp"), F.col("g").cast("int").alias("sq")
+            ),
+        ),
+    )
+    # EXPLICIT repartitions, not ENSURE_REQUIREMENTS: the membership table
+    # is byte-tiny, so AQE coalesces an implicit exchange to ONE partition
+    # and the pair-expanding self-join inside that stage grinds
+    # bands × family² rows on one task (measured 37 s of a 45 s k9 run at
+    # sf0.1). A user-numbered repartition is exempt from coalescing.
+    members = (
+        withkb.select(
+            id_col, *carry, "kb", F.posexplode("bks").alias("band", "bucket")
+        )
+        .filter(F.element_at("kb", F.col("band") + 1) < F.lit(1 << 32))
+        .withColumn("g", g)
+        .select(
+            id_col, *carry, "kb", "band", "bucket", "g",
+            F.explode(copies).alias("cell"),
+        )
+        .select(
+            id_col, *carry, "kb", "band", "bucket", "g",
+            F.col("cell.sp").alias("sp"), F.col("cell.sq").alias("sq"),
+        )
+        .repartition(nparts, "band", "bucket", "sp", "sq")
+    )
+    # The two sides are FILTERS above the one exchange (a keeps its
+    # sp = g copies, b its sq = g copies) behind the nondeterministic
+    # no-op: pushed below the repartition they would make the two exchange
+    # subtrees differ and break the reuse (measured on k21: the
+    # two-exchange variant pays the capped broadcast + codegen twice,
+    # first collect 5.0 → 10.4-13.3 s).
+    barrier = lambda c: F.when(  # noqa: E731
+        F.spark_partition_id() >= 0, c
+    ).otherwise(F.lit(True))
+    a = members.filter(barrier(F.col("sp") == F.col("g"))).alias("a")
+    b = members.filter(barrier(F.col("sq") == F.col("g"))).alias("b")
+    # PAIR ONCE, at the FIRST band where both share a kept bucket, instead
+    # of once per shared band + dropDuplicates (a dense family pushed
+    # bands × family² rows through that aggregate: 83M rows for 12M pairs
+    # on k9 at sf0.1, most of a 46 s cold run). The test is UNROLLED into
+    # scalar kb comparisons: higher-order functions in a join condition
+    # knock SortMergeJoin out of codegen (measured 300+ s at sf0.1).
+    no_earlier_shared = F.lit(True)
+    for bp in range(bands - 1):
+        no_earlier_shared = no_earlier_shared & (
+            (F.lit(bp) >= F.col("a.band"))
+            | (F.col("a.kb").getItem(bp) != F.col("b.kb").getItem(bp))
+        )
+    # Under salting a cross-group sub-cell (sp < sq) cannot hold the
+    # swapped orientation (a's sp and b's sq are their own groups, and
+    # sp < sq excludes a.g = b.g), so it joins once in any id order; a
+    # same-group sub-cell (sp = sq) keeps the id-order test. s = 1 is the
+    # unsalted plan: one copy per side and the bare id-order test.
+    ia, ib = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    cond = (
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.sp") == F.col("b.sp"))
+        & (F.col("a.sq") == F.col("b.sq"))
+        & ((F.col("a.sp") < F.col("a.sq")) | (ia < ib))
+    )
+    if on is not None:
+        cond = cond & on
+    # the thin pairs spread again BEFORE the caller attaches payloads
+    # (the jaccard_pairs rule): otherwise the verify runs inside the cell
+    # join's stage, on the few hot cells a dense family hashes to
+    # (measured 56 s vs 11 s on k9 at sf0.1)
+    return (
+        a.join(b, cond & no_earlier_shared)
+        .select(
+            F.least(ia, ib).alias(names[0]),
+            F.greatest(ia, ib).alias(names[1]),
+            *extra,
+        )
+        .repartition(nparts, *names)
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -157,6 +379,14 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash + LSH banding + exact-Jaccard verification.
 
+    shingle→minhash→band→bucket-join: candidates are only pairs sharing at
+    least one band bucket; each candidate is verified with exact Jaccard so
+    the output has no false positives (recall is probabilistic, tuned by
+    (bands, rows-per-band)). Banding, the bucket cap and the candidate
+    self-join are the shared core (:func:`banded_kb`, :func:`banded_pairs`,
+    also run by similarity.rh_lsh_pairs); this op adds the signature, the
+    exact-duplicate collapse, the size prune and the Jaccard verify.
+
     ``cut_lineage=False`` disables the three localCheckpoint
     materializations (shared set-level prefix, banded, verified rep pairs)
     — the output is identical; use it where lineage-based recovery matters
@@ -166,39 +396,14 @@ def minhash_lsh_pairs(
     full uncut plan (tests/test_plan_audit.py does).
 
     ``selfjoin_salt`` (s ≥ 1) splits each (band, bucket) cell's pair work
-    s·(s+1)/2 ways (guide §2.5 hot-key split): a single dense near-dup
-    family collides in EVERY band, so the bucket self-join's parallelism
-    is otherwise capped at ``bands`` tasks no matter how many cores exist
-    — AQE skew split never fires because the hot partitions are KB-sized
-    (compute-bound, not byte-bound). Each doc gets a deterministic salt
-    group g = pmod(xxhash64(doc), s); side a replicates a membership over
-    sub-cells (g, q≥g), side b over (p≤g, g), so an unordered pair meets
-    in exactly ONE sub-cell: cross-group at (min g, max g), same-group at
-    (g, g) where the doc-order test still dedups. Output pair set is
-    IDENTICAL for every s (s=1 restores the unsalted plan, one copy per
-    side and the bare doc-order condition); the cost is s copies per
-    membership through the ONE shared (band, bucket, sp, sq) exchange —
-    thin (doc, nt, kb, band, bucket, salt) rows only, token arrays still
-    never ride a band-keyed exchange, and the two join sides are barrier-
-    pinned filters above the exchange so it stays reused exactly like the
-    unsalted self-join. Measured at sf0.1 (one ~2,200-set family hot in
-    all 16 bands, 32 cores): the candidate join's warm noop
-    4.5–5.8 s → 1.3 s at s=4.
-
-    shingle→minhash→band→bucket-join: candidates are only pairs sharing at
-    least one band bucket; each candidate is verified with exact Jaccard so
-    the output has no false positives (recall is probabilistic, tuned by
-    (bands, rows-per-band)).
+    s·(s+1)/2 ways; the output is identical for every s (see
+    :func:`banded_pairs`).
 
     Scale posture (100 TB): the band explode and the bucket self-join carry
-    ONLY (doc, nt, kb, band, bucket) — the fixed-width per-set metadata
-    (~(8·bands + 28) B/row) — token arrays are re-attached per candidate
-    pair after dedup, so the bands× shuffle amplification never touches
-    the document payload. Degenerate buckets (e.g. millions
-    of near-empty docs hashing identically) are dropped at
-    ``max_bucket_size`` docs — a documented recall cut on pathological keys
-    instead of an O(bucket²) blowup; members of a dropped bucket still pair
-    through their other bands.
+    ONLY (doc, nt, kb, band, bucket) — token arrays are re-attached per
+    candidate pair after dedup, so the bands× shuffle amplification never
+    touches the document payload. Degenerate buckets are dropped at
+    ``max_bucket_size`` docs (:func:`banded_kb`).
 
     Exactness assumption (ADVICE r10, library API note): the verify stage
     intersects xxhash64-HASHED token arrays. On a corpus whose distinct
@@ -209,22 +414,7 @@ def minhash_lsh_pairs(
     tokens — orders of magnitude below the banding miss mass), with no
     runtime signal.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
-            "trailing signature hashes would be silently ignored"
-        )
-    id_type = dict(df.dtypes).get(id_col)
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        # The capped-bucket sentinel below is doc + 2^32; with a string id
-        # the addition coerces to double and yields NULL, which would make
-        # the first-shared-band predicate NULL and silently DROP pairs.
-        # Fail fast instead (ADVICE r9): map string ids to a surrogate
-        # long (e.g. xxhash64 + a collision-checked dictionary) upstream.
-        raise ValueError(
-            f"minhash_lsh_pairs requires an integral id column; {id_col} is "
-            f"{id_type}"
-        )
+    check_banding(df, "minhash_lsh_pairs", id_col, num_hashes, bands, selfjoin_salt)
     rows_per_band = num_hashes // bands
 
     all_toks = df.select(
@@ -307,200 +497,38 @@ def minhash_lsh_pairs(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band)),
     )
-    # ONE row per distinct set carrying the full bucket array (round 11
-    # restructure): the previous shape exploded to per-(set, band) rows,
-    # windowed the cap flag per (band, bucket), re-GROUPED those rows into
-    # a per-doc kb array and broadcast it back onto the memberships —
-    # three data-sized movements (window shuffle+sort, kb aggregate
-    # shuffle, broadcast build/probe) spent re-deriving per-set
-    # information that exists per-set BEFORE the explode. Now the only
-    # cross-set information — which (band, bucket) cells exceed the doc
-    # cap — is computed as a map-side-partial groupBy over thin exploded
-    # (band, bucket, gn) rows and reduced to the usually-EMPTY capped
-    # list; everything per-set (nt, the kb array) is projected directly.
     per_set = sig.select(
         "doc", "gn", F.size("toks").alias("nt"), buckets.alias("bks")
     )
-    # second lineage cut (was the banded checkpoint): capped, withkb →
-    # members (self-join a AND b, exchange-reused) and the self-pairs
-    # branch all consume this — without the cut the minhash signature
-    # pass re-executes per branch. One row per SET (~(8·bands+28) B), a
-    # bands× smaller checkpoint than the exploded predecessor.
+    # second lineage cut: the cap, both self-join sides and the
+    # self-pairs branch all consume this — without the cut the minhash
+    # signature pass re-executes per branch. One row per SET
+    # (~(8·bands+28) B).
     if cut_lineage:
         per_set = per_set.localCheckpoint(eager=True)
-    # Cap on the DOC count (sum of collapsed group sizes), byte-identical
-    # to the uncollapsed per-doc count(*): a (band, bucket) cell is capped
-    # iff its doc total exceeds max_bucket_size. The groupBy partial-
-    # aggregates map-side (the window form shipped every membership row),
-    # and the surviving cells collapse into ONE row holding the capped
-    # cells as a primitive array<long> ((band << 32) | bucket-low-bits —
-    # exact, no hashing), crossJoin-broadcast to the per-set table. On a
-    # healthy corpus the array is EMPTY; its size is bounded by
-    # total_docs / max_bucket_size on pathological ones (replacing the
-    # old per-set kb broadcast whose ~5e9-set ceiling applied to EVERY
-    # corpus — past that bound, swap the crossJoin for an anti-join of
-    # the exploded memberships against the capped cells).
-    enc = lambda band, bucket: F.shiftleft(band.cast("long"), 32).bitwiseOR(  # noqa: E731
-        bucket.cast("long").bitwiseAND(F.lit(0xFFFFFFFF))
-    )
-    capped = (
-        per_set.select("gn", F.posexplode("bks").alias("band", "bucket"))
-        .groupBy("band", "bucket")
-        .agg(F.sum("gn").alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket_size)
-        .agg(F.collect_list(enc(F.col("band"), F.col("bucket"))).alias("capped"))
-    )
-    # Each membership carries the doc's full per-band bucket array so the
-    # self-join emits a pair exactly ONCE — at the FIRST band where both
-    # docs share a kept bucket — instead of once per shared band followed
-    # by dropDuplicates. A dense near-dup family colliding in all bands
-    # pushed bands x family^2 rows through that dedup aggregate (83M rows
-    # for 12M unique pairs at sf0.1 — most of a 46 s cold run, measured
-    # round 9). Two encoding rules keep the predicate codegen-fast:
-    # 1. the array is PRIMITIVE array<long> — a capped membership becomes
-    #    doc + 2^32 (outside the int32 bucket range, unique per doc, so it
-    #    never falsely matches); a genuine bucket-hash collision at an
-    #    earlier band is CONSISTENT with the join (both docs really are in
-    #    that (band, bucket), so that band's join emits the pair);
-    # 2. the first-match test is UNROLLED into bands-1 scalar array-index
-    #    comparisons, not zip_with/array_position — higher-order functions
-    #    in a join condition knock SortMergeJoin out of whole-stage
-    #    codegen and allocate per joined row (measured 300+ s at sf0.1).
-    withkb = per_set.crossJoin(F.broadcast(capped)).select(
-        "doc",
-        "gn",
-        "nt",
-        "bks",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.when(
-                ~F.array_contains(
-                    F.col("capped"), enc(b, F.element_at(F.col("bks"), b + 1))
-                ),
-                F.element_at(F.col("bks"), b + 1).cast("long"),
-            ).otherwise(F.col("doc") + F.lit(1 << 32)),
-        ).alias("kb"),
-    )
-    # EXPLICIT repartition on (band, bucket), not ENSURE_REQUIREMENTS: the
-    # membership table is byte-tiny, so AQE coalesces an implicit exchange
-    # to ONE partition — and the pair-expanding self-join that runs inside
-    # this stage then grinds bands x family^2 rows on one task (measured
-    # 37 s of a 45 s sf0.1 run; the jaccard_pairs anatomy: compute-bound
-    # stages must be spread by key, byte-based coalescing guesses wrong).
-    # A user-numbered repartition is exempt from AQE coalescing; both
-    # self-join sides reuse the one exchange. Each row carries
-    # (doc, nt, kb, band, bucket) ≈ (8·bands + 28) B — the kb array rides
-    # the band shuffle INSTEAD of a per-set broadcast attach (the
-    # test_plan_audit band-payload pin allows it; token arrays still
-    # never enter any band-keyed exchange).
+    # the cap counts DOCS (sum of collapsed group sizes), byte-identical
+    # to the uncollapsed per-doc count
+    withkb = banded_kb(per_set, "doc", bands, max_bucket_size, weight="gn")
     nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    if selfjoin_salt < 1:
-        raise ValueError(f"selfjoin_salt must be >= 1, got {selfjoin_salt}")
-    # ONE membership table carries every salt sub-cell copy a row serves —
-    # T(g) = {(g, q): q ≥ g} ∪ {(p, g): p ≤ g}, s copies after the (g, g)
-    # dedup (array_union on the struct pair) — through ONE
-    # (band, bucket, sp, sq) exchange; the two join sides are then FILTERS
-    # above it (a keeps a row's a-copies sp = g, b its b-copies sq = g),
-    # so the exchange is reused exactly like the unsalted self-join and
-    # the capped broadcast builds once. The filters sit behind the
-    # nondeterministic no-op barrier: pushed below the repartition they
-    # would make the two exchange subtrees differ and break the reuse
-    # (measured on k21: the two-exchange variant pays the capped
-    # broadcast + codegen twice, first collect 5.0 → 10.4-13.3 s).
-    g = F.pmod(F.xxhash64("doc"), F.lit(selfjoin_salt)).cast("int")
-    copies = F.array_union(
-        F.transform(
-            F.sequence(F.col("g"), F.lit(selfjoin_salt - 1)),
-            lambda q: F.struct(
-                F.col("g").cast("int").alias("sp"), q.cast("int").alias("sq")
-            ),
-        ),
-        F.transform(
-            F.sequence(F.lit(0), F.col("g")),
-            lambda p: F.struct(
-                p.cast("int").alias("sp"), F.col("g").cast("int").alias("sq")
-            ),
-        ),
-    )
-    members = (
-        withkb.select("doc", "nt", "kb", F.posexplode("bks").alias("band", "bucket"))
-        .filter(F.element_at("kb", F.col("band") + 1) < F.lit(1 << 32))
-        .withColumn("g", g)
-        .select(
-            "doc", "nt", "kb", "band", "bucket", "g",
-            F.explode(copies).alias("cell"),
-        )
-        .select(
-            "doc", "nt", "kb", "band", "bucket", "g",
-            F.col("cell.sp").alias("sp"), F.col("cell.sq").alias("sq"),
-        )
-        .repartition(nparts, "band", "bucket", "sp", "sq")
-    )
-    barrier = lambda c: F.when(  # noqa: E731
-        F.spark_partition_id() >= 0, c
-    ).otherwise(F.lit(True))
-    a = members.filter(barrier(F.col("sp") == F.col("g"))).alias("a")
-    b = members.filter(barrier(F.col("sq") == F.col("g"))).alias("b")
-    no_earlier_shared = F.lit(True)
-    for bp in range(bands - 1):
-        no_earlier_shared = no_earlier_shared & (
-            (F.lit(bp) >= F.col("a.band"))
-            | (F.col("a.kb").getItem(bp) != F.col("b.kb").getItem(bp))
-        )
-    # SIZE-COMPATIBILITY PREFILTER (VERDICT r10 #1): J = |A∩B|/|A∪B| ≤
-    # min(|A|,|B|)/max(|A|,|B|), so J ≥ t requires min ≥ t·max — two long
-    # compares that prune size-incompatible pairs BEFORE the pair shuffle
-    # and before any token-array copy or intersect. The 1e-9 slack makes
-    # the prune provably output-neutral under IEEE arithmetic: a pair the
-    # verify could accept has computed jac ≥ t, hence real J ≥ t − ulp/2,
-    # hence size ratio ≥ t − ~3e-16 ≫ t − 1e-9 — it always survives. A
-    # borderline extra survivor just flows to the exact verify, which
-    # remains the sole decider, so the emitted pair set is byte-identical
-    # (md5-harness-checked at sf0.1: 964,854 pairs, unchanged hash).
-    size_compat = F.least(F.col("a.nt"), F.col("b.nt")).cast(
-        "double"
-    ) >= F.lit(threshold - 1e-9) * F.greatest(F.col("a.nt"), F.col("b.nt")).cast(
-        "double"
-    )
-    # Pair-once condition under salting: in a cross-group sub-cell
-    # (sp < sq) the a/b replication rules make the swapped orientation
-    # structurally impossible (a's sp is its own group, b's sq is its
-    # own group, and sp < sq excludes a.g = b.g), so every cross-group
-    # pair joins exactly once with arbitrary doc order; same-group
-    # sub-cells (sp = sq) keep the classic doc-order dedup. doc_a/doc_b
-    # are normalized with least/greatest, and n_a/n_b swap with the same
-    # test so they stay aligned (only their sum feeds the union size, so
-    # this is hygiene, not semantics).
+    # The size prune (VERDICT r10 #1) runs IN the candidate join, before
+    # the pair shuffle and any token-array copy. The pair row carries both
+    # sizes (16 B) so the verify needs no size-attach joins; n_a/n_b swap
+    # with the ids so they stay aligned (only their sum feeds the union
+    # size, so this is hygiene, not semantics).
     swap = F.col("a.doc") > F.col("b.doc")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.sp") == F.col("b.sp"))
-            & (F.col("a.sq") == F.col("b.sq"))
-            & (
-                (F.col("a.sp") < F.col("a.sq"))
-                | (F.col("a.doc") < F.col("b.doc"))
-            )
-            & size_compat
-            & no_earlier_shared,
-        )
-        .select(
-            F.least(F.col("a.doc"), F.col("b.doc")).alias("doc_a"),
-            F.greatest(F.col("a.doc"), F.col("b.doc")).alias("doc_b"),
-            # the pair row carries both sizes (16 B) so the verify below
-            # needs no separate size-attach joins
+    cand = banded_pairs(
+        withkb,
+        "doc",
+        bands,
+        selfjoin_salt,
+        nparts,
+        ("doc_a", "doc_b"),
+        carry=("nt",),
+        on=size_compatible(F.col("a.nt"), F.col("b.nt"), threshold),
+        extra=(
             F.when(swap, F.col("b.nt")).otherwise(F.col("a.nt")).alias("n_a"),
             F.when(swap, F.col("a.nt")).otherwise(F.col("b.nt")).alias("n_b"),
-        )
-        # jaccard_pairs rule: spread the pair table BEFORE attaching
-        # payloads. Without this boundary the verify (two broadcast
-        # probes + array_intersect per pair) runs inside the bucket
-        # join's stage, concentrated on the few hot (band, bucket)
-        # tasks a dense family hashes to — measured 56 s vs 11 s at
-        # sf0.1. The exchange carries only the unique thin pairs.
-        .repartition(nparts, "doc_a", "doc_b")
+        ),
     )
     # token payloads join in only now — once per unique candidate pair.
     # The verify intersects HASHED token arrays (array<long>), not the
@@ -528,27 +556,7 @@ def minhash_lsh_pairs(
         toks_h.select(F.col("doc").alias("doc_b"), F.col("th").alias("th_b")),
         "doc_b",
     )
-    # `inter` is projected as its OWN column, wrapped in a
-    # nondeterministic-flagged no-op (spark_partition_id() >= 0 is
-    # vacuously true): predicates cannot be pushed through a
-    # nondeterministic projection, so the threshold filter below stays
-    # ABOVE this project and compares plain columns, and array_intersect
-    # is evaluated exactly ONCE per candidate pair. Without the pin the
-    # optimizer substitutes the intersect into the filter (and, one
-    # rewrite further, into the attach join's condition), evaluating it
-    # 2-3x per row on the join/filter slow path — measured 831 CPU-s
-    # (join condition) and 1,059 CPU-s (substituted filter) vs ~60 CPU-s
-    # pinned, at sf0.1 over 7.3M candidates. This barrier relies on
-    # UNDOCUMENTED optimizer behavior; the executed-plan pin
-    # tests/test_plan_audit.py::test_k9_intersect_evaluated_exactly_once
-    # fails if a Spark upgrade starts pushing predicates through it.
-    cand = cand.withColumn(
-        "inter",
-        F.when(
-            F.spark_partition_id() >= 0,
-            F.size(F.array_intersect("th_a", "th_b")).cast("double"),
-        ).otherwise(F.lit(-1.0)),
-    )
+    cand = cand.withColumn("inter", overlap("th_a", "th_b"))
     union = (F.col("n_a") + F.col("n_b")).cast("double") - F.col("inter")
     jac = F.col("inter") / union
     rep_pairs = (

@@ -15,12 +15,19 @@ Scale paths:
   only their cluster → the scan prunes to N/K per probe. Centroids would
   come from k-means at real scale; any deterministic fixed set works for
   the operator (the driver check uses the first K vectors).
+* random-hyperplane LSH (`rh_lsh_pairs`) — sign-bit signatures banded
+  through the banded-LSH core in ops/dedup.py (bucket cap + salted
+  candidate join, shared with minhash_lsh_pairs), then an exact-cosine
+  verify per unique candidate: O(n·bands) shuffle, no false positives.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from marasa_spark.ops.dedup import banded_kb, banded_pairs, check_banding
+
 
 def r2(col: Column, n: int = 2) -> Column:
     """Lazy proxy for queries._util.r2: importing that module executes the
@@ -213,7 +220,6 @@ def rh_lsh_pairs(
     seed: int = 7,
     max_bucket_size: int = 5000,
     sim_decimals: int = 6,
-    cut_lineage: bool = True,
     selfjoin_salt: int = 1,
 ) -> DataFrame:
     """Random-hyperplane LSH near-dup pairs over an embedding column — the
@@ -224,55 +230,32 @@ def rh_lsh_pairs(
     exact-cosine verification, so the output has no false positives; recall
     is 1-(1-p^r)^b with p = 1 - θ/π per SimHash/Charikar.
 
-    Scale posture mirrors minhash_lsh_pairs (the round-11 port of its
-    measured playbook — same pair set and identical IEEE sim values as the
-    per-band-emission + dropDuplicates shape it replaces):
+    Banding, the bucket cap and the candidate self-join are
+    dedup.banded_kb + dedup.banded_pairs, the core minhash_lsh_pairs runs
+    (see those for the cap, the pair-once test, the salt split and the
+    explicit repartitions); this op adds the signature and the cosine
+    verify:
 
     * the signature is ONE nested higher-order expression (transform over
       an array<array<double>> plane literal), not num_bits unrolled
       aggregate subtrees — unrolling made codegen emit ~num_bits× the
       Java (the k9 46 s-cold lesson) and re-inlined the fold per band;
-    * the bands× shuffle carries ONLY the fixed-width per-vector metadata
-      (vid, kb, band, bucket); each membership carries its per-band
-      bucket array so the self-join emits a pair exactly once at the
-      FIRST shared kept band (no dropDuplicates aggregate over the
-      bands× duplicated pair stream), and the bucket cap arrives as a
-      usually-empty broadcast array instead of a window flag;
-    * vector payloads attach per unique candidate pair AFTER a thin-pair
-      repartition, pre-cast to array<double> with their norms
-      precomputed per VECTOR (the old shape re-derived both norms per
-      candidate pair — a dim-element fold ×2 ×pairs);
+    * vector payloads attach per unique candidate pair, pre-cast to
+      array<double> with their norms precomputed per VECTOR (the old
+      shape re-derived both norms per candidate pair — a dim-element fold
+      ×2 ×pairs);
     * the dot product is pinned behind a nondeterministic-flagged no-op
       so the threshold filter can't re-evaluate it on the non-codegen
       path (k9's measured 831→60 CPU-s hazard, same pin);
-    * degenerate buckets are dropped at ``max_bucket_size`` (documented
-      recall cut, members still pair via their other bands);
-    * ``selfjoin_salt`` splits each (band, bucket) cell's pair work
-      s·(s+1)/2 ways exactly as minhash_lsh_pairs does (see its docstring
-      for the replication scheme and the pair-once proof): one dense
-      embedding family colliding in every band otherwise caps the bucket
-      self-join at ``bands`` tasks, and AQE skew split never fires on the
-      KB-sized compute-bound partitions. Output pair set identical for
-      every s (pinned vs s=1 in tests/test_llm_ops.py); s=1 restores the
-      unsalted single-copy shape. Default 1 HERE (unlike
-      minhash_lsh_pairs): the shipped embedding corpus has no dense
-      family, so at bench scale the salt buys nothing and costs ~+4 s of
-      first-run codegen/JIT (measured interleaved at sf0.1: first
-      collect 5.0-5.4 s at s=1 vs 10.1 s at s=4, warm identical) — a
-      corpus with a giant near-dup family should pass s ≥ 4.
+    * the cap counts vectors (``max_bucket_size``);
+    * ``selfjoin_salt`` defaults to 1 HERE (4 in minhash_lsh_pairs): the
+      shipped embedding corpus has no dense family, so at bench scale the
+      salt buys nothing and costs ~+4 s of first-run codegen/JIT
+      (measured interleaved at sf0.1: first collect 5.0-5.4 s at s=1 vs
+      10.1 s at s=4, warm identical) — a corpus with a giant near-dup
+      family should pass s ≥ 4.
     """
-    if num_bits % bands != 0:
-        raise ValueError(
-            f"num_bits ({num_bits}) must be divisible by bands ({bands})"
-        )
-    id_type = dict(df.dtypes).get(id_col)
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        # the capped-bucket sentinel is vid + 2^32; a string id coerces the
-        # addition to double/NULL and silently drops pairs (k9's guard)
-        raise ValueError(
-            f"rh_lsh_pairs requires an integral id column; {id_col} is "
-            f"{id_type}"
-        )
+    check_banding(df, "rh_lsh_pairs", id_col, num_bits, bands, selfjoin_salt)
     r = num_bits // bands
     nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     vecs = df.select(
@@ -323,112 +306,13 @@ def rh_lsh_pairs(
             F.array().cast("array<int>")
         ),
     )
-    # ONE row per vector with the full bucket array (k9's round-11
-    # restructure, ported): the only cross-vector fact — which
-    # (band, bucket) cells exceed the cap — reduces via a map-side-partial
-    # groupBy to a usually-empty array<long> of (band<<32|bucket-low-bits)
-    # cells broadcast as ONE row; the kb array projects directly. Removes
-    # the cap window shuffle+sort, the per-vid kb aggregate shuffle and
-    # the kb broadcast build/probe (and that broadcast's per-corpus size
-    # ceiling — the new array is bounded by n_vecs/max_bucket_size, empty
-    # on healthy corpora).
-    per_vec = sig.select("vid", buckets.alias("bks"))
-    if cut_lineage:
-        # capped + withkb (both self-join sides, exchange-reused) consume
-        # this; without the cut the signature projection (the dominant
-        # num_bits×dim fold over the corpus) re-executes per branch
-        per_vec = per_vec.localCheckpoint(eager=True)
-    enc = lambda band, bucket: F.shiftleft(band.cast("long"), 32).bitwiseOR(  # noqa: E731
-        bucket.cast("long").bitwiseAND(F.lit(0xFFFFFFFF))
-    )
-    capped = (
-        per_vec.select(F.posexplode("bks").alias("band", "bucket"))
-        .groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n_vecs"))
-        .filter(F.col("n_vecs") > max_bucket_size)
-        .agg(F.collect_list(enc(F.col("band"), F.col("bucket"))).alias("capped"))
-    )
-    withkb = per_vec.crossJoin(F.broadcast(capped)).select(
-        "vid",
-        "bks",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.when(
-                ~F.array_contains(
-                    F.col("capped"), enc(b, F.element_at(F.col("bks"), b + 1))
-                ),
-                F.element_at(F.col("bks"), b + 1).cast("long"),
-            ).otherwise(F.col("vid") + F.lit(1 << 32)),
-        ).alias("kb"),
-    )
-    # explicit spread: the membership table is byte-tiny and AQE would
-    # coalesce an implicit exchange to one task (k9's measured hazard).
-    # Salt replication through ONE shared exchange (minhash_lsh_pairs'
-    # scheme, see its docstring): each row carries every sub-cell copy it
-    # serves — T(g) = {(g, q≥g)} ∪ {(p≤g, g)}, s copies after the (g, g)
-    # dedup — and the two join sides are barrier-pinned filters above the
-    # exchange (a: sp = g, b: sq = g), so the exchange is reused and the
-    # capped broadcast builds once (the two-exchange variant measured
-    # first-collect 5.0 → 10.4-13.3 s on this op).
-    if selfjoin_salt < 1:
-        raise ValueError(f"selfjoin_salt must be >= 1, got {selfjoin_salt}")
-    g = F.pmod(F.xxhash64("vid"), F.lit(selfjoin_salt)).cast("int")
-    copies = F.array_union(
-        F.transform(
-            F.sequence(F.col("g"), F.lit(selfjoin_salt - 1)),
-            lambda q: F.struct(
-                F.col("g").cast("int").alias("sp"), q.cast("int").alias("sq")
-            ),
-        ),
-        F.transform(
-            F.sequence(F.lit(0), F.col("g")),
-            lambda p: F.struct(
-                p.cast("int").alias("sp"), F.col("g").cast("int").alias("sq")
-            ),
-        ),
-    )
-    members = (
-        withkb.select("vid", "kb", F.posexplode("bks").alias("band", "bucket"))
-        .filter(F.element_at("kb", F.col("band") + 1) < F.lit(1 << 32))
-        .withColumn("g", g)
-        .select("vid", "kb", "band", "bucket", "g", F.explode(copies).alias("cell"))
-        .select(
-            "vid", "kb", "band", "bucket", "g",
-            F.col("cell.sp").alias("sp"), F.col("cell.sq").alias("sq"),
-        )
-        .repartition(nparts, "band", "bucket", "sp", "sq")
-    )
-    barrier = lambda c: F.when(  # noqa: E731
-        F.spark_partition_id() >= 0, c
-    ).otherwise(F.lit(True))
-    a = members.filter(barrier(F.col("sp") == F.col("g"))).alias("a")
-    b = members.filter(barrier(F.col("sq") == F.col("g"))).alias("b")
-    no_earlier_shared = F.lit(True)
-    for bp in range(bands - 1):
-        no_earlier_shared = no_earlier_shared & (
-            (F.lit(bp) >= F.col("a.band"))
-            | (F.col("a.kb").getItem(bp) != F.col("b.kb").getItem(bp))
-        )
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.sp") == F.col("b.sp"))
-            & (F.col("a.sq") == F.col("b.sq"))
-            & (
-                (F.col("a.sp") < F.col("a.sq"))
-                | (F.col("a.vid") < F.col("b.vid"))
-            )
-            & no_earlier_shared,
-        )
-        .select(
-            F.least(F.col("a.vid"), F.col("b.vid")).alias("vec_a"),
-            F.greatest(F.col("a.vid"), F.col("b.vid")).alias("vec_b"),
-        )
-        # thin-pair spread BEFORE payload attach (k9's rule): the verify
-        # below must not run concentrated on the hot bucket tasks
-        .repartition(nparts, "vec_a", "vec_b")
+    # the cap and both self-join sides consume this; without the cut the
+    # signature projection (the dominant num_bits×dim fold over the
+    # corpus) re-executes per branch
+    per_vec = sig.select("vid", buckets.alias("bks")).localCheckpoint(eager=True)
+    withkb = banded_kb(per_vec, "vid", bands, max_bucket_size)
+    cand = banded_pairs(
+        withkb, "vid", bands, selfjoin_salt, nparts, ("vec_a", "vec_b")
     )
     # per-VECTOR norm, computed once (the old per-pair cosine() re-derived
     # both norms per candidate); same IEEE fold as norm()

@@ -2588,13 +2588,7 @@ def k55_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(th.select(F.col("doc_id").alias("doc_b"), F.col("th").alias("th_b"))),
         "doc_b",
     )
-    pairs = pairs.withColumn(
-        "inter",
-        F.when(
-            F.spark_partition_id() >= 0,
-            F.size(F.array_intersect("th_a", "th_b")).cast("double"),
-        ).otherwise(F.lit(-1.0)),
-    )
+    pairs = pairs.withColumn("inter", D.overlap("th_a", "th_b"))
     c_ab = F.col("inter") / F.col("n_a").cast("double")
     c_ba = F.col("inter") / F.col("n_b").cast("double")
     return (
@@ -2999,15 +2993,7 @@ def k60_containment_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "doc_b",
     )
-    # the k9 nondeterministic no-op pin: array_intersect evaluated exactly
-    # once per pair, never substituted into the OR filter's two branches
-    pairs = pairs.withColumn(
-        "inter",
-        F.when(
-            F.spark_partition_id() >= 0,
-            F.size(F.array_intersect("th_a", "th_b")).cast("double"),
-        ).otherwise(F.lit(-1.0)),
-    )
+    pairs = pairs.withColumn("inter", D.overlap("th_a", "th_b"))
     return (
         pairs.select(
             "doc_a",
@@ -4573,29 +4559,16 @@ def k80_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # size-compatibility prune BEFORE array attach (k9's prefilter): the
     # n-only joins read just the int column off the parquet store (column
-    # pruning — no array IO), and J >= 0.9 requires min >= 0.9*max, with
-    # the 1e-9 slack keeping the prune output-neutral (the exact verify
-    # below still decides).
+    # pruning — no array IO).
     sized = (
         cand.join(tok_idx.select("dup_of", "n_c"), "dup_of")
         .join(bth.select("new_id", "n_b"), "new_id")
-        .filter(
-            F.least("n_b", "n_c").cast("double")
-            >= F.lit(0.9 - 1e-9) * F.greatest("n_b", "n_c").cast("double")
-        )
+        .filter(D.size_compatible("n_b", "n_c", 0.9))
     )
     pairs = sized.join(tok_idx.select("dup_of", "th_c"), "dup_of").join(
         bth.select("new_id", "th_b"), "new_id"
     )
-    # intersect pinned behind the nondeterministic no-op: evaluated once
-    # per candidate, never substituted into the threshold filter (k9's pin)
-    pairs = pairs.withColumn(
-        "inter",
-        F.when(
-            F.spark_partition_id() >= 0,
-            F.size(F.array_intersect("th_b", "th_c")).cast("double"),
-        ).otherwise(F.lit(-1.0)),
-    )
+    pairs = pairs.withColumn("inter", D.overlap("th_b", "th_c"))
     union = (F.col("n_b") + F.col("n_c")).cast("double") - F.col("inter")
     jac = F.col("inter") / union
     return (

@@ -7,6 +7,7 @@ rolling-hash reference, multimodal decode plumbing, approx-agg tolerance.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from marasa_spark.catalog import load_table
@@ -83,17 +84,88 @@ def test_shingle_hash_is_collision_free(spark, sf_dir):
     )
 
 
-def test_minhash_rejects_non_integral_id(spark):
-    """The capped-bucket sentinel (doc + 2^32) needs an integral id; a
-    string id would coerce to NULL and silently drop pairs (ADVICE r9) —
-    the op must refuse instead."""
-    import pytest
+@pytest.mark.parametrize("bad", ["bands", "id", "salt"])
+@pytest.mark.parametrize("op", ["minhash", "rh"])
+def test_banded_lsh_rejects_bad_args_before_any_job(spark, op, bad):
+    """Both banded-LSH ops refuse bad arguments before their first Spark
+    job (the eager set-grouping / signature checkpoints): bands must
+    divide the signature, the id must be integral (the capped-bucket
+    sentinel id + 2^32 would coerce a string id to NULL and silently drop
+    pairs — ADVICE r9), and selfjoin_salt must be >= 1."""
+    ids = ["a", "b"] if bad == "id" else [1, 2]
+    id_type = "string" if bad == "id" else "long"
+    kw = {"bands": {"bands": 5}, "id": {}, "salt": {"selfjoin_salt": 0}}[bad]
+    if op == "minhash":
+        df = spark.createDataFrame(
+            [(i, "x y z") for i in ids], f"doc_id {id_type}, text string"
+        )
+        call = lambda: D.minhash_lsh_pairs(df, "doc_id", "text", **kw)  # noqa: E731
+    else:
+        df = spark.createDataFrame(
+            [(i, [1.0, 0.5]) for i in ids],
+            f"vec_id {id_type}, embedding array<double>",
+        )
+        call = lambda: S.rh_lsh_pairs(df, "vec_id", "embedding", dim=2, **kw)  # noqa: E731
+    match = {
+        "bands": "divisible by bands", "id": "integral id", "salt": "selfjoin_salt"
+    }[bad]
+    sc = spark.sparkContext
+    group = f"banding-check-{op}-{bad}"
+    sc.setJobGroup(group, "banded-LSH argument check")
+    try:
+        with pytest.raises(ValueError, match=match):
+            call()
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == [], f"{op} ran {len(jobs)} Spark job(s) before rejecting {bad}"
 
-    df = spark.createDataFrame(
-        [("a", "x y z"), ("b", "x y z")], ["doc_id", "text"]
+
+def _near_dup_copies(spark, m: int, k: int):
+    """k exact copies each of m near-dup token sets: 200 shared tokens plus
+    one distinguishing token per set (pairwise Jaccard 200/202), so the m
+    sets share a (band, bucket) cell in nearly every band and the cell
+    holds k·m docs but only m distinct sets."""
+    base = " ".join(f"common{i}" for i in range(200))
+    rows = [(s * k + c, f"{base} fam{s}") for s in range(m) for c in range(k)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_minhash_cap_counts_docs_not_sets(spark):
+    """minhash_lsh_pairs collapses exact duplicates to one row per token
+    set before banding, but its bucket cap must count DOCS (the summed
+    group sizes), as on the uncollapsed corpus. With m < cap < k·m a
+    set-counting cap would keep the family cell; the doc-counting cap
+    drops it, so no cross-set pair survives (a set split off alone in
+    some band still yields its same-set pairs). At cap = k·m every pair
+    is present."""
+    m, k = 8, 10
+    docs = _near_dup_copies(spark, m, k)
+    kw = dict(num_hashes=32, bands=16, threshold=0.8)
+    full = D.minhash_lsh_pairs(docs, "doc_id", "text", max_bucket_size=m * k, **kw)
+    assert full.count() == m * k * (m * k - 1) // 2
+    capped = D.minhash_lsh_pairs(docs, "doc_id", "text", max_bucket_size=40, **kw)
+    cross = capped.filter(
+        (F.col("doc_a") / k).cast("int") != (F.col("doc_b") / k).cast("int")
+    ).count()
+    assert cross == 0, f"{cross} cross-set pairs survived a cap of 40 < {k}·{m} docs"
+
+
+def test_rh_cap_counts_vectors(spark):
+    """rh_lsh_pairs' cap counts vectors: n copies of one vector share
+    every (band, bucket) cell, so the family's pairs are all present at
+    max_bucket_size = n and all gone at n - 1."""
+    n = 12
+    vecs = spark.createDataFrame(
+        [(i, [1.0, -2.0, 0.5, 3.0]) for i in range(n)],
+        "vec_id long, embedding array<double>",
     )
-    with pytest.raises(ValueError, match="integral id"):
-        D.minhash_lsh_pairs(df, "doc_id", "text")
+    run = lambda cap: S.rh_lsh_pairs(  # noqa: E731
+        vecs, "vec_id", "embedding", dim=4, num_bits=8, bands=4,
+        max_bucket_size=cap,
+    ).count()
+    assert run(n) == n * (n - 1) // 2
+    assert run(n - 1) == 0
 
 
 def test_simhash_invariants(spark):

@@ -9,41 +9,11 @@ Rows-only queries (oracle=None) are executed and smoke-checked.
 
 from __future__ import annotations
 
-import datetime
-import decimal
-import math
+import os
 
 import pytest
 
 from marasa_spark.registry import REGISTRY, queries_map
-
-
-def canon_value(v):
-    if isinstance(v, decimal.Decimal):
-        v = float(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # -0.0 vs 0.0 normalization; exact otherwise
-        return v + 0.0
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat(sep=" ", timespec="microseconds")
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(canon_value(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, canon_value(x)) for k, x in v.items()))
-    if isinstance(v, bytearray):
-        return bytes(v)
-    return v
-
-
-def canon_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(canon_value(r[i]) for i in order) for r in rows]
-    out.sort(key=repr)
-    return out
 
 
 queries_map()  # populate REGISTRY
@@ -54,11 +24,11 @@ _DS = None
 
 def _driver_sim():
     """Load tools/driver_sim.py as a module (it is a script, not a
-    package member) to share its type-hazard logic instead of forking it."""
+    package member) to share its canonical compare and type-hazard logic
+    instead of forking them."""
     global _DS
     if _DS is None:
         import importlib.util
-        import os
 
         path = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -103,6 +73,7 @@ def test_oracle_parity(qid, spark, duck, sf_dir):
     assert len(srows) == len(drows), (
         f"{qid}: row count differs: spark={len(srows)} duck={len(drows)}"
     )
+    canon_rows = _driver_sim().canon_rows
     s = canon_rows(scols, [tuple(r) for r in srows])
     d = canon_rows(dcols, drows)
     if s != d:
@@ -164,6 +135,7 @@ def test_tiny_scale_parity(qid, spark, tiny_duck):
     assert len(srows) == len(drows), (
         f"{qid}@sf0.001: row count differs: spark={len(srows)} duck={len(drows)}"
     )
+    canon_rows = _driver_sim().canon_rows
     assert canon_rows(scols, [tuple(r) for r in srows]) == canon_rows(dcols, drows)
 
 
@@ -172,12 +144,5 @@ def test_driver_window_pinned():
     ids. A new registration sorting before 'd17_group_concat' silently
     evicts a driver-verified row (it happened in round 4: a13/a14 pushed
     d18-d20 out). This test makes any window shift an explicit decision."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "driver_sim", "/root/repo/tools/driver_sim.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
     queries_map()
-    mod.check_driver_window(REGISTRY)
+    _driver_sim().check_driver_window(REGISTRY)

@@ -111,6 +111,43 @@ def test_lsh_band_shuffle_carries_no_token_payload(spark):
         )
 
 
+def test_k21_band_shuffle_carries_no_vector_payload(spark):
+    """k21's twin of the pin above: rh_lsh_pairs runs the same banded
+    candidate join, so its (band, bucket) exchanges must carry only
+    (vid, kb, band, bucket, salt) rows — a bare vector attribute (`v#N`,
+    `embedding#N`) below a band-keyed exchange means the dim-double
+    payload rides the bands× amplified shuffle. k21 checkpoints the
+    per-vector buckets before banding, so its registered plan shows the
+    band exchanges."""
+    import re
+
+    plan = plan_of(spark, "k21_embed_lsh_neardup")
+    frags = plan.split("Exchange hashpartitioning(band")
+    assert len(frags) > 1, "expected a (band, bucket)-keyed exchange in the plan"
+    for frag in frags[1:]:
+        child = frag[:400]
+        assert not re.search(r"[\[, ](v|embedding)#\d+", child), (
+            "vector payload rides the band-bucket shuffle:\n" + child
+        )
+
+
+def test_k21_dot_evaluated_exactly_once(spark):
+    """k21's twin of test_k9_intersect_evaluated_exactly_once: the cosine
+    verify's dot product (the dim-element aggregate(zip_with) fold) must
+    appear ONCE in the executed plan, projected behind the
+    SPARK_PARTITION_ID() >= 0 no-op so the threshold filter compares the
+    projected column instead of re-running the fold per reference. The
+    signature's plane folds sit inside the per-vector checkpoint, so the
+    only zip_with left in the registered plan is the verify's."""
+    plan = plan_of(spark, "k21_embed_lsh_neardup", execute=True)
+    final = plan.split("== Initial Plan ==")[0]
+    n = final.count("zip_with(")
+    assert n == 1, f"the dot product appears {n}x in k21's executed plan"
+    assert "CASE WHEN (SPARK_PARTITION_ID() >= 0) THEN aggregate(zip_with(" in final, (
+        "k21's dot product is not behind the pushdown barrier"
+    )
+
+
 def test_partitioned_sink_prunes_directories(spark):
     """a6: the read-back filter on the partition key must become a
     PartitionFilters entry (directory pruning before IO) — not a post-scan

@@ -17,20 +17,19 @@ the values match.
 import datetime
 import decimal
 import math
+import os as _os
 import sys
 
 import duckdb
 import pyarrow as pa
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
 import __spark_entry__ as e
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 # override with MARASA_SIM_SF_DIR to sweep other scales (sf0.001 exercises
 # tiny/empty-group edge cases the driver's sf0.01 run never hits)
-import os as _os
-
 SF_DIR = _os.environ.get("MARASA_SIM_SF_DIR", "/root/testdata/sf0.01")
 
 
@@ -47,6 +46,8 @@ def canon(v):
         return tuple(canon(x) for x in v)
     if isinstance(v, dict):
         return tuple(sorted((k, canon(x)) for k, x in v.items()))
+    if isinstance(v, bytearray):
+        return bytes(v)
     return v
 
 
