@@ -31,7 +31,8 @@ the API shape follows SURVEY's reconstruction of pjz/marasa: ``put``/
   from the snapshot.
 
 Record schema (marasa stores JSON payloads keyed by string keys):
-``ns string, key string, seqno long, ts timestamp, value string``.
+``ns string, key string, seqno long, ts timestamp, value string`` — every
+read's columns in this order, whatever the store's state.
 
 Journal layout (two tables, ``log/`` and ``snapshot/``, one journal each)::
 
@@ -106,6 +107,7 @@ LOG_SCHEMA = "ns string, key string, seqno long, ts timestamp, value string"
 # files split every N writes, named by starting seqno"). Partition pruning
 # on it turns time travel into a bounded read.
 DISK_SCHEMA = LOG_SCHEMA + ", segment long"
+_DISK_COLUMNS = [field.split()[0] for field in DISK_SCHEMA.split(", ")]
 
 HIGH_WATER_APP = "marasa.seqno"  # txn appId whose version is the high-water
 BATCH_APP_PREFIX = "marasa.batch."  # txn appId prefix of append_once ids
@@ -619,19 +621,24 @@ class MarasaLog:
         meta = _meta_actions(state.schema.json(), []) if version == 0 else []
         return meta + [_add_action(self.snap_dir, p) for p in sorted(_list_parts(sub))]
 
-    def _read_table(self, table: str) -> DataFrame | None:
-        """The table's live files as resolved by its journal, built once
-        per journal version; None for no commit or no live file (an empty
-        store). A missing live file or an unreadable one RAISES — a
-        corrupt log must never be indistinguishable from an empty one."""
-        j = self._journal(table)
-        if j is None or not j.adds:
-            return None
+    def _read_table(self, table: str, j: _Journal | None = None) -> DataFrame:
+        """The live files of ``table`` as journal state ``j`` (default: the
+        head) resolves them, in ``DISK_SCHEMA`` column order, built once
+        per journal version; an empty frame of that schema for no commit
+        or no live file. A missing live file or an unreadable one RAISES —
+        a corrupt log must never be indistinguishable from an empty one."""
+        j = j or self._journal(table)
+        version = j.version if j else -1
         hit = self._frames.get(table)
-        if hit is None or hit[0] != j.version:
-            files = [f"{table}/{rel}" for rel in sorted(j.adds)]
-            df = self.spark.read.option("basePath", table).schema(DISK_SCHEMA).parquet(*files)
-            hit = self._frames[table] = (j.version, df)
+        if hit is None or hit[0] != version:
+            files = [f"{table}/{rel}" for rel in sorted(j.adds)] if j else []
+            if files:
+                df = self.spark.read.option("basePath", table).schema(DISK_SCHEMA).parquet(*files)
+            else:
+                # limit(0) makes it an empty LocalRelation, which the
+                # optimizer propagates: an empty store's read runs no job
+                df = self.spark.createDataFrame([], DISK_SCHEMA).limit(0)
+            hit = self._frames[table] = (version, df.select(*_DISK_COLUMNS))
         return hit[1]
 
     def append_once(self, records: DataFrame, batch_id: str) -> int:
@@ -714,7 +721,7 @@ class MarasaLog:
         j = self._journal(self.log_dir)
         return j.txns.get(HIGH_WATER_APP, 0) if j else 0
 
-    def _full_log(self) -> DataFrame | None:
+    def _full_log(self) -> DataFrame:
         """The complete retained history. Compaction adds a snapshot but —
         like marasa's segments — does not delete log files, so history and
         time travel stay exact."""
@@ -727,62 +734,47 @@ class MarasaLog:
         j = self._journal(self.snap_dir)
         return j.txns[SNAPSHOT_APP] if j else 0
 
-    def _union_snapshot_tail(self) -> DataFrame | None:
-        """snapshot(≤S) ∪ log-tail(>S) — the bounded-replay read set. A
-        committed snapshot with no live file (every key tombstoned at S)
-        falls back to replaying the full log. S is read first: a compact
-        landing in between only adds overlap, which the fold collapses."""
-        s = self._latest_snapshot_seq()
-        tail = self._full_log()
-        snap = self._read_table(self.snap_dir)
-        if snap is None:
-            return tail
-        if tail is not None:
-            return snap.unionByName(tail.filter(F.col("seqno") > s))
-        return snap
+    def _union_snapshot_tail(self) -> DataFrame:
+        """snapshot(≤S) ∪ log-tail(>S) — the bounded-replay read set; the
+        full log until the first compact commits. S and the fold's files
+        come from one snapshot journal state, read before the log's."""
+        j = self._journal(self.snap_dir)
+        log = self._full_log()
+        if j is None:
+            return log
+        snap = self._read_table(self.snap_dir, j)
+        return snap.unionByName(log.filter(F.col("seqno") > j.txns[SNAPSHOT_APP]))
 
     # -- read path ----------------------------------------------------------
 
     @staticmethod
     def _fold_latest(log: DataFrame) -> DataFrame:
-        """The log fold: last change per (ns, key) — marasa ``get`` for every
-        key at once, as one window (shuffles once on the state key)."""
+        """The log fold: last change per (ns, key), as one window (shuffles
+        once on the state key), minus keys whose last change is a
+        tombstone — marasa ``get`` for every key at once."""
         w = Window.partitionBy("ns", "key").orderBy(F.col("seqno").desc())
         return (
             log.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+            .filter((F.col("_rn") == 1) & F.col("value").isNotNull())
+            .drop("_rn", "segment")
         )
 
     def latest(self, ns: str | None = None) -> DataFrame:
         """Current state (marasa ``get(ns, key)`` for all keys)."""
         log = self._union_snapshot_tail()
-        if log is None:
-            return self.spark.createDataFrame([], LOG_SCHEMA)
         if ns is not None:
             log = log.filter(F.col("ns") == ns)  # partition-pruned
-        return (
-            self._fold_latest(log)
-            .filter(F.col("value").isNotNull())  # tombstone-as-last = gone
-            .drop("segment")
-        )
+        return self._fold_latest(log)
 
     def lookup(self, ns: str, keys: list[str]) -> DataFrame:
         """Batch point lookup: latest value for the given keys of ONE
         namespace. The predicates apply BEFORE the fold, so they reach the
-        scan — ``ns`` prunes whole directories on the partitioned layout
-        and ``key IN`` is a parquet row-group predicate; a point read
-        touches a handful of row groups instead of folding the namespace.
+        scan: ``ns`` prunes whole log directories and ``key IN`` is pushed
+        to the parquet reader. The snapshot is not clustered by key, so
+        inside it the predicate prunes no row group yet (ROADMAP item 3).
         (``get`` is the single-key scalar convenience on top of this.)"""
         log = self._union_snapshot_tail()
-        if log is None:
-            return self.spark.createDataFrame([], LOG_SCHEMA)
-        pruned = log.filter((F.col("ns") == ns) & F.col("key").isin(list(keys)))
-        return (
-            self._fold_latest(pruned)
-            .filter(F.col("value").isNotNull())
-            .drop("segment")
-        )
+        return self._fold_latest(log.filter((F.col("ns") == ns) & F.col("key").isin(list(keys))))
 
     def get(self, ns: str, key: str, seqno: int | None = None) -> str | None:
         """Point lookup (latest or as-of). The only collect in the class —
@@ -795,18 +787,12 @@ class MarasaLog:
         """Time travel: state as of ``seqno`` (prefix fold over the FULL log
         — the snapshot can't serve prefixes earlier than its high-water)."""
         log = self._full_log()
-        if log is None:
-            return self.spark.createDataFrame([], LOG_SCHEMA)
         if ns is not None:
             log = log.filter(F.col("ns") == ns)
         # segment pruning: the prefix can only live in segments whose start
         # is <= seqno (null segment = pre-segmentation snapshot rows)
         log = log.filter(F.col("segment").isNull() | (F.col("segment") <= seqno))
-        return (
-            self._fold_latest(log.filter(F.col("seqno") <= seqno))
-            .filter(F.col("value").isNotNull())  # tombstones hide the key as-of too
-            .drop("segment")
-        )
+        return self._fold_latest(log.filter(F.col("seqno") <= seqno))
 
     def read(self, ns: str, seqno: int) -> DataFrame:
         """marasa ``read(ns, seqno)`` — namespace state as of a seqno
@@ -820,8 +806,6 @@ class MarasaLog:
         Served from the FULL log (snapshots only accelerate ``latest``);
         segment pruning drops every file whose range ends before ``since``."""
         log = self._full_log()
-        if log is None:
-            return self.spark.createDataFrame([], LOG_SCHEMA)
         if ns is not None:
             log = log.filter(F.col("ns") == ns)
         log = log.filter(
@@ -836,20 +820,18 @@ class MarasaLog:
     def history(self, ns: str, key: str) -> DataFrame:
         """Ordered change history for one key (marasa ``history``), from the
         full retained log."""
-        log = self._full_log()
-        if log is None:
-            return self.spark.createDataFrame([], LOG_SCHEMA)
         return (
-            log.filter((F.col("ns") == ns) & (F.col("key") == key))
+            self._full_log()
+            .filter((F.col("ns") == ns) & (F.col("key") == key))
             .orderBy("seqno")
             .drop("segment")
         )
 
     def namespaces(self) -> DataFrame:
-        log = self._union_snapshot_tail()
-        if log is None:
-            return self.spark.createDataFrame([], "ns string")
-        return log.select("ns").distinct()
+        """Every namespace that has a log — live keys or all tombstoned,
+        the namespaces :meth:`history` and :meth:`changes` serve — so
+        :meth:`compact` never changes the answer."""
+        return self._full_log().select("ns").distinct()
 
     # -- maintenance --------------------------------------------------------
 

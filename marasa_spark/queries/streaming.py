@@ -337,6 +337,7 @@ def i10_stream_to_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     Time-sliced batches + the store's in-batch (ns,key,ts,value) seqno
     order make last-write-wins reproduce global event-time order."""
     from marasa_spark.log import MarasaLog
+    from marasa_spark.queries.logstore import _events_as_log
     from marasa_spark.streaming.runtime import stage_event_chunks, read_event_stream
 
     stage = fresh_scratch("i10_stream", sf_dir, create=True)
@@ -344,14 +345,7 @@ def i10_stream_to_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = MarasaLog(spark, f"{stage}/log")
 
     def sink_batch(batch: DataFrame, batch_id: int) -> None:
-        store.append(
-            batch.select(
-                F.col("event_type").alias("ns"),
-                F.col("user_id").cast("string").alias("key"),
-                F.col("ts"),
-                F.col("props").alias("value"),
-            )
-        )
+        store.append(_events_as_log(spark, sf_dir, events=batch))
 
     q = (
         read_event_stream(spark, f"{stage}/chunks")
@@ -609,6 +603,7 @@ def i16_stream_exactly_once_replay(spark: SparkSession, sf_dir: str) -> DataFram
     maxFilesPerTrigger=1 over lexicographically-listed chunks (the same
     property i11's metrics row relies on)."""
     from marasa_spark.log import MarasaLog
+    from marasa_spark.queries.logstore import _events_as_log
     from marasa_spark.streaming.runtime import stage_event_chunks, read_event_stream
 
     stage = fresh_scratch("i16_replay", sf_dir, create=True)
@@ -616,15 +611,7 @@ def i16_stream_exactly_once_replay(spark: SparkSession, sf_dir: str) -> DataFram
     store = MarasaLog(spark, f"{stage}/log")
 
     def sink_batch(batch: DataFrame, batch_id: int) -> None:
-        store.append_once(
-            batch.select(
-                F.col("event_type").alias("ns"),
-                F.col("user_id").cast("string").alias("key"),
-                F.col("ts"),
-                F.col("props").alias("value"),
-            ),
-            f"b{batch_id}",
-        )
+        store.append_once(_events_as_log(spark, sf_dir, events=batch), f"b{batch_id}")
 
     for _attempt in range(2):  # first delivery, then the full replay
         q = (

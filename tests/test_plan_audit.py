@@ -391,6 +391,47 @@ def test_log_read_set_starts_no_job(spark, tmp_path):
     assert not started, f"building the log read set started jobs {started}"
 
 
+# read -> max Exchange operators in its final executed plan, measured on a
+# compacted store with a tail (local[2]): the state reads fold with one
+# (ns, key) shuffle, history sorts with one range exchange, namespaces
+# aggregates with one, and the CDC feed is a filtered scan
+LOG_READ_EXCHANGES = {
+    "latest": 1,
+    "lookup": 1,
+    "asof": 1,
+    "changes": 0,
+    "history": 1,
+    "namespaces": 1,
+}
+
+
+def test_log_read_exchange_budget(spark, tmp_path):
+    from marasa_spark.log import MarasaLog
+
+    log = MarasaLog(spark, str(tmp_path / "budget"), segment_size=3)
+    log.put("a", k1="1", k2="2", k3="3")
+    log.put("b", k1="x")
+    log.delete("a", ["k2"])
+    log.compact()
+    log.put("a", k1="11", k5="5")
+    log.delete("b", ["k1"])
+    reads = {
+        "latest": log.latest(),
+        "lookup": log.lookup("a", ["k1", "k2"]),
+        "asof": log.asof(5),
+        "changes": log.changes(0),
+        "history": log.history("a", "k1"),
+        "namespaces": log.namespaces(),
+    }
+    for name, df in reads.items():
+        df.collect()
+        # AQE prints the final plan, then the initial one; count the final
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        n = final.count("Exchange ") - final.count("ReusedExchange")
+        assert n <= LOG_READ_EXCHANGES[name], f"{name}: {n} exchanges:\n{final}"
+
+
 def test_heavy_hitters_shuffles_only_candidates(spark):
     """m29: the exact-count pass must semi-join the exploded tokens against
     the BROADCAST candidate set BEFORE the groupBy — the point of the
