@@ -466,13 +466,14 @@ def minhash_lsh_pairs(
             F.transform("tset", lambda t: F.xxhash64(t)).alias("th"),
         )
     )
-    # materialize the shared prefix ONCE (the connected_components
+    # materialize the shared prefix ONCE (the connected_components_star
     # pattern): this scan+shuffle lineage is consumed by several branches
     # (sets ×2 broadcasts, toks_df→sig, toks_h ×2) and AQE plans each
     # broadcast subquery independently, so without the cut the grouping
     # re-executes per branch — measured 9 duplicate prefix jobs / ~4 s of
-    # a 16 s sf0.1 cold build. Lineage-cut tradeoff documented in
-    # connected_components; disk-backed at scale like any shuffle.
+    # a 16 s sf0.1 cold build. The cut trades lineage (recompute on
+    # executor loss) for one materialization; disk-backed at scale like
+    # any shuffle.
     if cut_lineage:
         grp = grp.localCheckpoint(eager=True)
     toks_df = grp.select(F.col("gid").alias("doc"), "toks", "gn")
@@ -647,75 +648,23 @@ def minhash_lsh_pairs(
     return cross
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iters: int = 20,
-) -> DataFrame:
-    """Group near-dup pairs into clusters: every node gets the minimum
-    reachable id as its ``cluster`` label (min-label propagation to a
-    fixpoint) — the step that turns a pair list into keep/drop decisions.
-
-    Iterative: per round, each node takes min(own label, neighbors'
-    labels); rounds needed = cluster diameter (near-dup clusters are
-    shallow — a handful of rounds). The ONLY driver-side value per round is
-    the converged? count (one scalar), the standard pattern for iterative
-    graph algorithms on Spark; labels are localCheckpoint'ed so lineage
-    stays flat. At 100 TB scale the per-round cost is two shuffles on the
-    edge key — switch to large-star/small-star if diameters grow."""
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionAll(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-    )
-    # materialize ONCE: the pair source is typically the most expensive
-    # plan in the pipeline (a Jaccard verify or LSH candidate join), and
-    # every propagation round below joins against `edges` — without this
-    # checkpoint each round re-executes that whole lineage (measured: 21
-    # min instead of ~1 at sf0.1 for k25).
-    edges = edges.localCheckpoint(eager=True)
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "cluster", F.col("node")
-    )
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("cluster").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster"), F.coalesce(F.col("nmin"), F.col("cluster"))
-                ).alias("cluster"),
-                (F.col("nmin") < F.col("cluster")).alias("_changed"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    return labels
-
-
 def connected_components_star(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iters: int = 25,
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    100 TB replacement for :func:`connected_components`'s min-label
-    propagation. Label propagation needs one round per hop of cluster
-    DIAMETER; the star operations contract whole trees toward their
-    minimum node, converging in O(log²) rounds even on path-shaped
-    components — the difference between 4 and 60 shuffles when a dup
-    chain is long (common after transitive LSH merging).
+    """Group near-dup pairs into clusters: every node gets the minimum
+    reachable id as its ``cluster`` label — the step that turns a pair
+    list into keep/drop decisions (k25, k31, k47, k49).
+
+    Alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"): min-label
+    propagation needs one round per hop of cluster DIAMETER; the star
+    operations contract whole trees toward their minimum node, converging
+    in O(log²) rounds even on path-shaped components — the difference
+    between 4 and 60 shuffles when a dup chain is long (common after
+    transitive LSH merging).
 
     Per round: large-star hangs every strictly-larger neighbor of ``u``
     under ``min(N(u) ∪ {u})``; small-star re-hangs the smaller-or-equal
@@ -727,8 +676,10 @@ def connected_components_star(
 
     At the fixpoint the edge set is a star forest (child → component
     minimum), so the label table falls out of the final edges without a
-    closure pass. Returns (node, cluster) like min-label propagation —
-    equivalence on identical inputs is pinned in tests/test_dedup_star.py.
+    closure pass. Returns (node, cluster) for every node of a non-self
+    pair; agreement with a union-find reference is pinned in
+    tests/test_dedup_star.py. Reaching ``max_iters`` without a fixpoint
+    raises RuntimeError — a partial labelling is never returned.
     """
     e = (
         pairs.select(
@@ -738,9 +689,11 @@ def connected_components_star(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    # cut the pair-source lineage before iterating (see
-    # connected_components): round 1's sym/large-star would otherwise
-    # re-execute the expensive candidate/verify plan twice.
+    # cut the pair-source lineage before iterating: the pair source is
+    # typically the most expensive plan in the pipeline (a Jaccard verify
+    # or LSH candidate join), and round 1's sym/large-star would otherwise
+    # re-execute it twice (without a cut, per-round re-execution once
+    # took k25 21 min instead of ~1 at sf0.1).
     e = e.localCheckpoint(eager=True)
     prev: tuple[int, int] | None = None
     for _ in range(max_iters):
@@ -777,6 +730,10 @@ def connected_components_star(
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint after {max_iters} rounds"
+        )
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("cluster")).unionAll(
         e.select(F.col("v").alias("node"), F.col("v").alias("cluster"))
     )

@@ -1,47 +1,44 @@
-"""Baseline JPEG (ITU-T T.81) grayscale reference codec — pure stdlib.
+"""Baseline JPEG (ITU-T T.81) reference codec — pure stdlib.
 
-Round-8 narrowing of the multimodal external-codec slot: baseline
-sequential-DCT JPEG with a single (luminance) component needs no external
-library — the whole pipeline is marker parsing, canonical Huffman decode
-with 0xFF00 byte unstuffing, DC prediction, AC run-length/EOB expansion,
-zigzag + dequantization, and a separable 2-D IDCT — all expressible with
+Baseline sequential-DCT JPEG needs no external library: the whole
+pipeline is marker parsing, canonical Huffman decode with 0xFF00 byte
+unstuffing, DC prediction, AC run-length/EOB expansion, zigzag +
+dequantization, a separable 2-D IDCT, and (for color) nearest-neighbor
+chroma upsampling plus integer YCbCr -> RGB — all expressible with
 ``struct`` and ``math``. This module implements:
 
-* :func:`decode_jpeg_gray` — a REAL entropy decoder for any baseline
-  grayscale JPEG (standard or custom Huffman/quant tables, restart
-  markers, non-multiple-of-8 dimensions). Color (multi-component),
-  progressive (SOF2), and arithmetic-coded JPEGs raise
-  ``NotImplementedError`` — that remainder is the declared external-codec
-  slot (chroma upsampling + YCbCr conversion are where PIL/libjpeg
-  genuinely earn their keep).
-* :func:`synthesize_jpeg_gray` — an encoder for BLOCK-CONSTANT images
-  (every 8x8 block one value): with an all-ones quant table a constant
-  block's only nonzero coefficient is the DC (exactly ``8 * (v - 128)``),
-  so the encode → entropy-decode → IDCT round trip is EXACT and a DuckDB
-  closed-form oracle can check the decoded pixels (k87).
+* :func:`decode_jpeg` — a REAL entropy decoder for baseline grayscale,
+  4:4:4 color and 4:2:0 chroma-subsampled color JPEGs (standard or custom
+  Huffman/quant tables, restart markers, non-multiple-of-8/16
+  dimensions). Progressive (SOF2), arithmetic-coded, 12-bit, other
+  sampling-factor combinations and filtered chroma upsampling raise
+  ``NotImplementedError`` — the declared slot where libjpeg/PIL plug in.
+* :func:`synthesize_jpeg_gray`, :func:`synthesize_jpeg_color`,
+  :func:`synthesize_jpeg_color_420` — encoders for BLOCK-CONSTANT images
+  (one writer, :func:`_flat_scan`): with an all-ones quant table a
+  constant block's only nonzero coefficient is the DC (exactly
+  ``8 * (v - 128)``), so the encode -> entropy-decode -> IDCT round trip
+  is EXACT and a DuckDB closed-form oracle can check the decoded pixels
+  (k87, k90, k91).
 * :func:`synthesize_jpeg_from_coefficients` — an encoder that writes
   arbitrary quantized coefficient blocks, so tests can drive the AC
   run-length/ZRL/EOB and restart-marker paths with content the
   block-constant oracle fixtures never produce.
 
-Scale posture matches the PNG codec: decode runs per-row inside
-Arrow-batched ``mapInPandas`` (parallelism follows the id partitioning,
-payload bytes never reach the driver).
+Spark-side, decode runs per row through
+:func:`marasa_spark.ops.multimodal.pixel_stats` (Arrow-batched, payload
+bytes never reach the driver).
 
-Tables: the Huffman tables embedded here are the "typical" luminance
-tables of ITU-T T.81 Annex K.3 (public specification text, reproduced by
-every JPEG implementation); the zigzag order is Figure A.6 of the same
-standard.
+Tables: the Huffman tables embedded here are the "typical" luminance and
+chrominance tables of ITU-T T.81 Annex K.3 (public specification text,
+reproduced by every JPEG implementation); the zigzag order is Figure A.6
+of the same standard.
 """
 
 from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
 
 # ITU-T T.81 Figure A.6 — zigzag index -> (row, col) raster index
 ZIGZAG = [
@@ -290,83 +287,84 @@ def _headers(
     return bytes(out)
 
 
-def synthesize_jpeg_gray(width: int, height: int, block_fn) -> bytes:
-    """A valid baseline grayscale JPEG whose 8x8 blocks are each CONSTANT:
-    ``block_fn(bx, by) -> 0..255`` gives the value of block column ``bx``,
-    block row ``by`` (edge blocks pad by extending the constant, so
-    cropping recovers it exactly). With the all-ones quant table a constant
-    block quantizes to a single DC coefficient ``8 * (v - 128)`` and no AC
-    terms, so decode is EXACT — the fixture family behind k87's closed-form
-    oracle. DC coefficients are differentially coded with the Annex K DC
-    table; every AC sequence is one EOB symbol from the Annex K AC table
-    (both tables are parsed from the DHT segments by the decoder — nothing
-    is implicit)."""
-    out = bytearray(_headers(width, height, [1] * 64))
+# encode-side (symbol -> (code, length)) maps: luminance, chrominance
+_LUM_CODES = (
+    dict(zip(DC_LUM_VALS, _canonical_codes(DC_LUM_BITS))),
+    dict(zip(AC_LUM_VALS, _canonical_codes(AC_LUM_BITS))),
+)
+_CHR_CODES = (
+    dict(zip(DC_CHR_VALS, _canonical_codes(DC_CHR_BITS))),
+    dict(zip(AC_CHR_VALS, _canonical_codes(AC_CHR_BITS))),
+)
+
+
+def _write_dc(w: _BitWriter, dc_codes: dict, diff: int) -> None:
+    """Write one DC difference: its Annex K category code, then the
+    ``size`` magnitude bits (negative values in one's complement)."""
+    size = _category(diff)
+    if size > 11:
+        raise ValueError(f"DC coefficient diff {diff} exceeds baseline category 11")
+    code, length = dc_codes[size]
+    w.write(code, length)
+    if size:
+        w.write(diff if diff >= 0 else diff + (1 << size) - 1, size)
+
+
+def _flat_scan(
+    width: int, height: int, mcu: int, reps: "tuple[int, ...]", mcu_fn
+) -> bytes:
+    """The one block-constant baseline JPEG writer: every ``mcu``-pixel
+    MCU carries one constant per component (``mcu_fn(mx, my)`` -> value
+    for grayscale, (y, cb, cr) for color) and ``reps[c]`` DC-only blocks
+    of component ``c`` — (1,) grayscale, (1, 1, 1) 4:4:4, (4, 1, 1)
+    4:2:0 at ``mcu`` 16. With all-ones quant tables a constant block's
+    only nonzero coefficient is its DC ``8 * (v - 128)``, so decode is
+    EXACT. DC values are differentially coded per component, every AC
+    sequence is one EOB symbol; Y uses the Annex K luminance Huffman
+    pair, Cb/Cr the chrominance pair."""
+    color = len(reps) == 3
+    out = bytearray(
+        _headers(width, height, [1] * 64, color=color, subsample=mcu == 16)
+    )
     w = _BitWriter()
-    dc_codes = dict(zip(DC_LUM_VALS, _canonical_codes(DC_LUM_BITS)))
-    ac_codes = dict(zip(AC_LUM_VALS, _canonical_codes(AC_LUM_BITS)))
-    pred = 0
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            v = block_fn(bx, by)
-            if not (0 <= v <= 255):
-                raise ValueError("block value out of range")
-            dc = 8 * (v - 128)
-            diff = dc - pred
-            pred = dc
-            size = _category(diff)
-            code, length = dc_codes[size]
-            w.write(code, length)
-            if size:
-                w.write(diff if diff >= 0 else diff + (1 << size) - 1, size)
-            code, length = ac_codes[0x00]  # EOB
-            w.write(code, length)
+    preds = [0] * len(reps)
+    for my in range((height + mcu - 1) // mcu):
+        for mx in range((width + mcu - 1) // mcu):
+            comps = mcu_fn(mx, my) if color else (mcu_fn(mx, my),)
+            if len(comps) != len(reps) or not all(0 <= v <= 255 for v in comps):
+                raise ValueError("block values must be 0..255, (y, cb, cr) for color")
+            for ci, n in enumerate(reps):
+                dc_codes, ac_codes = _CHR_CODES if ci else _LUM_CODES
+                dc = 8 * (comps[ci] - 128)
+                for _ in range(n):
+                    _write_dc(w, dc_codes, dc - preds[ci])
+                    preds[ci] = dc
+                    w.write(*ac_codes[0x00])  # EOB
     w.flush()
     out += w.out
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
 
+def synthesize_jpeg_gray(width: int, height: int, block_fn) -> bytes:
+    """A valid baseline grayscale JPEG whose 8x8 blocks are each CONSTANT:
+    ``block_fn(bx, by) -> 0..255`` gives the value of block column ``bx``,
+    block row ``by`` (edge blocks pad by extending the constant, so
+    cropping recovers it exactly) — the fixture family behind k87's
+    closed-form oracle (see :func:`_flat_scan`)."""
+    return _flat_scan(width, height, 8, (1,), block_fn)
+
+
 def synthesize_jpeg_color(width: int, height: int, block_fn) -> bytes:
     """A valid baseline 4:4:4 color JPEG whose 8x8 blocks each carry a
     CONSTANT (Y, Cb, Cr): ``block_fn(bx, by) -> (y, cb, cr)`` with each
-    component 0..255. With all-ones quant tables every block holds only
-    its DC coefficient, so the per-plane decode is exact and the RGB
-    output is the deterministic integer YCbCr conversion of the block
-    constants — the fixture family behind the color-decode oracle (k90).
-    The interleaved scan carries one block per component per MCU, Y using
-    the Annex K luminance Huffman pair and Cb/Cr the chrominance pair,
-    with three independent DC predictors — the real multi-component
-    entropy layout, not a grayscale re-skin."""
-    out = bytearray(_headers(width, height, [1] * 64, color=True))
-    w = _BitWriter()
-    lum_dc = dict(zip(DC_LUM_VALS, _canonical_codes(DC_LUM_BITS)))
-    lum_ac = dict(zip(AC_LUM_VALS, _canonical_codes(AC_LUM_BITS)))
-    chr_dc = dict(zip(DC_CHR_VALS, _canonical_codes(DC_CHR_BITS)))
-    chr_ac = dict(zip(AC_CHR_VALS, _canonical_codes(AC_CHR_BITS)))
-    preds = [0, 0, 0]
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            comps = block_fn(bx, by)
-            if len(comps) != 3 or not all(0 <= v <= 255 for v in comps):
-                raise ValueError("block_fn must yield (y, cb, cr) in 0..255")
-            for ci, v in enumerate(comps):
-                dc_codes = lum_dc if ci == 0 else chr_dc
-                ac_codes = lum_ac if ci == 0 else chr_ac
-                dc = 8 * (v - 128)
-                diff = dc - preds[ci]
-                preds[ci] = dc
-                size = _category(diff)
-                code, length = dc_codes[size]
-                w.write(code, length)
-                if size:
-                    w.write(diff if diff >= 0 else diff + (1 << size) - 1, size)
-                code, length = ac_codes[0x00]  # EOB
-                w.write(code, length)
-    w.flush()
-    out += w.out
-    out += b"\xff\xd9"
-    return bytes(out)
+    component 0..255. Every block holds only its DC coefficient, so the
+    per-plane decode is exact and the RGB output is the deterministic
+    integer YCbCr conversion of the block constants — the fixture family
+    behind the color-decode oracle (k90). The interleaved scan carries one
+    block per component per MCU with three independent DC predictors —
+    the real multi-component entropy layout, not a grayscale re-skin."""
+    return _flat_scan(width, height, 8, (1, 1, 1), block_fn)
 
 
 def synthesize_jpeg_color_420(width: int, height: int, mcu_fn) -> bytes:
@@ -374,43 +372,12 @@ def synthesize_jpeg_color_420(width: int, height: int, mcu_fn) -> bytes:
     CONSTANT (Y, Cb, Cr): ``mcu_fn(mx, my) -> (y, cb, cr)`` with each
     component 0..255. The interleaved scan carries the real 4:2:0 MCU
     layout — FOUR Y blocks (2x2, raster order within the MCU) then one Cb
-    and one Cr block — with three independent DC predictors; with
-    all-ones quant tables every block holds only its DC coefficient, so
-    the per-plane decode is exact and nearest-neighbor chroma upsampling
+    and one Cr block — with three independent DC predictors; the
+    per-plane decode is exact and nearest-neighbor chroma upsampling
     reproduces the MCU constant at every covered pixel (edge MCUs pad by
     extension; cropping recovers the constants). The fixture family
     behind k91's closed-form oracle."""
-    out = bytearray(_headers(width, height, [1] * 64, color=True, subsample=True))
-    w = _BitWriter()
-    lum_dc = dict(zip(DC_LUM_VALS, _canonical_codes(DC_LUM_BITS)))
-    lum_ac = dict(zip(AC_LUM_VALS, _canonical_codes(AC_LUM_BITS)))
-    chr_dc = dict(zip(DC_CHR_VALS, _canonical_codes(DC_CHR_BITS)))
-    chr_ac = dict(zip(AC_CHR_VALS, _canonical_codes(AC_CHR_BITS)))
-    preds = [0, 0, 0]
-    for my in range((height + 15) // 16):
-        for mx in range((width + 15) // 16):
-            comps = mcu_fn(mx, my)
-            if len(comps) != 3 or not all(0 <= v <= 255 for v in comps):
-                raise ValueError("mcu_fn must yield (y, cb, cr) in 0..255")
-            # 4 Y blocks, then Cb, then Cr — each DC-only at the constant
-            for ci, reps in ((0, 4), (1, 1), (2, 1)):
-                dc_codes = lum_dc if ci == 0 else chr_dc
-                ac_codes = lum_ac if ci == 0 else chr_ac
-                for _ in range(reps):
-                    dc = 8 * (comps[ci] - 128)
-                    diff = dc - preds[ci]
-                    preds[ci] = dc
-                    size = _category(diff)
-                    code, length = dc_codes[size]
-                    w.write(code, length)
-                    if size:
-                        w.write(diff if diff >= 0 else diff + (1 << size) - 1, size)
-                    code, length = ac_codes[0x00]  # EOB
-                    w.write(code, length)
-    w.flush()
-    out += w.out
-    out += b"\xff\xd9"
-    return bytes(out)
+    return _flat_scan(width, height, 16, (4, 1, 1), mcu_fn)
 
 
 def synthesize_jpeg_from_coefficients(
@@ -437,8 +404,7 @@ def synthesize_jpeg_from_coefficients(
         dri = b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
         head = head[:-10] + dri + head[-10:]
     w = _BitWriter()
-    dc_codes = dict(zip(DC_LUM_VALS, _canonical_codes(DC_LUM_BITS)))
-    ac_codes = dict(zip(AC_LUM_VALS, _canonical_codes(AC_LUM_BITS)))
+    dc_codes, ac_codes = _LUM_CODES
     out = bytearray(head)
     pred = 0
     rst = 0
@@ -450,17 +416,8 @@ def synthesize_jpeg_from_coefficients(
             rst += 1
             w = _BitWriter()
             pred = 0
-        diff = blk[0] - pred
+        _write_dc(w, dc_codes, blk[0] - pred)
         pred = blk[0]
-        size = _category(diff)
-        if size > 11:
-            raise ValueError(
-                f"DC coefficient diff {diff} exceeds baseline category 11"
-            )
-        code, length = dc_codes[size]
-        w.write(code, length)
-        if size:
-            w.write(diff if diff >= 0 else diff + (1 << size) - 1, size)
         k = 1
         while k < 64:
             run = 0
@@ -767,32 +724,3 @@ def _decode_scan(
             out[j + 2] = bl
             j += 3
     return width, height, 3, out
-
-
-def jpeg_pixel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched pixel statistics over a binary baseline-JPEG payload
-    column via the reference decoder (grayscale or 4:4:4 color — stats run
-    over the interleaved samples either way) — same shape as
-    ``png_pixel_stats``: one Python worker per partition, payload bytes
-    never leave the executor."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                w, h, _ch, px = decode_jpeg(bytes(payload))
-                rows.append(
-                    (int(doc_id), w, h, len(px), sum(px), min(px), max(px))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_px", "px_sum", "px_min", "px_max",
-                ],
-            )
-
-    return df.mapInPandas(
-        stats,
-        "doc_id long, width int, height int, n_px long, px_sum long, "
-        "px_min int, px_max int",
-    )

@@ -4,32 +4,34 @@ binary columns with typed metadata).
 Two layers:
 
 * **Real header decoding** (:func:`parse_media_header`,
-  :func:`synthesize_media`): container-format parsing — PNG IHDR, GIF
+  :func:`decode_media_headers`): container-format parsing — PNG IHDR, GIF
   logical screen descriptor, JPEG SOF scan, WAV RIFF/fmt — implemented
   with stdlib ``struct``/``zlib`` only, so width/height/frame metadata
   extraction from binary payloads is REAL and oracle-checkable (k41).
 * **Pixel/sample decoding**: PNG is decoded FOR REAL, pure stdlib
   (:func:`decode_png_pixels`: the full RFC 2083 matrix — all five color
   types at every legal bit depth 1/2/4/8/16, sequential or Adam7), and
-  so is WAV audio (:func:`decode_wav_samples`: RIFF chunk walk +
-  8/16/24-bit integer PCM and 32/64-bit IEEE-float unpack, plus G.711
-  mu-law/A-law expansion via the CCITT integer arithmetic — rounds
-  9-10), and the ISO-BMFF (MP4) container
-  box tree (:func:`parse_mp4_boxes`: video METADATA — brand, movie
-  timing, track layout, sample counts — without touching codec payload).
-  What genuinely needs external codec libs (progressive/arithmetic JPEG,
-  MP3/AAC/FLAC compressed audio, mdat frame decode) stays a
-  clearly-marked ``NotImplementedError`` slot (``real_codec=True``),
-  with deterministic fake features for unknown payloads so batch shape
-  and schema stay exercised.
+  so are baseline JPEG (``ops/jpeg.py``: grayscale, 4:4:4 and 4:2:0
+  color), animated GIF (:func:`decode_gif_frames`), BMP
+  (:func:`decode_bmp_pixels`), WAV audio (:func:`decode_wav_samples`:
+  RIFF chunk walk + 8/16/24-bit integer PCM and 32/64-bit IEEE-float
+  unpack, plus G.711 mu-law/A-law expansion via the CCITT integer
+  arithmetic), and the ISO-BMFF (MP4) container box tree
+  (:func:`parse_mp4_boxes`: video METADATA — brand, movie timing, track
+  layout, sample counts — without touching codec payload). What
+  genuinely needs external codec libs (progressive/arithmetic JPEG,
+  MP3/AAC/FLAC compressed audio, mdat frame decode) raises
+  ``NotImplementedError`` inside the decoder that meets it.
 
-Spark-side shape in both layers:
+Spark-side shape, one harness for every media op:
 
-* schema: ``binary`` payload + a typed metadata struct;
-* batching: decode runs in ``mapInPandas`` (Arrow batches, one Python
-  worker per partition — the right shape for per-item CPU-heavy codecs);
-* partitioning: media blobs repartition by id so decode parallelism is
-  data-size driven, not file driven.
+* schema: ``doc_id`` + ``binary`` payload in, typed rows out;
+* :func:`synth_payloads` is the one Arrow-batched ``pandas_udf`` that
+  turns a ``doc_id`` into a payload (the fixtures of k41/k81-k95);
+* :func:`map_payloads` is the one ``mapInPandas`` loop that turns each
+  ``(doc_id, payload)`` into output rows (one Python worker per
+  partition — the right shape for per-item CPU-heavy codecs; payload
+  bytes never reach the driver and no shuffle is added).
 
 At 100 TB the binary payloads dominate; the plumbing keeps them in one
 column that column pruning drops whenever a query touches metadata only.
@@ -39,7 +41,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -52,27 +54,35 @@ DECODED_SCHEMA = (
 
 HEADER_SCHEMA = "doc_id long, media_type string, width int, height int, n_frames int"
 
+PIXEL_SCHEMA = (
+    "doc_id long, width int, height int, n_px long, px_sum long, "
+    "px_min int, px_max int"
+)
+
+
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _png_chunk(tag: bytes, body: bytes) -> bytes:
+    """One PNG chunk: length, tag, body, CRC-32 over tag + body."""
+    return (
+        struct.pack(">I", len(body))
+        + tag
+        + body
+        + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
+    )
+
 
 def synthesize_png(width: int, height: int) -> bytes:
     """A minimal VALID grayscale PNG of the given dimensions: signature,
     IHDR with correct CRC, one zlib IDAT of all-zero scanlines, IEND."""
-    sig = b"\x89PNG\r\n\x1a\n"
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
     raw = b"\x00" * ((1 + width) * height)  # filter byte + row, per scanline
     return (
-        sig
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, 1))
-        + chunk(b"IEND", b"")
+        _PNG_SIG
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(raw, 1))
+        + _png_chunk(b"IEND", b"")
     )
 
 
@@ -171,16 +181,6 @@ def synthesize_png_filtered(
             b for c in vals for b in ((c >> 8) & 0xFF, c & 0xFF)
         )
 
-    sig = b"\x89PNG\r\n\x1a\n"
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
     sub_byte = bit_depth < 8
     bpp = 1 if sub_byte else n_ch * bstep
 
@@ -206,16 +206,16 @@ def synthesize_png_filtered(
             raw.extend(_filter_scanlines(rows, bpp))
     plte = b""
     if color_type == 3:
-        plte = chunk(
+        plte = _png_chunk(
             b"PLTE",
             bytes(c & 0xFF for entry in palette for c in entry),
         )
     return (
-        sig
-        + chunk(b"IHDR", ihdr)
+        _PNG_SIG
+        + _png_chunk(b"IHDR", ihdr)
         + plte
-        + chunk(b"IDAT", zlib.compress(bytes(raw), 6))
-        + chunk(b"IEND", b"")
+        + _png_chunk(b"IDAT", zlib.compress(bytes(raw), 6))
+        + _png_chunk(b"IEND", b"")
     )
 
 
@@ -305,13 +305,11 @@ def decode_png_pixels(b: bytes) -> tuple[int, int, int, "bytes | list[int]"]:
     decoder unfilters at the packed stride and then unpacks samples
     MSB-first, dropping each scanline's byte-boundary pad bits.
 
-    This is the REAL codec behind ``decode_media(real_codec=True)``
-    (VERDICT r6 item 7, widened r7 #4, completed round 8 — the full
-    RFC 2083 (color type, depth, interlace) matrix): what remains
-    NotImplemented is exactly what needs external libraries or ancillary-
-    chunk interpretation — tRNS/gamma, JPEG entropy decode, compressed
-    audio — the declared slot where PIL/ffmpeg plug in."""
-    if b[:8] != b"\x89PNG\r\n\x1a\n":
+    This is the PNG codec behind :func:`pixel_stats` (k81/k83/k84/k86 —
+    the full RFC 2083 (color type, depth, interlace) matrix): what remains
+    NotImplemented is ancillary-chunk interpretation (tRNS/gamma) — the
+    declared slot where PIL plugs in."""
+    if b[:8] != _PNG_SIG:
         raise ValueError("not a PNG")
     i = 8
     width = height = color_type = bit_depth = interlace = None
@@ -434,34 +432,54 @@ def decode_png_pixels(b: bytes) -> tuple[int, int, int, "bytes | list[int]"]:
     return width, height, raw_ch, px
 
 
-def png_pixel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched pixel statistics over a binary PNG payload column via
-    the reference decoder — the decode/feature-extract stage of a media
-    pipeline with a codec that actually runs. One Python worker per
-    partition; payload bytes never leave the executor."""
+def synth_payloads(docs: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """``(doc_id, payload)`` with ``payload = make(doc_id)`` — the one
+    Arrow-batched ``pandas_udf`` behind every synthesized media fixture
+    (k41, k81-k95). ``make`` runs per row on the executor."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @F.pandas_udf("binary")
+    def synth(doc_ids: pd.Series) -> pd.Series:
+        return pd.Series([make(int(i)) for i in doc_ids])
+
+    return docs.select("doc_id", synth("doc_id").alias("payload"))
+
+
+def map_payloads(
+    df: DataFrame, schema: str, rows: Callable[[int, bytes], Iterable[tuple]]
+) -> DataFrame:
+    """The one ``mapInPandas`` loop of the media ops: every
+    ``(doc_id, payload)`` of ``df`` goes through ``rows(doc_id, bytes)``,
+    whose tuples follow the column order of the DDL ``schema``. One Python
+    worker per partition, Arrow batches in and out, payload bytes never
+    leave the executor, no shuffle."""
+    names = [col.split()[0] for col in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                w, h, _ch, px = decode_png_pixels(bytes(payload))
-                # n_px counts BYTES (w*h*channels): grayscale keeps its old
-                # meaning; truecolor stats run over the interleaved samples
-                rows.append(
-                    (int(doc_id), w, h, len(px), sum(px), min(px), max(px))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_px", "px_sum", "px_min", "px_max",
-                ],
-            )
+            out = [
+                r
+                for i, p in zip(pdf["doc_id"], pdf["payload"])
+                for r in rows(int(i), bytes(p))
+            ]
+            yield pd.DataFrame(out, columns=names)
 
-    return df.mapInPandas(
-        stats,
-        "doc_id long, width int, height int, n_px long, px_sum long, "
-        "px_min int, px_max int",
-    )
+    return df.mapInPandas(run, schema)
+
+
+def pixel_stats(
+    df: DataFrame, decode: Callable[[bytes], tuple[int, int, int, Sequence[int]]]
+) -> DataFrame:
+    """Per-image pixel statistics over a binary image payload column:
+    ``decode`` is a reference codec returning ``(width, height, channels,
+    samples)`` — :func:`decode_png_pixels` or
+    :func:`marasa_spark.ops.jpeg.decode_jpeg`. ``n_px`` counts samples
+    (w*h*channels), so color stats run over the interleaved samples."""
+
+    def rows(i: int, b: bytes) -> Iterator[tuple]:
+        w, h, _ch, px = decode(b)
+        yield i, w, h, len(px), sum(px), min(px), max(px)
+
+    return map_payloads(df, PIXEL_SCHEMA, rows)
 
 
 def synthesize_gif(width: int, height: int) -> bytes:
@@ -690,42 +708,32 @@ def decode_gif_frames(
     return width, height, frames
 
 
-def gif_frame_stats(df: DataFrame, id_col: str = "doc_id", every: int = 1) -> DataFrame:
-    """Arrow-batched per-sampled-frame statistics over a binary animated-
-    GIF payload column via the reference decoder — the video twin of
-    ``png_pixel_stats``: one row per SAMPLED frame (every ``every``-th),
-    unsampled frames never inflated. Payload bytes never leave the
-    executor; output is frames-sized, not pixels-sized."""
+def gif_frame_stats(df: DataFrame, every: int = 1) -> DataFrame:
+    """Per-sampled-frame statistics over a binary animated-GIF payload
+    column via the reference decoder — the video twin of
+    :func:`pixel_stats`: one row per SAMPLED frame (every ``every``-th),
+    unsampled frames never inflated. Output is frames-sized, not
+    pixels-sized."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                w, h, frames = decode_gif_frames(bytes(payload), every)
-                for f_idx, rgb in frames:
-                    rows.append(
-                        (int(doc_id), f_idx, w, h, len(rgb), sum(rgb), min(rgb), max(rgb))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame", "width", "height",
-                    "n_px", "px_sum", "px_min", "px_max",
-                ],
-            )
+    def rows(i: int, b: bytes) -> Iterator[tuple]:
+        w, h, frames = decode_gif_frames(b, every)
+        for f_idx, rgb in frames:
+            yield i, f_idx, w, h, len(rgb), sum(rgb), min(rgb), max(rgb)
 
-    return df.mapInPandas(
-        stats,
+    return map_payloads(
+        df,
         "doc_id long, frame int, width int, height int, n_px long, "
         "px_sum long, px_min int, px_max int",
+        rows,
     )
 
 
-def synthesize_wav(n_samples: int, channels: int, sample_rate: int = 8000) -> bytes:
-    """A minimal valid PCM-16 WAV with ``n_samples`` zero frames."""
-    data = b"\x00" * (n_samples * channels * 2)
+def _wav(fmt_tag: int, channels: int, rate: int, bits: int, data: bytes) -> bytes:
+    """The one RIFF/WAVE writer: a ``fmt `` chunk (format tag, channels,
+    rate, byte rate, block align, bits per sample) and a ``data`` chunk."""
+    block_align = channels * bits // 8
     fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate, sample_rate * channels * 2, channels * 2, 16
+        "<HHIIHH", fmt_tag, channels, rate, rate * block_align, block_align, bits
     )
     return (
         b"RIFF"
@@ -738,6 +746,11 @@ def synthesize_wav(n_samples: int, channels: int, sample_rate: int = 8000) -> by
         + struct.pack("<I", len(data))
         + data
     )
+
+
+def synthesize_wav(n_samples: int, channels: int, sample_rate: int = 8000) -> bytes:
+    """A minimal valid PCM-16 WAV with ``n_samples`` zero frames."""
+    return _wav(1, channels, sample_rate, 16, b"\x00" * (n_samples * channels * 2))
 
 
 def synthesize_wav_pcm(
@@ -761,27 +774,7 @@ def synthesize_wav_pcm(
         )
     else:
         data = struct.pack(f"<{len(samples)}h", *samples)
-    block_align = channels * bits // 8
-    fmt = struct.pack(
-        "<HHIIHH",
-        1,  # audio_format = PCM
-        channels,
-        sample_rate,
-        sample_rate * block_align,
-        block_align,
-        bits,
-    )
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
+    return _wav(1, channels, sample_rate, bits, data)
 
 
 def synthesize_wav_float(
@@ -798,27 +791,7 @@ def synthesize_wav_float(
         raise ValueError("sample count must be a multiple of channels")
     kind = "f" if bits == 32 else "d"
     data = struct.pack(f"<{len(samples)}{kind}", *samples)
-    block_align = channels * bits // 8
-    fmt = struct.pack(
-        "<HHIIHH",
-        3,  # audio_format = IEEE float
-        channels,
-        sample_rate,
-        sample_rate * block_align,
-        block_align,
-        bits,
-    )
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
+    return _wav(3, channels, sample_rate, bits, data)
 
 
 def g711_ulaw_to_linear(code: int) -> int:
@@ -861,27 +834,17 @@ def synthesize_wav_g711(
     if len(codes) % channels:
         raise ValueError("sample count must be a multiple of channels")
     data = bytes(c & 0xFF for c in codes)
-    block_align = channels  # 1 byte per companded sample
-    fmt = struct.pack(
-        "<HHIIHH",
-        7 if law == "ulaw" else 6,
-        channels,
-        sample_rate,
-        sample_rate * block_align,
-        block_align,
-        8,
-    )
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
+    return _wav(7 if law == "ulaw" else 6, channels, sample_rate, 8, data)
+
+
+def _riff_chunks(b: bytes) -> Iterator[tuple[bytes, int, int]]:
+    """The one RIFF/WAVE chunk walk: ``(tag, body offset, declared size)``
+    per chunk after the 12-byte RIFF header, chunks word-aligned."""
+    i = 12
+    while i + 8 <= len(b):
+        size = struct.unpack("<I", b[i + 4 : i + 8])[0]
+        yield b[i : i + 4], i + 8, size
+        i += 8 + size + (size % 2)
 
 
 def decode_wav_samples(b: bytes) -> "tuple[int, int, int, list[int] | list[float]]":
@@ -906,10 +869,8 @@ def decode_wav_samples(b: bytes) -> "tuple[int, int, int, list[int] | list[float
     channels = sample_rate = bits = None
     audio_format = 1
     data = None
-    i = 12
-    while i + 8 <= len(b):
-        tag, size = b[i : i + 4], struct.unpack("<I", b[i + 4 : i + 8])[0]
-        body = b[i + 8 : i + 8 + size]
+    for tag, at, size in _riff_chunks(b):
+        body = b[at : at + size]
         if tag == b"fmt ":
             if len(body) < 16:
                 raise ValueError("WAV fmt chunk truncated")
@@ -928,7 +889,6 @@ def decode_wav_samples(b: bytes) -> "tuple[int, int, int, list[int] | list[float
                 )
         elif tag == b"data":
             data = body
-        i += 8 + size + (size % 2)  # chunks are word-aligned
     if channels is None or data is None:
         raise ValueError("WAV without fmt/data chunks")
     if audio_format == 7:
@@ -959,96 +919,57 @@ def decode_wav_samples(b: bytes) -> "tuple[int, int, int, list[int] | list[float
     return channels, sample_rate, bits, samples
 
 
-def wav_sample_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched sample statistics over a binary WAV payload column via
-    the reference PCM decoder — the audio twin of :func:`png_pixel_stats`.
-    Emits per-clip (channels, bits, n_samples, sample_sum/min/max,
-    duration_us); ``duration_us`` is exact integer arithmetic
-    (frames * 1_000_000 // sample_rate), so the output is hash-stable.
-    One Python worker per partition; payload bytes never leave the
-    executor."""
+def wav_sample_stats(df: DataFrame) -> DataFrame:
+    """Per-clip sample statistics over a binary WAV payload column via
+    the reference PCM decoder — the audio twin of :func:`pixel_stats`.
+    Emits (channels, bits, n_samples, sample_sum/min/max, duration_us);
+    ``duration_us`` is exact integer arithmetic
+    (frames * 1_000_000 // sample_rate), so the output is hash-stable."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                ch, rate, bits, samples = decode_wav_samples(bytes(payload))
-                frames = len(samples) // ch
-                rows.append(
-                    (
-                        int(doc_id),
-                        ch,
-                        bits,
-                        len(samples),
-                        sum(samples),
-                        min(samples),
-                        max(samples),
-                        frames * 1_000_000 // rate,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "channels", "bits", "n_samples",
-                    "sample_sum", "sample_min", "sample_max", "duration_us",
-                ],
-            )
+    def rows(i: int, b: bytes) -> Iterator[tuple]:
+        ch, rate, bits, samples = decode_wav_samples(b)
+        frames = len(samples) // ch
+        yield (
+            i, ch, bits, len(samples), sum(samples), min(samples), max(samples),
+            frames * 1_000_000 // rate,
+        )
 
-    return df.mapInPandas(
-        stats,
+    return map_payloads(
+        df,
         "doc_id long, channels int, bits int, n_samples long, "
         "sample_sum long, sample_min int, sample_max int, duration_us long",
+        rows,
     )
 
 
-def wav_frame_features(
-    df: DataFrame, id_col: str = "doc_id", window: int = 25
-) -> DataFrame:
+def wav_frame_features(df: DataFrame, window: int = 25) -> DataFrame:
     """Windowed audio features over decoded PCM — the feature-extraction
     stage that follows the codec in an audio pipeline (energy / activity
     detection shapes). Per non-overlapping ``window``-frame window of the
     FIRST channel: sample count, absolute-amplitude sum (integer energy
     proxy), peak |amplitude|, and strict zero crossings (consecutive
     samples with opposite nonzero signs; windows do not see their
-    neighbour's last sample). All-integer outputs, so hash-exact. Same
-    executor posture as the codecs: Arrow batches in, per-clip Python,
-    feature rows out — the clip payload never leaves the worker and the
+    neighbour's last sample). All-integer outputs, so hash-exact; the
     output is windows-sized, not samples-sized."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                ch, _rate, _bits, samples = decode_wav_samples(bytes(payload))
-                mono = samples[::ch]  # first channel
-                for w0 in range(0, len(mono), window):
-                    win = mono[w0 : w0 + window]
-                    crossings = sum(
-                        1
-                        for a, b2 in zip(win, win[1:])
-                        if (a < 0 < b2) or (b2 < 0 < a)
-                    )
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w0 // window,
-                            len(win),
-                            sum(abs(s) for s in win),
-                            max(abs(s) for s in win),
-                            crossings,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "win_id", "n_samples", "abs_sum", "peak", "n_crossings",
-                ],
+    def rows(i: int, b: bytes) -> Iterator[tuple]:
+        ch, _rate, _bits, samples = decode_wav_samples(b)
+        mono = samples[::ch]  # first channel
+        for w0 in range(0, len(mono), window):
+            win = mono[w0 : w0 + window]
+            crossings = sum(
+                1 for a, b2 in zip(win, win[1:]) if (a < 0 < b2) or (b2 < 0 < a)
+            )
+            yield (
+                i, w0 // window, len(win), sum(abs(s) for s in win),
+                max(abs(s) for s in win), crossings,
             )
 
-    return df.mapInPandas(
-        feats,
+    return map_payloads(
+        df,
         "doc_id long, win_id int, n_samples long, abs_sum long, "
         "peak int, n_crossings long",
+        rows,
     )
 
 
@@ -1056,7 +977,7 @@ def parse_media_header(b: bytes) -> tuple[str, int | None, int | None, int | Non
     """Parse (media_type, width, height, n_frames) from a binary payload's
     container header — real format parsing, stdlib only. Unknown payloads
     return ('unknown', None, None, None); the caller decides the fallback."""
-    if b[:8] == b"\x89PNG\r\n\x1a\n" and b[12:16] == b"IHDR":
+    if b[:8] == _PNG_SIG and b[12:16] == b"IHDR":
         w, h = struct.unpack(">II", b[16:24])
         return "image/png", w, h, 1
     if b[:6] in (b"GIF87a", b"GIF89a"):
@@ -1075,44 +996,30 @@ def parse_media_header(b: bytes) -> tuple[str, int | None, int | None, int | Non
             i += 2 + seg_len
         return "image/jpeg", None, None, 1
     if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        # walk RIFF chunks for fmt + data
         channels = bits = data_len = None
-        i = 12
-        while i + 8 <= len(b):
-            tag, size = b[i : i + 4], struct.unpack("<I", b[i + 4 : i + 8])[0]
+        for tag, at, size in _riff_chunks(b):
             if tag == b"fmt ":
-                channels = struct.unpack("<H", b[i + 10 : i + 12])[0]
-                bits = struct.unpack("<H", b[i + 22 : i + 24])[0]
+                channels = struct.unpack("<H", b[at + 2 : at + 4])[0]
+                bits = struct.unpack("<H", b[at + 14 : at + 16])[0]
             elif tag == b"data":
                 data_len = size
-            i += 8 + size + (size % 2)
         if channels and bits and data_len is not None:
             return "audio/wav", None, None, data_len // (channels * bits // 8)
         return "audio/wav", None, None, None
     return "unknown", None, None, None
 
 
-def decode_media_headers(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def decode_media_headers(df: DataFrame) -> DataFrame:
     """Real container-header decode over Arrow batches: payload bytes in,
     typed (media_type, width, height, n_frames) out via
-    :func:`parse_media_header`. This is the metadata-extraction stage of a
-    media pipeline run at full scale — only the full pixel/sample decode
-    (``decode_media(real_codec=True)``) needs external codec libraries."""
+    :func:`parse_media_header` — the metadata-extraction stage of a media
+    pipeline, which a query runs before paying for any pixel/sample
+    decode."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_media_header(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "media_type": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "n_frames": pd.array([p[3] for p in parsed], dtype="Int32"),
-                }
-            )
+    def rows(i: int, b: bytes) -> Iterator[tuple]:
+        yield (i, *parse_media_header(b))
 
-    return df.mapInPandas(decode, HEADER_SCHEMA)
+    return map_payloads(df, HEADER_SCHEMA, rows)
 
 
 def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1128,70 +1035,18 @@ def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFram
     )
 
 
-def decode_media(df: DataFrame, real_codec: bool = False) -> DataFrame:
-    """'Decode' the binary payload per Arrow batch via mapInPandas.
-
-    ``real_codec=True`` dispatches on the container signature to the
-    three reference codecs this sandbox implements for real — PNG
-    (:func:`decode_png_pixels`, full RFC 2083 matrix), baseline grayscale
-    JPEG (:func:`marasa_spark.ops.jpeg.decode_jpeg_gray`, real entropy
-    decode + IDCT), and WAV integer PCM (:func:`decode_wav_samples`) —
-    returning true decoded dimensions / frame counts, and raises
-    NotImplementedError for every other payload type (the declared slot
-    where PIL/ffmpeg would plug in; those libs are not installed).
-    The default path computes deterministic fake features (sizes,
-    checksum, fake dimensions derived from the checksum) so the batch
-    shape, schema and partition behavior are fully exercised and testable.
-    """
+def decode_media(df: DataFrame) -> DataFrame:
+    """'Decode' an opaque binary payload per Arrow batch via mapInPandas:
+    deterministic fake features (size, md5 checksum, fake dimensions
+    derived from the checksum) so the batch shape, schema and partition
+    behavior of a media column are exercised on payloads no codec reads
+    (k17). Real container payloads go through :func:`decode_media_headers`
+    or the per-format codecs."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
         for pdf in batches:
-            if real_codec:
-                rows = []
-                # payload-only, like decode_png_pixels: media_meta must not
-                # be a hard input requirement of the real-codec path
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                    b = bytes(payload)
-                    if b[:8] == b"\x89PNG\r\n\x1a\n":
-                        w, h, _ch, _px = decode_png_pixels(b)
-                        mt, frames = "image/png", 1
-                    elif b[:3] == b"\xff\xd8\xff":
-                        from marasa_spark.ops.jpeg import decode_jpeg
-
-                        w, h, _ch, _px = decode_jpeg(b)
-                        mt, frames = "image/jpeg", 1
-                    elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                        ch, _rate, _bits, samples = decode_wav_samples(b)
-                        w = h = 0
-                        mt, frames = "audio/wav", len(samples) // ch
-                    else:
-                        raise NotImplementedError(
-                            "real_codec: PNG, baseline grayscale JPEG and "
-                            "PCM WAV reference decoders are implemented "
-                            "offline; PIL/ffmpeg for other formats plug in "
-                            "here"
-                        )
-                    rows.append(
-                        (
-                            int(doc_id),
-                            mt,
-                            len(b),
-                            hashlib.md5(b).hexdigest(),
-                            w,
-                            h,
-                            frames,
-                        )
-                    )
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "media_type", "n_bytes", "checksum",
-                        "width", "height", "n_frames",
-                    ],
-                )
-                continue
             payloads = pdf["payload"]
             digests = [hashlib.md5(bytes(p)).hexdigest() for p in payloads]
             yield pd.DataFrame(

@@ -10,7 +10,6 @@ testdata + DuckDB oracles.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -813,20 +812,22 @@ FROM reach GROUP BY node
 
 @register("k25_dup_clusters", oracle=K25_ORACLE, group="K")
 def k25_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs → clusters: min-label propagation over the k5 pair
-    graph assigns every clustered doc its minimum reachable doc_id (the
+    """Near-dup pairs → clusters: large-star/small-star connected
+    components (ops/dedup.py connected_components_star) over the k5 pair
+    graph assign every clustered doc its minimum reachable doc_id (the
     canonical representative — everything else is a drop candidate). The
     oracle computes the same closure with a recursive CTE. The pair stage
     is bounded to the doc_id<1000 verification slice (k5's convention);
     at scale the pair list comes from k9's LSH instead of all-pairs, and
-    the propagation cost per round is two shuffles on the edge key."""
+    each star round is a groupBy-min plus a join back on the edge key,
+    O(log²) rounds in component diameter."""
     pairs = D.jaccard_pairs(
         load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000),
         "doc_id",
         "text",
         threshold=0.9,
     )
-    return D.connected_components(pairs).select(
+    return D.connected_components_star(pairs).select(
         F.col("node").alias("doc_id"), "cluster"
     )
 
@@ -986,7 +987,12 @@ def k21_embed_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale path for k11 (whose all-pairs crossJoin is the bounded reference).
     Exact-cosine verification means zero false positives; recall vs k11 is
     asserted in tests/test_llm_ops.py. Rows-only: replicating the sha-derived
-    hyperplane matrix in SQL is not practical."""
+    hyperplane matrix in SQL is not practical. Cost is quadratic, not
+    O(n·bands): 32 sign bits in 16 bands leave 2 bits (4 buckets) per
+    band, so each (band, bucket) cell holds about n/4 vectors and the
+    self-join's pair mass is about bands·n²/8; beyond about 20k vectors
+    (n/4 > max_bucket_size 5000) every cell is capped and the op returns
+    0 pairs (SCALE.md)."""
     e = load_table(spark, sf_dir, "embeddings")
     return S.rh_lsh_pairs(
         e, "vec_id", "embedding", dim=64, threshold=0.35, num_bits=32, bands=16
@@ -1045,8 +1051,8 @@ def k17_multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary media column + mapInPandas feature extraction over opaque
     payloads (checksum/size + deterministic fake dimensions for
     non-media blobs). k41 is the REAL-decode twin: it parses actual
-    PNG/GIF/WAV container headers; only pixel-level decode
-    (decode_media(real_codec=True)) awaits external codec libraries."""
+    PNG/GIF/WAV container headers; k81-k95 decode pixels and samples
+    with the stdlib reference codecs."""
     d = load_table(spark, sf_dir, "documents")
     media = M.attach_binary_payload(d, "doc_id", "text")
     return M.decode_media(media)
@@ -1289,7 +1295,9 @@ def k31_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.jaccard_pairs(
         docs.filter(F.col("doc_id") < 1000), "doc_id", "text", threshold=0.9
     )
-    comp = D.connected_components(pairs).select(F.col("node").alias("doc_id"), "cluster")
+    comp = D.connected_components_star(pairs).select(
+        F.col("node").alias("doc_id"), "cluster"
+    )
     ranked = comp.join(docs.select("doc_id", "n_chars"), "doc_id")
     top = F.max(F.struct(F.col("n_chars"), (-F.col("doc_id")).alias("neg_id")))
     return ranked.groupBy("cluster").agg(
@@ -1808,32 +1816,25 @@ def k41_media_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     container format back out of the raw bytes — stdlib struct/zlib only,
     no codec libraries. The oracle recomputes the expected metadata from
     doc_id arithmetic, so a parser that misreads a single header field
-    hash-fails. Both stages are Arrow-batched mapInPandas/pandas_udf over
-    payloads partitioned by id — the exact shape a PIL/ffmpeg full decode
-    drops into (that pixel-level step, decode_media(real_codec=True),
-    remains the one declared stub: libraries absent here)."""
+    hash-fails. Both stages are Arrow-batched (ops.multimodal's
+    synth_payloads pandas_udf, then map_payloads' mapInPandas) over
+    the document scan's partitions, no shuffle — the same shape the pixel and
+    sample decoders of k81-k95 run in."""
     from marasa_spark.ops.multimodal import (
         synthesize_gif,
         synthesize_png,
         synthesize_wav,
     )
 
-    @F.pandas_udf("binary")
-    def synth(doc_id: pd.Series) -> pd.Series:
-        out = []
-        for d in doc_id:
-            d = int(d)
-            if d % 3 == 0:
-                out.append(synthesize_png((d * 7) % 320 + 16, (d * 13) % 240 + 16))
-            elif d % 3 == 1:
-                out.append(synthesize_gif((d * 7) % 320 + 16, (d * 13) % 240 + 16))
-            else:
-                out.append(synthesize_wav(d % 1000 + 1, d % 2 + 1))
-        return pd.Series(out)
+    def make(d: int) -> bytes:
+        if d % 3 == 0:
+            return synthesize_png((d * 7) % 320 + 16, (d * 13) % 240 + 16)
+        if d % 3 == 1:
+            return synthesize_gif((d * 7) % 320 + 16, (d * 13) % 240 + 16)
+        return synthesize_wav(d % 1000 + 1, d % 2 + 1)
 
     d = load_table(spark, sf_dir, "documents")
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    return M.decode_media_headers(media)
+    return M.decode_media_headers(M.synth_payloads(d, make))
 
 
 K44_ORACLE = f"""
@@ -2028,7 +2029,7 @@ def k47_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.jaccard_pairs(
         docs.filter(F.col("doc_id") < 1000), "doc_id", "text", threshold=0.9
     )
-    comp = D.connected_components(pairs).select(
+    comp = D.connected_components_star(pairs).select(
         F.col("node").alias("doc_id"), "cluster"
     )
     ranked = comp.join(docs.select("doc_id", "n_chars"), "doc_id").withColumn(
@@ -2145,15 +2146,16 @@ def k48_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("k49_cc_star", oracle=K25_ORACLE, group="K")
 def k49_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k25's clustering re-run through the large-star/small-star alternating
-    algorithm (ops/dedup.py connected_components_star): same (doc_id,
-    cluster) labels — the oracle is literally k25's recursive-CTE closure —
-    but convergence is O(log²) rounds in component DIAMETER instead of
-    min-label propagation's one-round-per-hop. On a 100 TB corpus where
-    transitive LSH merges produce chain-shaped components, this is the
-    difference between a handful of shuffle rounds and dozens; each round
-    is a groupBy-min plus a join back on the same key. Equivalence of the
-    two algorithms on identical pair lists is pinned in
+    """The large-star/small-star connected-components algorithm
+    (ops/dedup.py connected_components_star) on k25's pair graph, kept as
+    its own registry row: the oracle is literally k25's recursive-CTE
+    closure, and since k25, k31 and k47 run the same algorithm this row
+    pins it in isolation. Convergence is O(log²) rounds in component
+    DIAMETER instead of min-label propagation's one-round-per-hop — on a
+    100 TB corpus where transitive LSH merges produce chain-shaped
+    components, the difference between a handful of shuffle rounds and
+    dozens; each round is a groupBy-min plus a join back on the same key.
+    Agreement with a union-find reference is pinned in
     tests/test_dedup_star.py."""
     pairs = D.jaccard_pairs(
         load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000),
@@ -4613,33 +4615,21 @@ def k81_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match DuckDB evaluating the closed form directly — a true
     encode→container→decode round trip, not a header peek. Scale shape:
     synthesis and decode are per-row Python over Arrow batches (the
-    correct posture for CPU-heavy codecs — parallelism follows the id
-    repartition, payload bytes never hit the driver); the stats are
-    decoder output, no extra shuffle. Color/interlaced PNGs and other
-    containers still raise NotImplementedError — the declared slot where
-    PIL/ffmpeg plug in (not installable offline)."""
-    from pyspark.sql.types import BinaryType
+    correct posture for CPU-heavy codecs — parallelism follows the scan
+    partitions, payload bytes never hit the driver); the stats are
+    decoder output (ops/multimodal.py pixel_stats), no shuffle. k83, k84
+    and k86 run the rest of the RFC 2083 matrix through the same
+    decoder."""
 
-    from marasa_spark.ops.multimodal import png_pixel_stats, synthesize_png_filtered
+    from marasa_spark.ops.multimodal import decode_png_pixels, synthesize_png_filtered
+
+    def make(i: int) -> bytes:
+        return synthesize_png_filtered(
+            4 + i % 29, 3 + i % 17, lambda x, y: (i * 31 + y * 17 + x * 7) % 256
+        )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            out.append(
-                synthesize_png_filtered(
-                    4 + i % 29,
-                    3 + i % 17,
-                    lambda x, y, i=i: (i * 31 + y * 17 + x * 7) % 256,
-                )
-            )
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    return png_pixel_stats(media)
+    return M.pixel_stats(M.synth_payloads(d, make), decode_png_pixels)
 
 
 # ---------------------------------------------------------------------------
@@ -4735,38 +4725,24 @@ def k83_png_truecolor_interlaced(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats must hash-match DuckDB evaluating the closed form over
     (x, y, channel). Same scale posture as k81: per-row Python over Arrow
     batches, payloads never on the driver, stats are decoder output with
-    no extra shuffle. The NotImplementedError slot now covers only
-    palette/16-bit/alpha PNG and externally-codec'd formats (JPEG/audio),
-    which genuinely need PIL/ffmpeg."""
-    from pyspark.sql.types import BinaryType
+    no shuffle."""
 
-    from marasa_spark.ops.multimodal import png_pixel_stats, synthesize_png_filtered
+    from marasa_spark.ops.multimodal import decode_png_pixels, synthesize_png_filtered
+
+    def make(i: int) -> bytes:
+        return synthesize_png_filtered(
+            3 + i % 23,
+            2 + i % 13,
+            lambda x, y: tuple(
+                (i * 31 + y * 17 + x * 7 + c) % 256 for c in (0, 11, 22)
+            ),
+            color_type=2,
+            interlace=i % 2,
+        )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            out.append(
-                synthesize_png_filtered(
-                    3 + i % 23,
-                    2 + i % 13,
-                    lambda x, y, i=i: (
-                        (i * 31 + y * 17 + x * 7) % 256,
-                        (i * 31 + y * 17 + x * 7 + 11) % 256,
-                        (i * 31 + y * 17 + x * 7 + 22) % 256,
-                    ),
-                    color_type=2,
-                    interlace=i % 2,
-                )
-            )
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
     # interlaced is a function of doc_id — re-derive post-decode, no join
-    return png_pixel_stats(media).select(
+    return M.pixel_stats(M.synth_payloads(d, make), decode_png_pixels).select(
         "doc_id", "width", "height",
         (F.col("doc_id") % 2).cast("int").alias("interlaced"),
         "n_px", "px_sum", "px_min", "px_max",
@@ -4821,62 +4797,39 @@ def k84_png_colortype_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB evaluating the closed form over (x, y, channel) — palette docs
     are checked against the EXPANDED palette bytes, 16-bit docs against
     0..65535 sample values. Same scale posture as k81: payloads never on
-    the driver, stats are decoder output, no extra shuffle. What remains
-    NotImplemented in the codec is exactly the external-library surface:
-    sub-byte depths, JPEG entropy decode, audio."""
-    from pyspark.sql.types import BinaryType
+    the driver, stats are decoder output, no shuffle; k86 covers the
+    sub-byte depths."""
 
-    from marasa_spark.ops.multimodal import (
-        png_pixel_stats,
-        synthesize_png_filtered,
-    )
+    from marasa_spark.ops.multimodal import decode_png_pixels, synthesize_png_filtered
+
+    def make(i: int) -> bytes:
+        w, h = 3 + i % 19, 2 + i % 11
+        mode, il = i % 4, (i // 4) % 2
+        if mode == 0:
+            n_pal = 4 + i % 12
+            pal = [
+                ((7 * j + i) % 256, (11 * j + 3) % 256, (13 * j + 7) % 256)
+                for j in range(n_pal)
+            ]
+            return synthesize_png_filtered(
+                w, h, lambda x, y: (x + 3 * y + i) % n_pal, 3, il, 8, pal
+            )
+        if mode == 3:
+            return synthesize_png_filtered(
+                w, h, lambda x, y: (i * 523 + y * 291 + x * 97) % 65536, 0, il, 16
+            )
+        # mode 1: gray+alpha (2 channels), mode 2: RGBA (4 channels)
+        n_ch = 2 * mode
+        return synthesize_png_filtered(
+            w, h,
+            lambda x, y: tuple(
+                (i * 31 + y * 17 + x * 7 + c * 5) % 256 for c in range(n_ch)
+            ),
+            4 if mode == 1 else 6, il, 8,
+        )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            w, h = 3 + i % 19, 2 + i % 11
-            mode, il = i % 4, (i // 4) % 2
-            if mode == 0:
-                n_pal = 4 + i % 12
-                pal = [
-                    ((7 * j + i) % 256, (11 * j + 3) % 256, (13 * j + 7) % 256)
-                    for j in range(n_pal)
-                ]
-                blob = synthesize_png_filtered(
-                    w, h, lambda x, y, i=i, n=n_pal: (x + 3 * y + i) % n,
-                    3, il, 8, pal,
-                )
-            elif mode == 1:
-                blob = synthesize_png_filtered(
-                    w, h,
-                    lambda x, y, i=i: tuple(
-                        (i * 31 + y * 17 + x * 7 + c * 5) % 256 for c in range(2)
-                    ),
-                    4, il, 8,
-                )
-            elif mode == 2:
-                blob = synthesize_png_filtered(
-                    w, h,
-                    lambda x, y, i=i: tuple(
-                        (i * 31 + y * 17 + x * 7 + c * 5) % 256 for c in range(4)
-                    ),
-                    6, il, 8,
-                )
-            else:
-                blob = synthesize_png_filtered(
-                    w, h,
-                    lambda x, y, i=i: (i * 523 + y * 291 + x * 97) % 65536,
-                    0, il, 16,
-                )
-            out.append(blob)
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    return png_pixel_stats(media).select(
+    return M.pixel_stats(M.synth_payloads(d, make), decode_png_pixels).select(
         "doc_id", "width", "height",
         (F.col("doc_id") % 4).cast("int").alias("mode"),
         "n_px", "px_sum", "px_min", "px_max",
@@ -4927,45 +4880,30 @@ def k85_wav_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     min / max plus exact integer duration_us = frames * 1e6 // rate, floor
     semantics identical in Spark and DuckDB for non-negative operands) must
     hash-match DuckDB evaluating the closed form directly. WAV PCM is
-    uncompressed, so this codec is complete offline — the
-    NotImplementedError slot now covers only genuinely-external decode
-    (JPEG entropy, compressed/float audio). Scale shape: synthesis and
-    decode are per-row Python over Arrow batches (the correct posture for
-    per-item codecs — parallelism follows the id partitioning, payload
-    bytes never hit the driver); the stats are decoder output, no extra
+    uncompressed, so this codec is complete offline (k92 and k94 add
+    G.711, 24-bit and IEEE-float audio; only compressed audio —
+    MP3/AAC/FLAC — raises NotImplementedError). Scale shape: synthesis
+    and decode are per-row Python over Arrow batches (the correct posture
+    for per-item codecs — parallelism follows the scan partitions,
+    payload bytes never hit the driver); the stats are decoder output, no
     shuffle."""
-    from pyspark.sql.types import BinaryType
 
-    from marasa_spark.ops.multimodal import synthesize_wav_pcm, wav_sample_stats
+    from marasa_spark.ops.multimodal import synthesize_wav_pcm
+
+    def make(i: int) -> bytes:
+        ch = 1 + i % 2
+        bits = 8 if i % 3 == 0 else 16
+        # 8-bit PCM stores unsigned 0..255; 16-bit a signed 12-bit range
+        lo, mod = (0, 256) if bits == 8 else (-2048, 4096)
+        samples = [
+            (i * 37 + f * 13 + c * 5) % mod + lo
+            for f in range(50 + i % 97)
+            for c in range(ch)
+        ]
+        return synthesize_wav_pcm(samples, ch, 8000 * (1 + i % 3), bits)
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            ch = 1 + i % 2
-            frames = 50 + i % 97
-            bits = 8 if i % 3 == 0 else 16
-            rate = 8000 * (1 + i % 3)
-            if bits == 8:
-                samples = [
-                    (i * 37 + f * 13 + c * 5) % 256
-                    for f in range(frames)
-                    for c in range(ch)
-                ]
-            else:
-                samples = [
-                    ((i * 37 + f * 13 + c * 5) % 4096) - 2048
-                    for f in range(frames)
-                    for c in range(ch)
-                ]
-            out.append(synthesize_wav_pcm(samples, ch, rate, bits))
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    return wav_sample_stats(media)
+    return M.wav_sample_stats(M.synth_payloads(d, make))
 
 
 # ---------------------------------------------------------------------------
@@ -5013,53 +4951,37 @@ def k86_png_subbyte_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential/Adam7 independently; per-image stats (gray: raw 0..2^d-1
     samples; palette: PLTE-expanded RGB bytes) hash-match DuckDB
     evaluating the closed form. With k81/k83/k84 this closes the whole
-    legal (color type, depth, interlace) space of RFC 2083 — the
-    NotImplementedError slot is now exactly the external-library surface
-    (JPEG entropy decode, compressed audio) plus ancillary-chunk
-    interpretation. Scale posture unchanged from k81: Arrow-batched
-    per-row codec work, payloads never on the driver, no extra shuffle."""
-    from pyspark.sql.types import BinaryType
+    legal (color type, depth, interlace) space of RFC 2083 — only
+    ancillary-chunk interpretation (tRNS/gamma) stays NotImplemented.
+    Scale posture unchanged from k81: Arrow-batched per-row codec work,
+    payloads never on the driver, no shuffle."""
 
-    from marasa_spark.ops.multimodal import (
-        png_pixel_stats,
-        synthesize_png_filtered,
-    )
+    from marasa_spark.ops.multimodal import decode_png_pixels, synthesize_png_filtered
+
+    def make(i: int) -> bytes:
+        w, h = 3 + i % 19, 2 + i % 11
+        bits = (1, 2, 4)[i % 3]
+        il = (i // 2) % 2
+        n = 1 << bits
+        if i % 2 == 0:
+            return synthesize_png_filtered(
+                w, h, lambda x, y: (i * 31 + y * 17 + x * 7) % n, 0, il, bits
+            )
+        pal = [
+            ((7 * j + i) % 256, (11 * j + 3) % 256, (13 * j + 7) % 256)
+            for j in range(n)
+        ]
+        return synthesize_png_filtered(
+            w, h, lambda x, y: (x + 3 * y + i) % n, 3, il, bits, pal
+        )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            w, h = 3 + i % 19, 2 + i % 11
-            bits = (1, 2, 4)[i % 3]
-            il = (i // 2) % 2
-            n = 1 << bits
-            if i % 2 == 0:
-                blob = synthesize_png_filtered(
-                    w, h, lambda x, y, i=i, n=n: (i * 31 + y * 17 + x * 7) % n,
-                    0, il, bits,
-                )
-            else:
-                pal = [
-                    ((7 * j + i) % 256, (11 * j + 3) % 256, (13 * j + 7) % 256)
-                    for j in range(n)
-                ]
-                blob = synthesize_png_filtered(
-                    w, h, lambda x, y, i=i, n=n: (x + 3 * y + i) % n,
-                    3, il, bits, pal,
-                )
-            out.append(blob)
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
     bits_col = (
         F.when(F.col("doc_id") % 3 == 0, 1)
         .when(F.col("doc_id") % 3 == 1, 2)
         .otherwise(4)
     )
-    return png_pixel_stats(media).select(
+    return M.pixel_stats(M.synth_payloads(d, make), decode_png_pixels).select(
         "doc_id", "width", "height",
         bits_col.cast("int").alias("bits"),
         "n_px", "px_sum", "px_min", "px_max",
@@ -5108,33 +5030,24 @@ def k87_jpeg_gray_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     crop path). The general entropy paths the constant fixtures can't
     reach — AC runs, ZRL, mid-block EOB, nontrivial quant tables, DRI
     restart markers — are pinned by a hypothesis/property suite against an
-    independent IDCT (tests). Color JPEG (chroma upsampling, YCbCr) and
-    progressive scans remain the declared external-codec slot. Scale
-    posture matches k81: Arrow-batched per-row codec work inside
-    mapInPandas, payloads never on the driver, stats are decoder output,
-    no extra shuffle."""
-    from pyspark.sql.types import BinaryType
+    independent IDCT (tests). Color JPEG decodes through the same codec
+    (k90 4:4:4, k91 4:2:0); progressive and arithmetic-coded scans remain
+    the declared external-codec slot. Scale posture matches k81:
+    Arrow-batched per-row codec work (ops/multimodal.py pixel_stats with
+    ops/jpeg.py decode_jpeg), payloads never on the driver, stats are
+    decoder output, no shuffle."""
 
-    from marasa_spark.ops.jpeg import jpeg_pixel_stats, synthesize_jpeg_gray
+    from marasa_spark.ops.jpeg import decode_jpeg, synthesize_jpeg_gray
+
+    def make(i: int) -> bytes:
+        return synthesize_jpeg_gray(
+            8 * (1 + i % 4) - i % 5,
+            8 * (1 + i % 3) - i % 7,
+            lambda bx, by: (i * 41 + by * 23 + bx * 11) % 256,
+        )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            w = 8 * (1 + i % 4) - i % 5
-            h = 8 * (1 + i % 3) - i % 7
-            out.append(
-                synthesize_jpeg_gray(
-                    w, h, lambda bx, by, i=i: (i * 41 + by * 23 + bx * 11) % 256
-                )
-            )
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    return jpeg_pixel_stats(media)
+    return M.pixel_stats(M.synth_payloads(d, make), decode_jpeg)
 
 
 # ---------------------------------------------------------------------------
@@ -5179,24 +5092,15 @@ def k88_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (payloads never re-read, never on the driver), and the output is
     window-domain-sized — a 10^6x reduction from sample rows, which is
     what makes downstream SQL over audio features tractable at 100 TB."""
-    from pyspark.sql.types import BinaryType
 
-    from marasa_spark.ops.multimodal import synthesize_wav_pcm, wav_frame_features
+    from marasa_spark.ops.multimodal import synthesize_wav_pcm
+
+    def make(i: int) -> bytes:
+        samples = [((i * 37 + f * 13) % 4096) - 2048 for f in range(200 + i % 101)]
+        return synthesize_wav_pcm(samples, 1, 8000, 16)
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            frames = 200 + i % 101
-            samples = [((i * 37 + f * 13) % 4096) - 2048 for f in range(frames)]
-            out.append(synthesize_wav_pcm(samples, 1, 8000, 16))
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    return wav_frame_features(media)
+    return M.wav_frame_features(M.synth_payloads(d, make))
 
 
 # ---------------------------------------------------------------------------
@@ -5249,34 +5153,23 @@ def k89_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     interlaced/partial-screen frames are the declared ffmpeg slot.
     Scale posture unchanged: Arrow-batched per-row codec work, payloads
     never on the driver, output frames-sized."""
-    from pyspark.sql.types import BinaryType
 
-    from marasa_spark.ops.multimodal import gif_frame_stats, synthesize_gif_animated
+    from marasa_spark.ops.multimodal import synthesize_gif_animated
+
+    def make(i: int) -> bytes:
+        ncol = 4 + i % 13
+        pal = [
+            ((7 * j + i) % 256, (11 * j + 3) % 256, (13 * j + 7) % 256)
+            for j in range(ncol)
+        ]
+        return synthesize_gif_animated(
+            3 + i % 13, 2 + i % 9, 2 + i % 5,
+            lambda x, y, f: (x + 3 * y + 5 * f + i) % ncol,
+            pal,
+        )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            w, h = 3 + i % 13, 2 + i % 9
-            nf, ncol = 2 + i % 5, 4 + i % 13
-            pal = [
-                ((7 * j + i) % 256, (11 * j + 3) % 256, (13 * j + 7) % 256)
-                for j in range(ncol)
-            ]
-            out.append(
-                synthesize_gif_animated(
-                    w, h, nf,
-                    lambda x, y, f, i=i, n=ncol: (x + 3 * y + 5 * f + i) % n,
-                    pal,
-                )
-            )
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    return gif_frame_stats(media, every=2)
+    return M.gif_frame_stats(M.synth_payloads(d, make), every=2)
 
 
 # ---------------------------------------------------------------------------
@@ -5330,38 +5223,26 @@ def k90_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SQL oracle mirrors the conversion with the SAME float64
     expression shape (DOUBLE-cast literals per the house rule — DuckDB
     would otherwise parse 1.402 as DECIMAL and change the arithmetic),
-    so the decoded RGB stats hash-match. What remains the external-codec
-    slot is exactly libjpeg's value-add: chroma-SUBSAMPLED MCU geometry
-    (fractional sampling + upsampling filters) and progressive scans.
-    Scale posture matches k81/k87: Arrow-batched per-row codec work,
-    payloads never on the driver, no extra shuffle."""
-    from pyspark.sql.types import BinaryType
+    so the decoded RGB stats hash-match. k91 adds the 4:2:0 subsampled
+    MCU geometry; filtered chroma upsampling and progressive scans remain
+    the external-codec slot. Scale posture matches k81/k87: Arrow-batched
+    per-row codec work, payloads never on the driver, no shuffle."""
 
-    from marasa_spark.ops.jpeg import jpeg_pixel_stats, synthesize_jpeg_color
+    from marasa_spark.ops.jpeg import decode_jpeg, synthesize_jpeg_color
+
+    def make(i: int) -> bytes:
+        return synthesize_jpeg_color(
+            8 * (1 + i % 3) - i % 5,
+            8 * (1 + i % 2) - i % 7,
+            lambda bx, by: (
+                (i * 41 + by * 23 + bx * 11) % 256,
+                (i * 29 + by * 13 + bx * 7) % 256,
+                (i * 17 + by * 19 + bx * 5) % 256,
+            ),
+        )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            w = 8 * (1 + i % 3) - i % 5
-            h = 8 * (1 + i % 2) - i % 7
-            out.append(
-                synthesize_jpeg_color(
-                    w, h,
-                    lambda bx, by, i=i: (
-                        (i * 41 + by * 23 + bx * 11) % 256,
-                        (i * 29 + by * 13 + bx * 7) % 256,
-                        (i * 17 + by * 19 + bx * 5) % 256,
-                    ),
-                )
-            )
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    return jpeg_pixel_stats(media)
+    return M.pixel_stats(M.synth_payloads(d, make), decode_jpeg)
 
 
 # ---------------------------------------------------------------------------
@@ -5419,38 +5300,27 @@ def k91_jpeg_420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SQL oracle mirrors the integer YCbCr->RGB conversion with the
     same float64 expression shape as k90's.
     Scale posture matches k87/k90: Arrow-batched per-row codec work in
-    jpeg_pixel_stats' mapInPandas, payloads never on the driver, no
-    extra shuffle (parallelism follows the id partitioning; a repartition
+    pixel_stats' mapInPandas, payloads never on the driver, no
+    shuffle (parallelism follows the scan partitions; a repartition
     was tried and REJECTED — on 240 tiny rows the worker round-trips cost
     more than the decode, which rides the decoder's flat-block fast path
     here)."""
-    from pyspark.sql.types import BinaryType
 
-    from marasa_spark.ops.jpeg import jpeg_pixel_stats, synthesize_jpeg_color_420
+    from marasa_spark.ops.jpeg import decode_jpeg, synthesize_jpeg_color_420
+
+    def make(i: int) -> bytes:
+        return synthesize_jpeg_color_420(
+            16 * (1 + i % 2) - i % 5,
+            16 * (1 + i % 3) - i % 7,
+            lambda mx, my: (
+                (i * 41 + my * 23 + mx * 11) % 256,
+                (i * 29 + my * 13 + mx * 7) % 256,
+                (i * 17 + my * 19 + mx * 5) % 256,
+            ),
+        )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            w = 16 * (1 + i % 2) - i % 5
-            h = 16 * (1 + i % 3) - i % 7
-            out.append(
-                synthesize_jpeg_color_420(
-                    w, h,
-                    lambda mx, my, i=i: (
-                        (i * 41 + my * 23 + mx * 11) % 256,
-                        (i * 29 + my * 13 + mx * 7) % 256,
-                        (i * 17 + my * 19 + mx * 5) % 256,
-                    ),
-                )
-            )
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    return jpeg_pixel_stats(media)
+    return M.pixel_stats(M.synth_payloads(d, make), decode_jpeg)
 
 
 # ---------------------------------------------------------------------------
@@ -5529,76 +5399,37 @@ def k92_wav_g711_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     including the XOR-0x55 A-law toggle spelled as arithmetic bit flips.
     Scale posture matches k85: Arrow-batched per-row codec work, payloads
     never on the driver, no extra shuffle."""
-    from pyspark.sql.types import BinaryType, IntegerType, LongType, StructField, StructType
+
+    import struct
 
     from marasa_spark.ops.multimodal import decode_wav_samples, synthesize_wav_g711
 
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            ch = 1 + i % 2
-            frames = 60 + i % 83
-            codes = [
-                (i * 31 + f * 7 + c * 3) % 256
-                for f in range(frames)
-                for c in range(ch)
-            ]
-            out.append(
-                synthesize_wav_g711(codes, ch, 8000, "alaw" if i % 2 else "ulaw")
-            )
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("channels", IntegerType()),
-            StructField("fmt", IntegerType()),
-            StructField("n_samples", LongType()),
-            StructField("sample_sum", LongType()),
-            StructField("sample_min", IntegerType()),
-            StructField("sample_max", IntegerType()),
-            StructField("duration_us", LongType()),
+    def make(i: int) -> bytes:
+        ch = 1 + i % 2
+        codes = [
+            (i * 31 + f * 7 + c * 3) % 256
+            for f in range(60 + i % 83)
+            for c in range(ch)
         ]
+        return synthesize_wav_g711(codes, ch, 8000, "alaw" if i % 2 else "ulaw")
+
+    def rows(i: int, b: bytes):
+        ch, rate, _bits, samples = decode_wav_samples(b)
+        # format tag from the container (fmt chunk starts at 20 in these
+        # fixtures: RIFF(12) + 'fmt '(4) + size(4))
+        fmt_tag = struct.unpack("<H", b[20:22])[0]
+        yield (
+            i, ch, fmt_tag, len(samples), sum(samples), min(samples),
+            max(samples), len(samples) // ch * 1_000_000 // rate,
+        )
+
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
+    return M.map_payloads(
+        M.synth_payloads(d, make),
+        "doc_id long, channels int, fmt int, n_samples long, sample_sum long, "
+        "sample_min int, sample_max int, duration_us long",
+        rows,
     )
-
-    def stats(batches):
-        import struct as _struct
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                blob = bytes(payload)
-                ch, rate, bits, samples = decode_wav_samples(blob)
-                # format tag from the container (fmt chunk starts at 20 in
-                # these fixtures: RIFF(12) + 'fmt '(4) + size(4))
-                fmt_tag = _struct.unpack("<H", blob[20:22])[0]
-                frames = len(samples) // ch
-                rows.append(
-                    (
-                        int(doc_id),
-                        ch,
-                        fmt_tag,
-                        len(samples),
-                        sum(samples),
-                        min(samples),
-                        max(samples),
-                        frames * 1_000_000 // rate,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "channels", "fmt", "n_samples",
-                    "sample_sum", "sample_min", "sample_max", "duration_us",
-                ],
-            )
-
-    return media.mapInPandas(stats, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -5650,72 +5481,42 @@ def k93_mp4_box_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the filter a media pipeline runs before paying for it.
     Scale posture matches k41/k85: per-row header work, payloads never on
     the driver, no extra shuffle."""
-    from pyspark.sql.types import BinaryType, IntegerType, LongType, StringType, StructField, StructType
 
     from marasa_spark.ops.multimodal import parse_mp4_boxes, synthesize_mp4
 
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            brand = b"isom" if i % 2 == 0 else b"mp42"
-            timescale = 1000 * (1 + i % 3)
-            duration = 900 * (i % 50 + 10)
-            n_tracks = 1 + i % 3
-            tracks = [
-                (
-                    b"vide" if t == 0 else b"soun",
-                    t + 1,
-                    30000 if t == 0 else 48000,
-                    100 + (i * 7 + t * 13) % 200,
-                )
-                for t in range(n_tracks)
-            ]
-            out.append(synthesize_mp4(brand, timescale, duration, tracks))
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("brand", StringType()),
-            StructField("duration_ms", LongType()),
-            StructField("n_tracks", IntegerType()),
-            StructField("n_video", IntegerType()),
-            StructField("n_audio", IntegerType()),
-            StructField("total_samples", LongType()),
-        ]
-    )
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = parse_mp4_boxes(bytes(payload))
-                vids = sum(1 for t in m["tracks"] if t["handler"] == "vide")
-                rows.append(
-                    (
-                        int(doc_id),
-                        m["brand"],
-                        m["duration"] * 1000 // m["timescale"],
-                        len(m["tracks"]),
-                        vids,
-                        len(m["tracks"]) - vids,
-                        sum(t["n_samples"] for t in m["tracks"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "brand", "duration_ms", "n_tracks",
-                    "n_video", "n_audio", "total_samples",
-                ],
+    def make(i: int) -> bytes:
+        tracks = [
+            (
+                b"vide" if t == 0 else b"soun",
+                t + 1,
+                30000 if t == 0 else 48000,
+                100 + (i * 7 + t * 13) % 200,
             )
+            for t in range(1 + i % 3)
+        ]
+        return synthesize_mp4(
+            b"isom" if i % 2 == 0 else b"mp42",
+            1000 * (1 + i % 3),
+            900 * (i % 50 + 10),
+            tracks,
+        )
 
-    return media.mapInPandas(stats, schema)
+    def rows(i: int, b: bytes):
+        m = parse_mp4_boxes(b)
+        vids = sum(1 for t in m["tracks"] if t["handler"] == "vide")
+        yield (
+            i, m["brand"], m["duration"] * 1000 // m["timescale"],
+            len(m["tracks"]), vids, len(m["tracks"]) - vids,
+            sum(t["n_samples"] for t in m["tracks"]),
+        )
+
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    return M.map_payloads(
+        M.synth_payloads(d, make),
+        "doc_id long, brand string, duration_ms long, n_tracks int, "
+        "n_video int, n_audio int, total_samples long",
+        rows,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5773,13 +5574,8 @@ def k94_wav_float24_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic only. Scale posture matches k85/k92: Arrow-batched per-row
     codec work inside mapInPandas, payload bytes never on the driver, no
     extra shuffle."""
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+
+    import struct
 
     from marasa_spark.ops.multimodal import (
         decode_wav_samples,
@@ -5787,85 +5583,41 @@ def k94_wav_float24_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_wav_pcm,
     )
 
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 360)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            ch = 1 + i % 2
-            frames = 40 + i % 83
-            rate = 8000 * (1 + i % 3)
-            vs = [
-                ((i * 37 + f * 13 + c * 5) % 65536) - 32768
-                for f in range(frames)
-                for c in range(ch)
-            ]
-            mode = i % 3
-            if mode == 0:
-                out.append(synthesize_wav_pcm([v * 256 for v in vs], ch, rate, 24))
-            else:
-                out.append(
-                    synthesize_wav_float(
-                        [v / 256.0 for v in vs], ch, rate, 32 if mode == 1 else 64
-                    )
-                )
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("channels", IntegerType()),
-            StructField("fmt", IntegerType()),
-            StructField("bits", IntegerType()),
-            StructField("n_samples", LongType()),
-            StructField("sum_q8", LongType()),
-            StructField("min_q8", LongType()),
-            StructField("max_q8", LongType()),
-            StructField("duration_us", LongType()),
+    def make(i: int) -> bytes:
+        ch = 1 + i % 2
+        rate = 8000 * (1 + i % 3)
+        vs = [
+            ((i * 37 + f * 13 + c * 5) % 65536) - 32768
+            for f in range(40 + i % 83)
+            for c in range(ch)
         ]
+        if i % 3 == 0:
+            return synthesize_wav_pcm([v * 256 for v in vs], ch, rate, 24)
+        return synthesize_wav_float(
+            [v / 256.0 for v in vs], ch, rate, 32 if i % 3 == 1 else 64
+        )
+
+    def rows(i: int, b: bytes):
+        ch, rate, bits, samples = decode_wav_samples(b)
+        fmt_tag = struct.unpack("<H", b[20:22])[0]
+        if fmt_tag == 3:
+            # exact: each s is v/256 with v integral, so s*65536 is the
+            # integer 256*v represented exactly in float64
+            q8 = [int(s * 65536) for s in samples]
+        else:
+            q8 = samples  # stored 24-bit value IS 256*v
+        yield (
+            i, ch, fmt_tag, bits, len(q8), sum(q8), min(q8), max(q8),
+            len(samples) // ch * 1_000_000 // rate,
+        )
+
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 360)
+    return M.map_payloads(
+        M.synth_payloads(d, make),
+        "doc_id long, channels int, fmt int, bits int, n_samples long, "
+        "sum_q8 long, min_q8 long, max_q8 long, duration_us long",
+        rows,
     )
-
-    def stats(batches):
-        import struct as _struct
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                blob = bytes(payload)
-                ch, rate, bits, samples = decode_wav_samples(blob)
-                fmt_tag = _struct.unpack("<H", blob[20:22])[0]
-                if fmt_tag == 3:
-                    # exact: each s is v/256 with v integral, so s*65536
-                    # is the integer 256*v represented exactly in float64
-                    q8 = [int(s * 65536) for s in samples]
-                else:
-                    q8 = list(samples)  # stored 24-bit value IS 256*v
-                frames = len(samples) // ch
-                rows.append(
-                    (
-                        int(doc_id),
-                        ch,
-                        fmt_tag,
-                        bits,
-                        len(q8),
-                        sum(q8),
-                        min(q8),
-                        max(q8),
-                        frames * 1_000_000 // rate,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "channels", "fmt", "bits", "n_samples",
-                    "sum_q8", "min_q8", "max_q8", "duration_us",
-                ],
-            )
-
-    return media.mapInPandas(stats, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -5927,101 +5679,49 @@ def k95_bmp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pad). Scale posture matches k81: Arrow-batched per-row codec work
     inside mapInPandas, payloads never on the driver, no extra
     shuffle."""
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     from marasa_spark.ops.multimodal import decode_bmp_pixels, synthesize_bmp
 
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-
-    @F.pandas_udf(BinaryType())
-    def synth(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for doc_id in doc_ids:
-            i = int(doc_id)
-            w, h, mode = 3 + i % 17, 2 + i % 11, i % 4
-            if mode < 2:
-                pixels = [
-                    (
-                        (i * 31 + y * 17 + x * 7) % 256,
-                        (i * 13 + y * 5 + x * 11) % 256,
-                        (i * 7 + y * 3 + x * 13) % 256,
-                    )
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                out.append(
-                    synthesize_bmp(w, h, pixels, bpp=24, top_down=(mode == 1))
+    def make(i: int) -> bytes:
+        w, h, mode = 3 + i % 17, 2 + i % 11, i % 4
+        if mode < 2:
+            pixels = [
+                (
+                    (i * 31 + y * 17 + x * 7) % 256,
+                    (i * 13 + y * 5 + x * 11) % 256,
+                    (i * 7 + y * 3 + x * 13) % 256,
                 )
-            else:
-                palette = [
-                    ((7 * p + i) % 256, (11 * p + 3) % 256, (13 * p + 7) % 256)
-                    for p in range(16)
-                ]
-                if mode == 2:
-                    indices = [
-                        (x + 3 * y + i) % 16 for y in range(h) for x in range(w)
-                    ]
-                else:  # mode 3: x-repeating pattern → real RLE runs
-                    indices = [
-                        (x // 3 + 3 * y + i) % 16
-                        for y in range(h)
-                        for x in range(w)
-                    ]
-                out.append(
-                    synthesize_bmp(
-                        w, h, [], bpp=8, palette=palette, indices=indices,
-                        rle8=(mode == 3),
-                    )
-                )
-        return pd.Series(out)
-
-    media = d.select("doc_id", synth("doc_id").alias("payload"))
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("mode", IntegerType()),
-            StructField("n_px", LongType()),
-            StructField("sum_r", LongType()),
-            StructField("sum_g", LongType()),
-            StructField("sum_b", LongType()),
+                for y in range(h)
+                for x in range(w)
+            ]
+            return synthesize_bmp(w, h, pixels, bpp=24, top_down=(mode == 1))
+        palette = [
+            ((7 * p + i) % 256, (11 * p + 3) % 256, (13 * p + 7) % 256)
+            for p in range(16)
         ]
+        # mode 3's x-repeating pattern makes real RLE runs
+        step = 1 if mode == 2 else 3
+        indices = [(x // step + 3 * y + i) % 16 for y in range(h) for x in range(w)]
+        return synthesize_bmp(
+            w, h, [], bpp=8, palette=palette, indices=indices, rle8=(mode == 3)
+        )
+
+    def rows(i: int, b: bytes):
+        w, h, pixels = decode_bmp_pixels(b)
+        yield (
+            i, w, h, i % 4, len(pixels),
+            sum(p[0] for p in pixels),
+            sum(p[1] for p in pixels),
+            sum(p[2] for p in pixels),
+        )
+
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    return M.map_payloads(
+        M.synth_payloads(d, make),
+        "doc_id long, width int, height int, mode int, n_px long, "
+        "sum_r long, sum_g long, sum_b long",
+        rows,
     )
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                i = int(doc_id)
-                w, h, pixels = decode_bmp_pixels(bytes(payload))
-                rows.append(
-                    (
-                        i,
-                        w,
-                        h,
-                        i % 4,
-                        len(pixels),
-                        sum(p[0] for p in pixels),
-                        sum(p[1] for p in pixels),
-                        sum(p[2] for p in pixels),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "mode",
-                    "n_px", "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    return media.mapInPandas(stats, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -1951,7 +1951,7 @@ def m40_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (an edge per distinct trading pair from orders ⋈ lineitem;
     customers at 2k, suppliers at 2k+1 keep the id spaces disjoint) — the
     canonical iterative-algebra workload the engine had not yet carried
-    beyond min-label components (k49). The Spark side is
+    beyond connected components (k25/k49). The Spark side is
     ops.graph.pagerank: edge list checkpointed once, two shuffles per
     iteration, ranks re-rounded to 8 decimals per round so the DuckDB
     unrolled-CTE oracle folds bit-identical inputs; the oracle IS the same

@@ -12,11 +12,13 @@ Two audiences:
 Correctness-critical runtime confs (all dynamic SQLConf, safe to set on a
 live session):
 
-* ``spark.sql.legacy.parquet.nanosAsLong`` — the ``events.ts`` column is
-  Parquet INT64 TIMESTAMP(NANOS); Spark 4 refuses it outright without this
-  flag (SURVEY.md §1.4). With it, the column arrives as a raw nanosecond
-  LongType which :mod:`marasa_spark.catalog` converts to a µs-truncated
-  timestamp exactly matching DuckDB's native read.
+* ``spark.sql.legacy.parquet.nanosAsLong`` — the ``events.ts`` column has
+  shipped as Parquet INT64 TIMESTAMP(NANOS), which Spark 4 refuses outright
+  without this flag (SURVEY.md §1.4). With it, the column arrives as a raw
+  nanosecond LongType which :mod:`marasa_spark.catalog` converts to a
+  µs-truncated timestamp exactly matching DuckDB's native read. The
+  current testdata ships TIMESTAMP(MICROS, isAdjustedToUTC=false), which
+  needs no flag; ``load_table`` handles both encodings.
 * ``spark.sql.session.timeZone=UTC`` — oracle comparisons collect Spark
   timestamps in session TZ; DuckDB is UTC-naive.
 * ``spark.sql.shuffle.partitions`` — 200 default over-parallelizes the test

@@ -1,11 +1,11 @@
-"""Large-star/small-star connected components (k49) and MinHash Jaccard
-estimation (k50) behavior pins.
+"""Large-star/small-star connected components (k25/k31/k47/k49) and
+MinHash Jaccard estimation (k50) behavior pins.
 
-The star algorithm must produce labels IDENTICAL to min-label propagation
-on any input — both assign every node its component minimum — so the
-equivalence check runs on the real near-dup graph AND on synthetic shapes
-chosen to stress convergence (a long path is the worst case for label
-propagation and the motivating case for star rounds).
+The star algorithm must label every node with its component minimum on
+any input, so its labels are checked against a union-find reference on
+the real near-dup graph AND on synthetic shapes chosen to stress
+convergence (a long path is the worst case for label propagation and the
+motivating case for star rounds).
 """
 
 from __future__ import annotations
@@ -45,6 +45,9 @@ SYNTHETIC_GRAPHS = {
     "two_components": [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10)],
     "star_hub_max": [(100, i) for i in range(5)],  # hub has the LARGEST id
     "dup_edges_both_orientations": [(1, 2), (2, 1), (1, 2), (2, 3)],
+    # two chains and an isolated pair: multi-hop chains are the case a
+    # single propagation round misses
+    "chains_and_pair": [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
 }
 
 
@@ -59,17 +62,15 @@ def test_cc_star_matches_union_find(spark, name):
     assert got == _union_find_labels(edges)
 
 
-def test_cc_star_equals_label_propagation_on_real_pairs(spark, sf_dir):
+def test_cc_star_matches_union_find_on_real_pairs(spark, sf_dir):
     pairs = D.jaccard_pairs(
         load_table(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.9
     )
     star = {
         r["node"]: r["cluster"] for r in D.connected_components_star(pairs).collect()
     }
-    prop = {
-        r["node"]: r["cluster"] for r in D.connected_components(pairs).collect()
-    }
-    assert star == prop
+    edges = [(r["doc_a"], r["doc_b"]) for r in pairs.collect()]
+    assert star == _union_find_labels(edges)
     assert len(star) > 0  # the seeded testdata contains near-dup clusters
 
 
@@ -81,6 +82,14 @@ def test_path_converges_in_log_rounds(spark):
     got = D.connected_components_star(df, max_iters=10).collect()
     assert {r["cluster"] for r in got} == {0}
     assert len(got) == 65
+
+
+def test_cc_star_raises_without_fixpoint(spark):
+    """Reaching max_iters before the edge set stops changing raises: a
+    capped run never returns a partial labelling as if it were final."""
+    df = spark.createDataFrame(SYNTHETIC_GRAPHS["path64"], "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        D.connected_components_star(df, max_iters=1)
 
 
 def test_minhash_estimate_error_bound(spark, sf_dir):

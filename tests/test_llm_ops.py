@@ -6,7 +6,6 @@ rolling-hash reference, multimodal decode plumbing, approx-agg tolerance.
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -318,20 +317,6 @@ def test_kmeans_ivf_in_cluster_exactness(spark, sf_dir):
         assert got_ids == want_ids, f"q={q}: {got_ids} != {want_ids}"
 
 
-def test_connected_components_reference(spark):
-    """Min-label propagation on a known graph: two chains and an isolated
-    pair — every node must get its component's minimum id, including
-    through multi-hop chains (the case a single propagation round misses)."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
-        "doc_a long, doc_b long",
-    )
-    got = {
-        r["node"]: r["cluster"] for r in D.connected_components(pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-
-
 def test_rolling_hash_reference(spark):
     texts = ["hello world", "a", "join filter window group"]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, text string")
@@ -364,12 +349,6 @@ def test_multimodal_decode_plumbing(spark, sf_dir):
         assert r["n_bytes"] == len(text.encode())
         assert r["checksum"] == hashlib.md5(text.encode()).hexdigest()
         assert 0 <= r["width"] < 1920 and 0 <= r["height"] < 1080
-
-    # the real-codec slot is an explicit stub
-    import pytest
-
-    with pytest.raises(Exception, match="NotImplementedError|not available"):
-        M.decode_media(media, real_codec=True).collect()
 
 
 def test_approx_aggs_within_tolerance(spark, sf_dir):
@@ -613,86 +592,32 @@ def test_pq_encode_generic_geometry(spark, sf_dir):
             assert all(r[f"code_{s}"] == r["c_id"] for s in range(8))
 
 
-def test_real_codec_decodes_png_end_to_end(spark, sf_dir):
-    """decode_media(real_codec=True) now has one WORKING codec: filtered
-    grayscale-8 PNGs decode to their true dimensions through the stdlib
-    reference decoder; non-PNG payloads still raise (the declared slot)."""
-    from pyspark.sql.types import BinaryType
-
-    docs = load_table(spark, sf_dir, "documents").limit(20).select("doc_id")
-
-    @F.pandas_udf(BinaryType())
-    def synth(ids: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                M.synthesize_png_filtered(
-                    4 + int(i) % 29,
-                    3 + int(i) % 17,
-                    lambda x, y, i=int(i): (i * 31 + y * 17 + x * 7) % 256,
-                )
-                for i in ids
-            ]
-        )
-
-    media = docs.select(
-        "doc_id",
-        synth("doc_id").alias("payload"),
-        F.struct(F.lit("image/png").alias("mime"), F.lit(0).alias("declared_len")).alias(
-            "media_meta"
-        ),
-    )
-    rows = {r["doc_id"]: r for r in M.decode_media(media, real_codec=True).collect()}
-    assert rows
-    for did, r in rows.items():
-        assert r["media_type"] == "image/png"
-        assert r["width"] == 4 + did % 29 and r["height"] == 3 + did % 17
-        assert r["n_frames"] == 1
-
-
-def test_real_codec_dispatches_all_three_formats(spark, sf_dir):
-    """decode_media(real_codec=True) now dispatches on the container
-    signature: PNG → pixel decode, baseline grayscale JPEG → entropy
-    decode, WAV PCM → frame count from the decoded samples; anything else
-    still raises (the declared external-codec slot)."""
-    from pyspark.sql.types import BinaryType
-
+def test_decode_media_headers_reads_png_jpeg_wav(spark, sf_dir):
+    """decode_media_headers over real PNG, baseline grayscale JPEG and PCM
+    WAV payloads: PNG IHDR and JPEG SOF dimensions, WAV frame count from
+    the RIFF fmt/data chunks."""
     from marasa_spark.ops.jpeg import synthesize_jpeg_gray
 
-    docs = load_table(spark, sf_dir, "documents").limit(21).select("doc_id")
+    def make(i: int) -> bytes:
+        if i % 3 == 0:
+            return M.synthesize_png_filtered(4 + i % 9, 3 + i % 7, lambda x, y: 7)
+        if i % 3 == 1:
+            return synthesize_jpeg_gray(8 + i % 9, 8 + i % 7, lambda bx, by: 99)
+        return M.synthesize_wav_pcm([0] * (2 * (10 + i % 5)), 2, 8000, 16)
 
-    @F.pandas_udf(BinaryType())
-    def synth(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            if i % 3 == 0:
-                out.append(
-                    M.synthesize_png_filtered(4 + i % 9, 3 + i % 7, lambda x, y: 7)
-                )
-            elif i % 3 == 1:
-                out.append(synthesize_jpeg_gray(8 + i % 9, 8 + i % 7, lambda bx, by: 99))
-            else:
-                out.append(
-                    M.synthesize_wav_pcm([0] * (2 * (10 + i % 5)), 2, 8000, 16)
-                )
-        return pd.Series(out)
-
-    media = docs.select(
-        "doc_id",
-        synth("doc_id").alias("payload"),
-        F.struct(F.lit("x").alias("mime"), F.lit(0).alias("declared_len")).alias(
-            "media_meta"
-        ),
-    )
-    rows = {r["doc_id"]: r for r in M.decode_media(media, real_codec=True).collect()}
-    assert rows
+    docs = load_table(spark, sf_dir, "documents").limit(21)
+    rows = {
+        r["doc_id"]: r
+        for r in M.decode_media_headers(M.synth_payloads(docs, make)).collect()
+    }
+    assert len(rows) == 21
     for did, r in rows.items():
         if did % 3 == 0:
             assert r["media_type"] == "image/png"
-            assert (r["width"], r["height"]) == (4 + did % 9, 3 + did % 7)
+            assert (r["width"], r["height"], r["n_frames"]) == (4 + did % 9, 3 + did % 7, 1)
         elif did % 3 == 1:
             assert r["media_type"] == "image/jpeg"
-            assert (r["width"], r["height"]) == (8 + did % 9, 8 + did % 7)
+            assert (r["width"], r["height"], r["n_frames"]) == (8 + did % 9, 8 + did % 7, 1)
         else:
             assert r["media_type"] == "audio/wav"
             assert r["n_frames"] == 10 + did % 5

@@ -229,9 +229,24 @@ EXCHANGE_BUDGET = {
     # shuffle, double-printed — the RANGE frame adds no movement
     "z56_sql_frontend_q57_shape": 8,
     "z57_sql_frontend_rolling_30d_sum": 2,
-    # k94/k95: scan -> synth pandas_udf -> mapInPandas decode, row-parallel
-    # end to end; k96: split/sequence/slice/explode in one projection —
-    # all three are shuffle-FREE by construction and must stay that way
+    # the media ops (k41, k81, k83-k95): scan -> synth_payloads pandas_udf
+    # -> map_payloads mapInPandas decode, row-parallel end to end (measured
+    # 0 at sf0.001/0.01/0.1 for all 15); k96: split/sequence/slice/explode
+    # in one projection — all shuffle-FREE by construction and must stay
+    # that way
+    "k41_media_header_decode": 0,
+    "k81_png_pixel_stats": 0,
+    "k83_png_truecolor_interlaced": 0,
+    "k84_png_colortype_matrix": 0,
+    "k85_wav_sample_stats": 0,
+    "k86_png_subbyte_depths": 0,
+    "k87_jpeg_gray_decode": 0,
+    "k88_audio_frame_features": 0,
+    "k89_gif_frame_sample": 0,
+    "k90_jpeg_color_decode": 0,
+    "k91_jpeg_420_decode": 0,
+    "k92_wav_g711_stats": 0,
+    "k93_mp4_box_stats": 0,
     "k94_wav_float24_stats": 0,
     "k95_bmp_pixel_stats": 0,
     "k96_chunk_overlap": 0,
